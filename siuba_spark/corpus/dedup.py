@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..plans.pipe import verb
+from ..plans.pipe import verb, wrap_table
 from ..plans.tbl import SparkTbl
 from .text import tokens_col
 
@@ -391,16 +391,21 @@ def drop_near_dups(tbl: SparkTbl, pairs, id_col: str = "doc_id",
     pairs from minhash_near_dups / simhash_pairs / fuzzy_pairs /
     jaccard_pairs all plug in.
 
-    Cost: the clustering rounds plus ONE anti-join of the drop-id table
-    (only ids that appear in pairs) against the corpus.  The drop list
-    scales with the corpus DUP RATE, not a constant — a heavy-dup crawl
-    can make it far too big to broadcast — so the join strategy is left
-    to AQE: it broadcasts when the runtime size is actually small and
-    falls back to a shuffled hash join when it isn't, instead of a forced
-    broadcast() OOMing the driver at 100 TB."""
+    Cost: the clustering plus ONE anti-join of the drop-id table (only
+    ids that appear in pairs) against the corpus.  When the components
+    came from ``dedup_clusters``' driver union-find, the drop list is
+    bounded by construction (at most two ids per pair, ``driver_cap``
+    pairs) and is broadcast, so the corpus side streams without a
+    shuffle; Spark cannot size that driver-built table itself and would
+    otherwise plan a shuffle join on both sides.  Above the cap the drop
+    list scales with the corpus DUP RATE — a heavy-dup crawl can make it
+    far too big to broadcast — so the join strategy is left to AQE: it
+    broadcasts when the runtime size is actually small and falls back to
+    a shuffled hash join when it isn't, instead of a forced broadcast()
+    OOMing the driver at 100 TB."""
     if keep not in ("min", "max"):
         raise ValueError("keep must be 'min' or 'max'")
-    clusters = dedup_clusters(pairs).df
+    clusters, bounded = _components(wrap_table(pairs).df)
     if keep == "min":
         # the propagated cluster label IS the component's minimum id
         # (min-label propagation converges to exactly that), so the
@@ -416,9 +421,18 @@ def drop_near_dups(tbl: SparkTbl, pairs, id_col: str = "doc_id",
         drop = (clusters.join(canon, "cluster")
                 .filter(F.col("id") != F.col("__keep"))
                 .select(F.col("id").alias("__drop_id")))
+    if bounded:
+        drop = F.broadcast(drop)
     out = (tbl.df.join(drop,
                        tbl.df[id_col] == drop["__drop_id"], "left_anti"))
     return tbl.evolve(df=out)
+
+
+def _free_checkpoint(df):
+    """Drop the blocks of a ``localCheckpoint``-ed DataFrame that nothing
+    reads any more.  ``DataFrame.unpersist()`` cannot: the checkpoint is
+    an RDD behind a ``LogicalRDD``, not a cache-manager entry."""
+    df._jdf.logicalPlan().rdd().unpersist(False)
 
 
 def _driver_union_find(rows, spark, id_type):
@@ -456,7 +470,7 @@ def _driver_union_find(rows, spark, id_type):
     schema = T.StructType([T.StructField("id", id_type),
                            T.StructField("cluster", id_type)])
     data = [(x, find(x)) for x in parent]
-    return SparkTbl(spark.createDataFrame(data, schema))
+    return spark.createDataFrame(data, schema)
 
 
 @verb
@@ -477,22 +491,32 @@ def dedup_clusters(pairs, id_a: str = "id_a", id_b: str = "id_b",
     (map-side combine on the min-agg) plus a convergence count; labels
     table stays (n_nodes x 2) — never materializes paths.
 
-    Scale gate (r12): the pair table is persisted and counted first; at
-    or under ``driver_cap`` pairs (default 100k ≈ a few MB — the same
-    bounded-collect discipline as pivot specs and the BPE histogram cut)
-    the components are solved by a driver-side union-find in one collect,
-    value-identical to the loop.  Near-dup pair graphs can be
-    chain-shaped — the sf0.1 semantic pair table (~1k pairs) needed 11
-    propagation rounds even with pointer jumping, and a distributed
-    round costs two joins plus an eager checkpoint REGARDLESS of size —
-    while the collect cost is bounded by the cap.  Above the cap (dup
-    pair counts scale with corpus x dup rate, the 100 TB case) the
-    distributed loop below runs unchanged; NULL or mixed-type ids also
-    fall through to it.  ``driver_cap=0`` forces the distributed path.
+    Scale gate (r12): ONE bounded driver action first — at most
+    ``driver_cap + 1`` pairs are collected (default cap 100k ≈ a few
+    MB — the same bounded-collect discipline as pivot specs), so the
+    driver never holds more than the cap however large the pair table
+    is.  At or under the cap the components are
+    solved by a driver-side union-find over those rows, value-identical
+    to the loop.  Near-dup pair graphs can be chain-shaped — the sf0.1
+    semantic pair table (~1k pairs) needed 11 propagation rounds even
+    with pointer jumping, and a distributed round costs two joins plus
+    an eager checkpoint REGARDLESS of size — while the collect cost is
+    bounded by the cap.  Above the cap (dup pair counts scale with
+    corpus x dup rate, the 100 TB case) the distributed loop below runs
+    unchanged, recomputing the pair plan once more; NULL or mixed-type
+    ids also fall through to it.  ``driver_cap=0`` forces the
+    distributed path.
     """
-    from ..plans.pipe import wrap_table
+    labels, _bounded = _components(wrap_table(pairs).df, id_a, id_b,
+                                   max_iter, driver_cap)
+    return SparkTbl(labels)
 
-    pdf = wrap_table(pairs).df
+
+def _components(pdf, id_a="id_a", id_b="id_b", max_iter=20,
+                driver_cap=100_000):
+    """``dedup_clusters``' body: returns ``(labels, bounded)``, where
+    ``bounded`` is True when the driver union-find produced ``labels``
+    (so it holds at most ``2 * driver_cap`` rows)."""
     a, b = F.col(id_a), F.col(id_b)
     # the union-find gate requires Python `<` ordering to agree with
     # Spark's F.min/F.least on the key type — true for integral,
@@ -507,16 +531,12 @@ def dedup_clusters(pairs, id_a: str = "id_a", id_b: str = "id_b",
     if (driver_cap
             and pdf.schema[id_a].dataType == pdf.schema[id_b].dataType
             and isinstance(pdf.schema[id_a].dataType, _SAFE_KEY)):
-        pdf = pdf.persist()
-        # the count materializes the expensive pair upstream exactly once
-        # (the distributed path below does the same via the edges
-        # checkpoint); above the cap the cached rows feed that checkpoint
-        if pdf.count() <= driver_cap:
-            rows = pdf.select(a, b).collect()
-            if all(r[0] is not None and r[1] is not None for r in rows):
-                pdf.unpersist()
-                return _driver_union_find(
-                    rows, pdf.sparkSession, pdf.schema[id_a].dataType)
+        rows = pdf.select(a, b).limit(driver_cap + 1).collect()
+        if (len(rows) <= driver_cap
+                and all(r[0] is not None and r[1] is not None
+                        for r in rows)):
+            return _driver_union_find(
+                rows, pdf.sparkSession, pdf.schema[id_a].dataType), True
     # undirected edge list, both directions.  The union scans the pair
     # plan twice, and pair generation is the expensive upstream (LSH
     # band join / intra-cell cosine) — persist it so the checkpoint job
@@ -546,6 +566,7 @@ def dedup_clusters(pairs, id_a: str = "id_a", id_b: str = "id_b",
               .agg(F.least(F.col("src"), F.min("dst")).alias("lbl"))
               .select(F.col("src").alias("id"), F.col("lbl"))
               .localCheckpoint())
+    held = labels               # the checkpoint the current labels read
 
     for _i in range(1, max_iter):
         neigh = (edges.join(labels.withColumnRenamed("id", "dst")
@@ -572,15 +593,17 @@ def dedup_clusters(pairs, id_a: str = "id_a", id_b: str = "id_b",
                               (new_lbl < F.col("lbl")).alias("__chg"))
                       .localCheckpoint())
         changed = new_labels.filter(F.col("__chg")).count()
+        # the eager checkpoint truncated new_labels' lineage, so nothing
+        # reads the superseded round any more
+        _free_checkpoint(held)
+        held = new_labels
         labels = new_labels.drop("__chg")
         if changed == 0:
             break
-    # superseded round checkpoints (and the final one, once the caller
-    # drops the result) are reclaimed by Spark's ContextCleaner when
-    # their driver references are GC'd — DataFrame.unpersist() cannot
-    # free a localCheckpoint (it is an RDD-level cache, not a plan-cache
-    # entry), so eager cleanup is deliberately not attempted here
-    return SparkTbl(labels.select(F.col("id"), F.col("lbl").alias("cluster")))
+    _free_checkpoint(edges)
+    # the final round's checkpoint backs the result; Spark's
+    # ContextCleaner reclaims it once the caller drops the result
+    return labels.select(F.col("id"), F.col("lbl").alias("cluster")), False
 
 
 @verb
@@ -737,13 +760,16 @@ def exact_dedup_incremental(tbl: SparkTbl, store=None, cols=("text",),
         return SparkTbl(newd), SparkTbl(newd.select(*cols, id_col, "n_dups"))
     store_df = store.df if isinstance(store, SparkTbl) else store
     # the snapshot's self-dedup aggregate feeds both merge branches plus
-    # the kept-rows semi join — truncate its lineage once (snapshot-
-    # sized, NOT store-sized) so the agg shuffle runs once, not three
-    # times.  The STORE is deliberately never cached: its two branch
-    # scans are pushdown-pruned IO (isnull/isnotnull reach the parquet
-    # scan) and, bucketed, exchange-free — cheaper than materializing a
-    # corpus-sized table per merge.
-    newd = newd.localCheckpoint()
+    # the kept-rows semi join — persist it (snapshot-sized, NOT
+    # store-sized) so the agg shuffle runs once, not three times.  The
+    # cache is pinned to both returned tables, so the session's pin
+    # discipline (release after the consuming action, or
+    # release_all_pins) frees it; a localCheckpoint here could not be
+    # released that way.  The STORE is deliberately never cached: its
+    # two branch scans are pushdown-pruned IO (isnull/isnotnull reach the
+    # parquet scan) and, bucketed, exchange-free — cheaper than
+    # materializing a corpus-sized table per merge.
+    newd = newd.persist()
     new_keys = newd.select(*cols, id_col, "n_dups")
 
     any_null = None
@@ -777,7 +803,7 @@ def exact_dedup_incremental(tbl: SparkTbl, store=None, cols=("text",),
                           lambda a, b: a.eqNullSafe(b))
     merged = m_nn.unionByName(m_nul)
     kept = newd.join(f_nn.unionByName(f_nul), id_col, "left_semi")
-    return SparkTbl(kept), SparkTbl(merged)
+    return SparkTbl(kept).pin(newd), SparkTbl(merged).pin(newd)
 
 
 def minhash_near_dups_incremental(

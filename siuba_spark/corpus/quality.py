@@ -644,7 +644,9 @@ def token_budget_sample(tbl: SparkTbl, *strata, budget: int,
                            .orderBy("__tb_b")
                            .rowsBetween(Window.unboundedPreceding, -1)),
                            F.lit(0)).alias("__tb_off")))
-        cond = F.col("__tb_b") == F.col("__tbb2")
+        # null-safe: a NULL id hashes to a NULL bucket, which holds the
+        # rows the single window sorts first (NULLS FIRST on the hash)
+        cond = F.col("__tb_b").eqNullSafe(F.col("__tbb2"))
         for k in keys:
             cond = cond & F.col(k).eqNullSafe(F.col(f"__tbk_{k}"))
         df = (work.withColumn("__tb_run", run_in)
@@ -969,21 +971,20 @@ def lm_logprob(tbl: SparkTbl, profile, col: str = "text",
     counts need NO joins (r13): the j-gram ending at position p-1 is
     position p-1's own suffix gram, so its count is a ``lag`` over the
     doc — one Window on ``id_col`` whose exchange the per-doc mean
-    aggregate reuses.  No driver state beyond the 1-row order probe."""
-    from pyspark.sql.functions import broadcast
-
+    aggregate reuses.  No driver state beyond the 1-row order probe,
+    which also returns the Laplace totals."""
     prof = wrap_tbl(profile).df
     if "kind" in prof.columns:  # r11 bigram profile schema
         prof = prof.select(
             "gram",
             F.when(F.col("kind") == "uni", F.lit(1))
             .otherwise(F.lit(2)).alias("order"), "cnt")
-    # r12: the profile plan is consumed order + 2 times below (the
-    # order probe, the totals aggregate, and one slice per suffix-gram
-    # join) — when it is an UNMATERIALIZED training aggregate, every
-    # consumer re-runs the whole train shuffle (measured: the order-3
-    # split recomputed it 7x per query).  persist() makes the first
-    # consumer (the eager order probe, next line) materialize it once;
+    # r12: the profile plan is consumed order + 1 times below (the
+    # order-and-totals probe and one slice per suffix-gram join) — when
+    # it is an UNMATERIALIZED training aggregate, every consumer re-runs
+    # the whole train shuffle (measured: the order-3 split recomputed
+    # it 7x per query).  persist() makes the first consumer (the eager
+    # probe, next lines) materialize it once;
     # the profile is vocab-sized by construction (Heaps-bounded, pruned
     # by min_count), so the cache is the right size at any corpus scale,
     # and the pin is released by the session's normal pin discipline.
@@ -994,7 +995,14 @@ def lm_logprob(tbl: SparkTbl, profile, col: str = "text",
     # the cache until session end.
     prof = prof.select("*").persist()
     try:
-        trained = prof.agg(F.max("order")).collect()[0][0]
+        # the order probe also returns the Laplace totals (token total and
+        # vocabulary size of the unigram slice): they enter the score as
+        # literals, with no second aggregate or cross join in the plan
+        uni = F.col("order") == 1
+        trained, tot, vocab = prof.agg(
+            F.max("order"),
+            F.sum(F.when(uni, F.col("cnt").cast("long"))),
+            F.count(F.when(uni, F.lit(1)))).collect()[0]
         if trained is None:
             raise ValueError("empty profile: cannot infer order")
         if order is None:
@@ -1030,8 +1038,6 @@ def lm_logprob(tbl: SparkTbl, profile, col: str = "text",
         k: (prof.filter(F.col("order") == k)
             .select("gram", F.col("cnt").cast("long").alias(f"__c{k}")))
         for k in range(1, order + 1)}
-    consts = counts[1].agg(F.sum("__c1").alias("__tot"),
-                           F.count(F.lit(1)).alias("__v"))
 
     toks = F.filter(tokens_col(F.col(col)), lambda x: F.length(x) > 0)
     ex = (tbl.df.select(F.col(id_col).alias("__id"), toks.alias("__toks"))
@@ -1066,10 +1072,9 @@ def lm_logprob(tbl: SparkTbl, profile, col: str = "text",
         for jj in range(1, order):
             j = j.withColumn(f"__d{jj}",
                              F.lag(F.col(f"__c{jj}")).over(wlag))
-    j = j.crossJoin(broadcast(consts))
 
     lap = ((F.coalesce(F.col("__c1"), F.lit(0)) + 1)
-           / (F.col("__tot") + F.col("__v")))
+           / (F.lit(tot).cast("long") + F.lit(vocab).cast("long")))
     mix = lap
     mixes = [lap]
     for k in range(2, order + 1):

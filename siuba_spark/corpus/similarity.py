@@ -304,6 +304,38 @@ def cosine_near_dups(tbl: SparkTbl, threshold: float = 0.9,
     return SparkTbl(out)
 
 
+def _assign_cells(df, cents, vec_col):
+    """Assign every row of ``df`` to the nearest of the literal centroids
+    ``cents`` — the one assignment plan behind the coarse quantizer's
+    corpus pass and Lloyd iterations, ``semantic_dedup_incremental``'s
+    fixed-centroid snapshots and ``assign_clusters``.  Returns ``df``'s
+    columns plus ``__vd`` (the vector cast to array<double>) and
+    ``__cell``: the argmin of the squared euclidean distances, first
+    index on ties, NULL where no distance is defined (a NULL vector, a
+    NULL element, a dimension mismatch, no centroids).
+
+    ONE pass per row over a broadcast 1-row centroid table (the
+    packed-planes pattern): no explode of the corpus, no shuffle.  Each
+    step is its own projection, so the vector is cast once and the
+    distance array is folded once.  The cell leaves through a
+    one-element ``explode`` on purpose: a consumer joining on ``__cell``
+    makes the optimizer infer ``isnotnull(__cell)``, and pushed through
+    plain projections that filter re-evaluates the whole argmin inside
+    the broadcast join's condition.  A predicate on a generator's output
+    cannot move below the generator, so it stays a test on the column."""
+    cpk = df.sparkSession.createDataFrame(
+        [(cents,)], "__cents: array<array<double>>")
+    d2 = F.transform(F.col("__cents"), lambda c: F.aggregate(
+        F.zip_with(F.col("__vd"), c, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0), lambda acc, x: acc + x))
+    cell = (F.array_position("__d2", F.array_min("__d2")) - 1).cast("int")
+    return (df.crossJoin(F.broadcast(cpk))
+            .withColumn("__vd", _to_double(F.col(vec_col)))
+            .withColumn("__d2", d2)
+            .select("*", F.explode(F.array(cell)).alias("__cell"))
+            .drop("__cents", "__d2"))
+
+
 def _cells_and_centers(tbl, id_col, vec_col, n_lists, centroids,
                        n_iters, seed, train_limit):
     """Coarse-quantizer training + full-corpus cell assignment — the
@@ -312,24 +344,6 @@ def _cells_and_centers(tbl, id_col, vec_col, n_lists, centroids,
     __nn, __cell); ``centers`` is a [(cell, center_vec)] list (tiny,
     broadcastable).  See ivf_topk's docstring for the three centroids
     modes and their oracle-replayability contracts."""
-    spark = tbl.df.sparkSession
-
-    def _argmin_cell(cents, df=None):
-        """Assignment plan against literal centroids: ONE pass per corpus
-        row over a broadcast 1-row centroid table (the packed-planes
-        pattern) — argmin of the squared euclidean distances, first index
-        wins ties; no explode, no extra shuffle."""
-        cpk = (spark.createDataFrame([(cents,)],
-                                     "__cents: array<array<double>>")
-               .withColumn("__jk", F.lit(1)))
-        vd = _to_double(F.col(vec_col))
-        d2 = F.transform(F.col("__cents"), lambda c: F.aggregate(
-            F.zip_with(vd, c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda acc, x: acc + x))
-        cell = (F.array_position(d2, F.array_min(d2)) - 1).cast("int")
-        return (tbl.df if df is None else df).withColumn("__jk", F.lit(1)) \
-            .join(F.broadcast(cpk), "__jk"), cell
-
     if centroids in ("sample", "lloyd"):
         if centroids == "sample":
             # bounded eager probe: n_lists rows collected (same class of
@@ -404,10 +418,9 @@ def _cells_and_centers(tbl, id_col, vec_col, n_lists, centroids,
                 train = (train.select(F.col(id_col), F.col(vec_col))
                          .repartition(max(1, (train_limit * dim * 8) >> 25))
                          .persist())
-                vd = _to_double(F.col(vec_col))
                 for _i in range(n_iters):
-                    base, cell = _argmin_cell(cents, train)
-                    sums = (base.select(cell.alias("__cell"), vd.alias("__v"))
+                    sums = (_assign_cells(train, cents, vec_col)
+                            .select("__cell", F.col("__vd").alias("__v"))
                             .groupBy("__cell")
                             .agg(F.count(F.lit(1)).alias("__n"),
                                  *[F.sum(F.element_at("__v", j + 1)
@@ -422,14 +435,14 @@ def _cells_and_centers(tbl, id_col, vec_col, n_lists, centroids,
             else:
                 cents = []          # empty table: no centroids to train
         centers = list(enumerate(cents))
-        base, cell = _argmin_cell(cents)
         # nbr_vec emitted as array<double> — every consumer (ivf scoring,
         # semantic pair join) folds on it; casting once per row here
         # replaces a per-pair cast downstream
-        assigned = base.select(F.col(id_col).alias("nbr_id"),
-                               _to_double(F.col(vec_col)).alias("nbr_vec"),
-                               _norm_sq(F.col(vec_col)).alias("__nn"),
-                               cell.alias("__cell"))
+        vd = F.col("__vd")
+        assigned = (_assign_cells(tbl.df, cents, vec_col)
+                    .select(F.col(id_col).alias("nbr_id"),
+                            vd.alias("nbr_vec"), _dot(vd, vd).alias("__nn"),
+                            "__cell"))
     elif centroids == "kmeans":
         from pyspark.ml.clustering import KMeans
 
@@ -718,7 +731,7 @@ def ivf_pq_topk(tbl: SparkTbl, queries, k: int = 10, id_col: str = "vec_id",
 
 def _spread_cells(df):
     """Explicit hash-partitioning by ``__cell`` with a PINNED partition
-    count, applied to both sides of every intra-cell pair join.
+    count, applied to the input(s) of every intra-cell pair join.
 
     The pair stage is CPU-dense but byte-light: a few MB of vectors fan
     out into Σ|cell|² cosine folds.  AQE's BYTE-based partition
@@ -769,14 +782,18 @@ def _pair_blocks(spark, n_lists):
     ``s²`` tasks at the cost of replicating each side ``s``x into the
     shuffle.
 
-    ``s`` is the smallest integer with ``n_lists * s² >= 2 *
-    parallelism`` (capped at 8): scale-adaptive by construction — at
-    production scale ``n_lists`` ~ √N far exceeds the core count, so
-    s=1 and the plan is EXACTLY the r11 plan with zero replication; the
-    replication only pays where it buys idle cores back."""
+    ``s`` is the smallest integer with ``n_lists * s² >= 2 * cores``
+    (executor cores = ``defaultParallelism``; capped at 8):
+    scale-adaptive by construction — at production scale ``n_lists`` ~
+    √N far exceeds the core count, so s=1 and the pair join is a
+    self-join of ONE spread side (``_cell_pair_join``) with zero
+    replication; the replication only pays where it buys idle cores
+    back.  Sized by cores, not by ``spark.sql.shuffle.partitions``: the
+    partition count sets how finely the work is cut, the cores how much
+    of it runs at once, and on one core replication only adds work."""
     if not n_lists or n_lists <= 0:       # unknown cell count: no blocks
         return 1
-    p = _spread_parallelism(spark)
+    p = spark.sparkContext.defaultParallelism
     if n_lists >= 2 * p:
         return 1
     import math
@@ -803,6 +820,28 @@ def _block_pair_sides(a, b, id_a, id_b, n_lists):
                       F.pmod(F.xxhash64(F.col(id_b)), F.lit(s)).cast("int"))
          .withColumn("__pba", blocks))
     return a, b, ["__pba", "__pbb"]
+
+
+def _cell_pair_join(side, id_col, n_lists):
+    """Every pair (x, y) of ``side`` rows sharing a ``__cell``, with
+    ``x[id_col] < y[id_col]``; the other columns come out suffixed
+    ``_a`` (from x) and ``_b`` (from y).
+
+    At ``s == 1`` (``_pair_blocks``) ``_block_pair_sides`` returns
+    ``side`` untouched for both inputs, so they are the same plan: the
+    assignment and its exchange run once and the second input is a
+    ``ReusedExchange``.  At ``s > 1`` the two sides carry different
+    fragment-replicate block columns and each is computed."""
+    cols = [c for c in side.columns if c != "__cell"]
+    a, b, bk = _block_pair_sides(side, side, id_col, id_col, n_lists)
+    cond = F.col("__x.__cell") == F.col("__y.__cell")
+    for k in bk:
+        cond = cond & (F.col(f"__x.{k}") == F.col(f"__y.{k}"))
+    joined = _spread_cells(a).alias("__x").join(
+        _spread_cells(b).alias("__y"), cond)
+    return (joined.filter(F.col(f"__x.{id_col}") < F.col(f"__y.{id_col}"))
+            .select(*[F.col(f"__x.{c}").alias(f"{c}_a") for c in cols],
+                    *[F.col(f"__y.{c}").alias(f"{c}_b") for c in cols]))
 
 
 def _int8_prefiltered_pairs(assigned, threshold, round_to,
@@ -875,28 +914,21 @@ def _int8_prefiltered_pairs(assigned, threshold, round_to,
          .withColumn("__l1", F.aggregate(
              F.col("__q"), F.lit(0).cast("long"),
              lambda acc, x: acc + F.abs(x.cast("long"))))
-         .select(F.col("nbr_id"), "__cell", "__q", "__s", "__nn", "__l1"))
-    qa = q.select(F.col("nbr_id").alias("id_a"), "__cell",
-                  F.col("__q").alias("__qa"), F.col("__s").alias("__sa"),
-                  F.col("__nn").alias("__na"), F.col("__l1").alias("__l1a"))
-    qb = q.select(F.col("nbr_id").alias("id_b"), "__cell",
-                  F.col("__q").alias("__qb"), F.col("__s").alias("__sb"),
-                  F.col("__nn").alias("__nb"), F.col("__l1").alias("__l1b"))
+         .select(F.col("nbr_id").alias("id"), "__cell",
+                 F.col("__q").alias("q"), F.col("__s").alias("s"),
+                 F.col("__nn").alias("n"), F.col("__l1").alias("l1")))
     int_dot = F.aggregate(
-        F.zip_with(F.col("__qa"), F.col("__qb"),
+        F.zip_with(F.col("q_a"), F.col("q_b"),
                    lambda x, y: x.cast("int") * y.cast("int")),
         F.lit(0).cast("long"), lambda acc, x: acc + x)
     bound = F.try_divide(
-        F.col("__sa") * F.col("__sb")
+        F.col("s_a") * F.col("s_b")
         * (int_dot.cast("double")
-           + (F.col("__l1a") + F.col("__l1b")).cast("double") / 2.0
-           + F.size(F.col("__qa")).cast("double") / 4.0),
-        F.sqrt(F.col("__na") * F.col("__nb")))
+           + (F.col("l1_a") + F.col("l1_b")).cast("double") / 2.0
+           + F.size(F.col("q_a")).cast("double") / 4.0),
+        F.sqrt(F.col("n_a") * F.col("n_b")))
     cutoff = threshold - 0.5 * 10.0 ** (-round_to) - 1e-9
-    qa, qb, bk = _block_pair_sides(qa, qb, "id_a", "id_b",
-                                   n_lists if n_lists is not None else 0)
-    survivors = (_spread_cells(qa).join(_spread_cells(qb), ["__cell"] + bk)
-                 .filter(F.col("id_a") < F.col("id_b"))
+    survivors = (_cell_pair_join(q, "id", n_lists)
                  .filter(bound >= F.lit(cutoff))
                  .select("id_a", "id_b"))
     # SHUFFLE_MERGE on the vector sides: their static size estimate
@@ -940,10 +972,14 @@ def semantic_dedup(tbl: SparkTbl, threshold: float = 0.95,
     Scale shape: pair generation is a self-join ON THE CELL ID — cost is
     Σ over cells of |cell|², never corpus² (the paper's core trick; at
     fixed average cell size the pair count grows linearly with corpus).
+    Each row's cell assignment runs once: at s == 1 the join's two
+    inputs are one plan whose exchange is reused (``_cell_pair_join``).
     The quantizer trains on a bounded slice (lloyd/sample) or MLlib
-    k-means|| (``centroids="kmeans"``), and the drop set anti-join is
-    AQE-sized.  ``centroids="sample"``/``"lloyd"`` keep every stage
-    SQL-replayable for value-exact cross-engine verification.
+    k-means|| (``centroids="kmeans"``); the drop list is broadcast when
+    the driver union-find built it (bounded by ``dedup_clusters``' cap)
+    and AQE-sized otherwise.  ``centroids="sample"``/``"lloyd"`` keep
+    every stage SQL-replayable for value-exact cross-engine
+    verification.
 
     Returns the deduplicated table; ``return_pairs=True`` returns
     ``(deduped, pairs)`` with the verified intra-cell pair table
@@ -962,25 +998,13 @@ def semantic_dedup(tbl: SparkTbl, threshold: float = 0.95,
         pairs = _int8_prefiltered_pairs(assigned, threshold, round_to,
                                         n_lists=n_lists)
     else:
-        # NOTE: the self-join consumes the assignment subtree twice (a and
-        # b output names differ, so ReuseExchange can't dedup them);
-        # measured, persisting it here costs MORE than the recompute at
-        # bench scale (extra caching job + pin lifetime) — left
-        # unpersisted on purpose
-        a = assigned.select(
-            F.col("nbr_id").alias("id_a"),
-            F.col("nbr_vec").alias("vec_a"),
-            F.col("__nn").alias("__na"), "__cell")
-        b = assigned.select(
-            F.col("nbr_id").alias("id_b"),
-            F.col("nbr_vec").alias("vec_b"),
-            F.col("__nn").alias("__nb"), "__cell")
-        a, b, bk = _block_pair_sides(a, b, "id_a", "id_b", n_lists)
-        pairs = (_spread_cells(a).join(_spread_cells(b), ["__cell"] + bk)
-                 .filter(F.col("id_a") < F.col("id_b"))
+        side = assigned.select(F.col("nbr_id").alias("id"),
+                               F.col("nbr_vec").alias("vec"),
+                               F.col("__nn").alias("n"), "__cell")
+        pairs = (_cell_pair_join(side, "id", n_lists)
                  .withColumn("score", F.round(_cosine_pre(
                      F.col("vec_a"), F.col("vec_b"),
-                     F.col("__na"), F.col("__nb")), round_to))
+                     F.col("n_a"), F.col("n_b")), round_to))
                  .filter(F.col("score") >= threshold)
                  .select("id_a", "id_b", "score"))
     from .dedup import drop_near_dups
@@ -988,25 +1012,6 @@ def semantic_dedup(tbl: SparkTbl, threshold: float = 0.95,
     if return_pairs:
         return deduped, SparkTbl(pairs)
     return deduped
-
-
-def _assign_fixed(df, cents, id_col, vec_col):
-    """Assign rows to FIXED centroids (broadcast 1-row centroid table,
-    argmin squared distance, first index on ties — the identical plan
-    ``_cells_and_centers`` builds, minus training).  Returns
-    (id_col, vec_col, __nn, __cell)."""
-    spark = df.sparkSession
-    cpk = (spark.createDataFrame([(cents,)], "__cents: array<array<double>>")
-           .withColumn("__jk", F.lit(1)))
-    vd = _to_double(F.col(vec_col))
-    d2 = F.transform(F.col("__cents"), lambda c: F.aggregate(
-        F.zip_with(vd, c, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda acc, x: acc + x))
-    cell = (F.array_position(d2, F.array_min(d2)) - 1).cast("int")
-    return (df.withColumn("__jk", F.lit(1)).join(F.broadcast(cpk), "__jk")
-            .select(F.col(id_col), vd.alias(vec_col),
-                    _norm_sq(F.col(vec_col)).alias("__nn"),
-                    cell.alias("__cell")))
 
 
 def semantic_dedup_incremental(
@@ -1061,7 +1066,10 @@ def semantic_dedup_incremental(
                 "semantic_dedup_incremental: pass the cents list returned "
                 "by the first call along with the store (assignments are "
                 "only comparable at fixed centroids)")
-        new_asg = _assign_fixed(tbl.df, cents, id_col, vec_col)
+        vd = F.col("__vd")
+        new_asg = (_assign_cells(tbl.df, cents, vec_col)
+                   .select(F.col(id_col), vd.alias(vec_col),
+                           _dot(vd, vd).alias("__nn"), "__cell"))
         store_df = store.df if isinstance(store, SparkTbl) else store
 
     # r13: the snapshot's assignment is consumed TWICE here (pair-join
@@ -1204,22 +1212,8 @@ def assign_clusters(tbl: SparkTbl, n_clusters: int = 16,
               .join(cells, F.col(id_col) == F.col("__aid"), "left")
               .drop("__aid"))
         return tbl.evolve(df=df)
-    cents = [c for _i, c in centers]
-    if not cents:
-        return tbl.evolve(
-            df=tbl.df.withColumn(out, F.lit(None).cast("int")))
-    spark = tbl.df.sparkSession
-    cpk = (spark.createDataFrame([(cents,)],
-                                 "__cents: array<array<double>>")
-           .withColumn("__jk", F.lit(1)))
-    vd = _to_double(F.col(vec_col))
-    d2 = F.transform(F.col("__cents"), lambda c: F.aggregate(
-        F.zip_with(vd, c, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda acc, x: acc + x))
-    cell = (F.array_position(d2, F.array_min(d2)) - 1).cast("int")
-    df = (tbl.df.drop(out).withColumn("__jk", F.lit(1))
-          .join(F.broadcast(cpk), "__jk")
-          .withColumn(out, cell).drop("__jk", "__cents"))
+    df = (_assign_cells(tbl.df.drop(out), [c for _i, c in centers], vec_col)
+          .drop("__vd").withColumnRenamed("__cell", out))
     return tbl.evolve(df=df)
 
 

@@ -215,15 +215,21 @@ def hash_features(tbl: SparkTbl, col: str = "text", dim: int = 64,
 # ---------------------------------------------------------------------------
 
 
-def _char_ngrams(col, n):
-    """Character n-grams of whitespace-normalized lowercase text (texts
-    shorter than ``n`` produce an empty array — guarded because
-    ``sequence(1, 0)`` would count DOWN, not produce nothing)."""
-    norm = F.regexp_replace(F.trim(F.lower(col)), r"\s+", " ")
-    grams = F.expr(
-        f"transform(sequence(1, length(__norm) - {n - 1}), "
-        f"i -> substring(__norm, i, {n}))")
-    return norm, grams
+def _char_ngram_rows(df, part_col, col, n):
+    """One ``(part_col, __g)`` row per character n-gram of the
+    whitespace-normalized lowercase text: the start positions explode
+    from ``sequence`` and each gram is a plain ``substring`` — no
+    per-element lambda.  Texts shorter than ``n`` (or NULL) produce no
+    rows; the guard matters because ``sequence(1, 0)`` would count
+    DOWN, not produce nothing."""
+    norm = F.regexp_replace(F.trim(F.lower(F.col(col))), r"\s+", " ")
+    size = F.length("__norm")
+    starts = F.when(size >= n, F.sequence(F.lit(1), size - (n - 1)))
+    return (df.select(part_col, norm.alias("__norm"))
+            .select(part_col, "__norm", F.explode(starts).alias("__i"))
+            .select(part_col,
+                    F.col("__norm").substr(F.col("__i"), F.lit(n))
+                    .alias("__g")))
 
 
 def _ranked_grams(df, part_col, col, n, k, single_shuffle=False):
@@ -243,13 +249,7 @@ def _ranked_grams(df, part_col, col, n, k, single_shuffle=False):
     shrinks corpus-sized gram streams to vocabulary size map-side)."""
     from pyspark.sql import Window
 
-    norm, grams = _char_ngrams(F.col(col), n)
-    rows = (df
-            .withColumn("__norm", norm)
-            .select(part_col,
-                    F.explode(F.when(F.length("__norm") >= n, grams)
-                              .otherwise(F.array().cast("array<string>")))
-                    .alias("__g")))
+    rows = _char_ngram_rows(df, part_col, col, n)
     if single_shuffle:
         spark = df.sparkSession
         try:

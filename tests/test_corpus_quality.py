@@ -431,10 +431,41 @@ def test_dedup_clusters_driver_gate_matches_distributed(spark):
                    id_b=[p[1] for p in pairs])
     via_driver = dedup_clusters(t).df               # n_pairs << default cap
     via_loop = dedup_clusters(t, driver_cap=0).df   # forced distributed
-    assert via_driver.schema == via_loop.schema
+    # exactly driver_cap + 1 pairs: the bounded collect sees one row too
+    # many and falls through to the loop
+    via_gate = dedup_clusters(t, driver_cap=len(pairs) - 1).df
+    assert via_driver.schema == via_loop.schema == via_gate.schema
     got_d = dict(map(tuple, via_driver.toPandas().itertuples(index=False)))
     got_l = dict(map(tuple, via_loop.toPandas().itertuples(index=False)))
-    assert got_d and got_d == got_l
+    got_g = dict(map(tuple, via_gate.toPandas().itertuples(index=False)))
+    assert got_d and got_d == got_l == got_g
+
+
+def test_dedup_clusters_gate_is_one_bounded_action(spark, monkeypatch):
+    """Below the cap the gate is ONE driver action — a collect limited to
+    driver_cap + 1 rows — with no persist or count, and it leaves no
+    persisted RDD behind."""
+    from siuba_spark.corpus.dedup import dedup_clusters
+
+    t = data_frame(spark, id_a=[1, 2, 5, 7, 7], id_b=[2, 3, 6, 8, 9])
+    frame = type(t.df)
+    calls = []
+    for name in ("collect", "count", "persist", "cache",
+                 "localCheckpoint", "toPandas", "first", "take"):
+        orig = getattr(frame, name)
+
+        def spy(self, *a, _orig=orig, _name=name, **kw):
+            calls.append(_name)
+            return _orig(self, *a, **kw)
+        monkeypatch.setattr(frame, name, spy)
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keys())
+    out = dedup_clusters(t, driver_cap=5)
+    assert calls == ["collect"], calls
+    assert set(sc._jsc.getPersistentRDDs().keys()) - before == set()
+    monkeypatch.undo()
+    got = dict(map(tuple, out.df.toPandas().itertuples(index=False)))
+    assert got == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5, 7: 7, 8: 7, 9: 7}
 
 
 def test_dedup_clusters_null_ids_fall_back_to_loop(spark):

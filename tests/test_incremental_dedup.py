@@ -103,6 +103,28 @@ def test_minhash_incremental_store_never_rebanded(spark):
     assert p2.df.count() == 0
 
 
+def test_exact_incremental_releases_snapshot_cache(spark):
+    """The snapshot aggregate exact_dedup_incremental materializes for
+    its three consumers is pinned to the returned tables, so
+    release_all_pins() leaves no persisted RDD behind."""
+    from siuba_spark import release_all_pins
+
+    sc = spark.sparkContext
+    release_all_pins()
+    before = set(sc._jsc.getPersistentRDDs().keys())
+    a = _docs(spark, [(0, "x"), (1, "x"), (2, "y")])
+    b = _docs(spark, [(10, "x"), (11, "z"), (12, "z")])
+    _kept_a, store = exact_dedup_incremental(a, None, cols=["text"])
+    kept_b, store2 = exact_dedup_incremental(b, store, cols=["text"])
+    assert {r.doc_id for r in kept_b.df.collect()} == {11}
+    assert {(r.doc_id, r.n_dups) for r in store2.df.collect()} == \
+        {(0, 3), (2, 1), (11, 2)}
+    release_all_pins()
+    # set difference, not a size compare: the context cleaner may free
+    # other tests' RDDs meanwhile
+    assert set(sc._jsc.getPersistentRDDs().keys()) - before == set()
+
+
 def test_exact_incremental_random_splits_property(spark):
     """Property: for ANY 3-way snapshot split (monotone id blocks) of a
     corpus with duplicate keys, chaining exact_dedup_incremental equals

@@ -821,3 +821,98 @@ def test_rank_limit_verbs_get_window_group_limit(spark):
         plan = out.df._jdf.queryExecution().executedPlan().toString()
         assert "WindowGroupLimit" in plan, (name, plan)
         assert "Partial" in plan, (name, plan)
+
+
+def test_semantic_pair_self_join_reuses_one_assignment(spark):
+    """At s == 1 the intra-cell pair join is a self-join of ONE spread
+    side: the executed plan reuses its exchange, and the centroid argmin
+    sits in exactly one operator — no second join side, and no copy of
+    it inferred into the centroid join's condition."""
+    from pyspark.sql import functions as F
+
+    from siuba_spark.corpus.similarity import _pair_blocks, semantic_dedup
+    from siuba_spark.plans.tbl import SparkTbl
+
+    vec = F.transform(F.sequence(F.lit(1), F.lit(16)),
+                      lambda j: F.sin(F.col("id") * j * 0.1))
+    emb = SparkTbl(spark.range(0, 400).select(
+        F.col("id").alias("vec_id"), vec.alias("embedding")))
+    assert _pair_blocks(spark, 16) == 1
+    _deduped, pairs = semantic_dedup(emb, threshold=0.9, n_lists=16,
+                                     centroids="sample", return_pairs=True)
+    pairs.df.collect()
+    final = _plan(pairs.df).split("== Initial Plan ==")[0]
+    assert "ReusedExchange" in final, final
+    argmin = [ln for ln in final.splitlines() if "array_position" in ln]
+    assert len(argmin) == 1, final
+
+
+def test_lm_logprob_totals_need_no_cross_join(spark):
+    """The Laplace totals come back with lm_logprob's order probe and
+    enter the score as literals: no totals aggregate broadcast into a
+    nested-loop cross join."""
+    from siuba_spark.corpus.quality import lm_logprob, lm_train
+
+    docs = tbl(spark, f"{SF}/documents.parquet")
+    prof = lm_train(docs >> filter(_.doc_id < 250))
+    out = lm_logprob(docs >> filter(_.doc_id >= 250), prof)
+    plan = _plan(out.df)
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+
+
+def _eager_jobs(spark, build):
+    """Spark jobs launched while ``build()`` runs (before any action on
+    its result)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"eager-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "eager-job guard")
+    try:
+        build()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_corpus_builds_launch_bounded_eager_jobs(spark):
+    """Job-count guard for the corpus verbs on ~200-row inputs: a new
+    persist+count, a second bounded collect or a duplicated pair-join
+    side shows up here as extra eager jobs."""
+    from pyspark.sql import functions as F
+
+    from siuba_spark import release_all_pins
+    from siuba_spark.corpus.quality import lm_logprob, lm_train
+    from siuba_spark.corpus.similarity import semantic_dedup
+    from siuba_spark.corpus.text import lang_id, lang_profile_train
+    from siuba_spark.plans.tbl import SparkTbl
+
+    vec = F.transform(F.sequence(F.lit(1), F.lit(16)),
+                      lambda j: F.sin((F.col("id") % 50) * j * 0.1))
+    emb = SparkTbl(spark.range(0, 200).select(
+        F.col("id").alias("vec_id"), vec.alias("embedding")))
+    docs = tbl(spark, f"{SF}/documents.parquet") >> filter(_.doc_id < 200)
+    train, apply = (docs >> filter(_.doc_id < 100),
+                    docs >> filter(_.doc_id >= 100))
+    builds = {
+        # the centroid sample, then the bounded pair collect: at s == 1
+        # one centroid broadcast, one exchange stage (the other input
+        # reuses it) and the take; at s == 2 both sides are computed
+        "semantic_dedup_s1": lambda: semantic_dedup(
+            emb, threshold=0.9, n_lists=16, centroids="sample"),
+        "semantic_dedup_s2": lambda: semantic_dedup(
+            emb, threshold=0.9, n_lists=8, centroids="sample"),
+        # the one-row order-and-totals probe over the training aggregate
+        "lm_logprob": lambda: lm_logprob(apply, lm_train(train)),
+        "lang_id": lambda: lang_id(
+            apply, lang_profile_train(train, "lang", "text", n=3, k=32),
+            n=3, k=32),
+    }
+    limits = {"semantic_dedup_s1": 4, "semantic_dedup_s2": 7,
+              "lm_logprob": 4, "lang_id": 0}
+    got = {}
+    for name, build in builds.items():
+        got[name] = _eager_jobs(spark, build)
+        release_all_pins()
+    assert all(got[k] <= limits[k] for k in limits), got

@@ -311,8 +311,11 @@ def test_semantic_store_compact_rebalances_and_preserves_contract(spark):
         tbl(full), n_lists=8, centroids="sample", return_pairs=True,
         **{k: v for k, v in kw.items() if k != "centroids"})
     # from-scratch at the SAME centroids: replay with fixed cents
-    from siuba_spark.corpus.similarity import _assign_fixed, _cosine_pre
-    asg = _assign_fixed(full, new_cents, "vec_id", "embedding")
+    from siuba_spark.corpus.similarity import _assign_cells, _cosine_pre, _dot
+    vd = F.col("__vd")
+    asg = (_assign_cells(full, new_cents, "embedding")
+           .select("vec_id", vd.alias("embedding"),
+                   _dot(vd, vd).alias("__nn"), "__cell"))
     l = asg.select(F.col("vec_id").alias("id_a"),
                    F.col("embedding").alias("va"),
                    F.col("__nn").alias("na"), "__cell")
@@ -390,3 +393,59 @@ def test_assign_clusters_empty_input(spark):
     out = assign_clusters(empty, n_clusters=4, centroids="sample")
     assert out.df.count() == 0
     assert "cluster_id" in out.df.columns
+
+
+def test_semantic_dedup_null_embeddings_agree_across_pair_paths(
+        spark, monkeypatch):
+    """Rows without a defined cell (NULL vector, a NULL element, a short
+    vector) never pair and are always kept.  The one-side self-join
+    (s == 1), the fragment-replicate join (s > 1) and the int8 prefilter
+    all give the pair set of a naive cell join, and the same kept set."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from siuba_spark.corpus import similarity as sim
+
+    vec = F.transform(F.sequence(F.lit(1), F.lit(8)),
+                      lambda j: F.sin((F.col("id") % 37) * j * 0.1))
+    odd = (F.col("id") >= 50) & (F.col("id") % 11 < 3)
+    emb = (F.when(odd & (F.col("id") % 11 == 0),
+                  F.lit(None).cast("array<double>"))
+           .when(odd & (F.col("id") % 11 == 1),
+                 F.concat(F.slice(vec, 1, 7),
+                          F.array(F.lit(None).cast("double"))))
+           .when(odd, F.slice(vec, 1, 4))
+           .otherwise(vec))
+    t = tbl(spark.range(0, 300).select(F.col("id").alias("vec_id"),
+                                       emb.alias("embedding")))
+    undefined = {i for i in range(50, 300) if i % 11 < 3}
+
+    assigned, _c = sim._cells_and_centers(t, "vec_id", "embedding", 4,
+                                          "sample", 2, 42, None)
+    side = [assigned.select(F.col("nbr_id").alias(f"id_{x}"),
+                            F.col("nbr_vec").alias(f"v_{x}"),
+                            F.col("__nn").alias(f"n_{x}"), "__cell")
+            for x in "ab"]
+    want = (side[0].join(side[1], "__cell")
+            .filter(F.col("id_a") < F.col("id_b"))
+            .withColumn("score", F.round(sim._cosine_pre(
+                F.col("v_a"), F.col("v_b"), F.col("n_a"), F.col("n_b")), 4))
+            .filter(F.col("score") >= 0.9)
+            .select("id_a", "id_b", "score").toPandas()
+            .sort_values(["id_a", "id_b"]).reset_index(drop=True))
+    assert len(want) > 0
+    assert not undefined & (set(want.id_a) | set(want.id_b))
+
+    kept_sets = []
+    for s in (1, 3):
+        monkeypatch.setattr(sim, "_pair_blocks", lambda _sp, _n, s=s: s)
+        for pf in (None, "int8"):
+            kept, pairs = semantic_dedup(t, threshold=0.9, n_lists=4,
+                                         centroids="sample",
+                                         return_pairs=True, prefilter=pf)
+            got = (pairs.df.toPandas().sort_values(["id_a", "id_b"])
+                   .reset_index(drop=True))
+            pd.testing.assert_frame_equal(got, want)
+            kept_sets.append({r.vec_id for r in kept.df.collect()})
+    assert all(k == kept_sets[0] for k in kept_sets)
+    assert undefined <= kept_sets[0]

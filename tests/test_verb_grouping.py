@@ -427,16 +427,22 @@ def test_mutate_agg_method_join_matches_window(spark):
 def test_token_budget_sample_split_matches_single_window(spark):
     """r13: the split= two-level prefix scan keeps exactly the same docs
     as the single running-sum window (bucket ranges partition the md5
-    accumulation order)."""
+    accumulation order), NULL ids included."""
     from siuba_spark.corpus.quality import token_budget_sample
 
     docs = tbl(spark, "/root/testdata/sf0.01/documents.parquet")
-    base = (token_budget_sample(docs, "lang", budget=2000)
-            .df.select("doc_id").toPandas().sort_values("doc_id")
-            .reset_index(drop=True))
-    for nsplit in (2, 16, 64):
-        alt = (token_budget_sample(docs, "lang", budget=2000, split=nsplit)
-               .df.select("doc_id").toPandas().sort_values("doc_id")
-               .reset_index(drop=True))
-        import pandas as pd
-        pd.testing.assert_frame_equal(base, alt)
+    # every 7th id NULL: md5(NULL) is a NULL hash, so these rows sort
+    # first in the single window and form the NULL bucket under split=
+    null_ids = tbl(spark.createDataFrame(
+        [(None if i % 7 == 0 else i, "s", " ".join(["w"] * (1 + i % 3)))
+         for i in range(60)], "doc_id long, lang string, text string"))
+    for t, budget in ((docs, 2000), (null_ids, 40)):
+        def kept(**kw):
+            return (token_budget_sample(t, "lang", budget=budget, **kw)
+                    .df.select("doc_id").toPandas()
+                    .sort_values("doc_id", na_position="first")
+                    .reset_index(drop=True))
+        base = kept()
+        for nsplit in (2, 16, 64):
+            pd.testing.assert_frame_equal(base, kept(split=nsplit))
+    assert base.doc_id.isna().sum() == 9
