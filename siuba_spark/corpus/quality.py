@@ -636,8 +636,7 @@ def token_budget_sample(tbl: SparkTbl, *strata, budget: int,
         # prefix-sum and the join back are on a tiny broadcast table
         tot = (work.groupBy(*[F.col(k) for k in keys], "__tb_b")
                .agg(F.sum("__tb_n").alias("__tb_t"))
-               .select(*[F.col(k).alias(f"__tbk_{k}") for k in keys],
-                       F.col("__tb_b").alias("__tbb2"),
+               .select("__tb_b", *keys,
                        F.coalesce(F.sum("__tb_t").over(
                            Window.partitionBy(
                                *[F.col(k) for k in keys])
@@ -646,15 +645,12 @@ def token_budget_sample(tbl: SparkTbl, *strata, budget: int,
                            F.lit(0)).alias("__tb_off")))
         # null-safe: a NULL id hashes to a NULL bucket, which holds the
         # rows the single window sorts first (NULLS FIRST on the hash)
-        cond = F.col("__tb_b").eqNullSafe(F.col("__tbb2"))
-        for k in keys:
-            cond = cond & F.col(k).eqNullSafe(F.col(f"__tbk_{k}"))
-        df = (work.withColumn("__tb_run", run_in)
-              .join(F.broadcast(tot), cond, "left")
+        from ..operators.joins import join_back
+        df = (join_back(work.withColumn("__tb_run", run_in), tot,
+                        ["__tb_b", *keys], broadcast=True)
               .filter((F.col("__tb_off") + F.col("__tb_run")
                        - F.col("__tb_n")) < budget)
-              .drop("__tb_n", "__tb_b", "__tb_run", "__tbb2", "__tb_off",
-                    *[f"__tbk_{k}" for k in keys]))
+              .drop("__tb_n", "__tb_b", "__tb_run", "__tb_off"))
         return tbl.evolve(df=df)
     w = (Window.partitionBy(*[F.col(k) for k in keys])
          .orderBy(h.asc(), F.col(id_col).asc())

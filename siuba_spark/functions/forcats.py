@@ -176,15 +176,10 @@ def _fct_lump_plan(ctx, node, df, idx):
         else:
             order = [F.col("__cnt").asc(), F.col(vname).asc_nulls_last()]
         keep_cond = F.dense_rank().over(wsp.orderBy(*order)) <= abs(int(n))
-    gkeys = [f"__fct_g{i}_{idx}" for i in range(len(groups))]
+    from ..operators.joins import join_back
     keep = (counts.withColumn(flag, keep_cond).filter(F.col(flag))
-            .select(*[F.col(g).alias(a) for g, a in zip(groups, gkeys)],
-                    F.col(vname).alias(f"__fct_k_{idx}"), F.col(flag)))
-    cond = F.col(vname).eqNullSafe(F.col(f"__fct_k_{idx}"))
-    for g, a in zip(groups, gkeys):
-        cond = cond & F.col(g).eqNullSafe(F.col(a))
-    df = df.join(F.broadcast(keep), cond, "left")
-    tmps.extend(gkeys + [f"__fct_k_{idx}"])
+            .select(vname, *groups, flag))
+    df = join_back(df, keep, [vname, *groups], broadcast=True)
     out = F.when(F.col(flag), F.col(vname)).otherwise(F.lit(other))
     return df, out, tmps
 

@@ -37,6 +37,18 @@ class TranslationError(Exception):
     siuba/sql/translate.py:355-361)."""
 
 
+# source functions whose every call draws fresh values: an expression
+# containing one is never pooled (two unseeded rand() windows must stay
+# independent) and never rerouted to the agg+join lowering
+NONDETERMINISTIC = ("rand(", "randn(", "uuid(", "shuffle(")
+
+
+def nondeterministic(*parts) -> bool:
+    """True when any part's string form calls a NONDETERMINISTIC source."""
+    text = "".join(str(p) for p in parts)
+    return any(tok in text for tok in NONDETERMINISTIC)
+
+
 class WPool:
     """Window-expression pool: CSE that Catalyst refuses to do.
 
@@ -69,7 +81,7 @@ class WPool:
 
     def add(self, col):
         key = str(col)
-        if any(tok in key for tok in ("rand(", "randn(", "uuid(", "shuffle(")):
+        if nondeterministic(key):
             return col
         ent = self.entries.get(key)
         if ent is None:
@@ -124,6 +136,15 @@ class LowerCtx:
         if self.wpool is None:
             return col
         return self.wpool.add(col)
+
+    def joins_back(self, *inputs) -> bool:
+        """True when a ROW-mode aggregate over ``inputs`` lowers through
+        ``aggpool`` (the agg+join form) instead of the group window.
+        Nondeterministic inputs stay on the window: WPool declines to
+        pool them, and an unpooled plain aggregate would silently lose
+        its grouping."""
+        return (self.aggpool is not None and bool(self.group_by)
+                and not nondeterministic(*inputs))
 
     # -- window spec builders (AggOver / RankOver / CumlOver analogues) ----
     def w_agg(self):
@@ -723,13 +744,7 @@ def _lower_method(node, ctx):
         # is the whole partition, and NULL keys group together in both.
         # nunique gets the real count_distinct here (windows must
         # simulate it with collect_set).
-        # (nondeterministic inputs are never re-routed: WPool declines
-        # to pool them, and an unpooled plain aggregate would silently
-        # lose its grouping — those stay on the window path)
-        if (ctx.aggpool is not None and ctx.group_by
-                and not any(tok in str(obj) + str(raw_args)
-                            for tok in ("rand(", "randn(", "uuid(",
-                                        "shuffle("))):
+        if ctx.joins_back(obj, raw_args, raw_kw):
             if name in AGG_PLAIN_OVERRIDES:
                 # cast to the window lowering's dtype (size(collect_set)
                 # is int; count_distinct is bigint) so the two lowerings

@@ -237,12 +237,18 @@ def rewrite_consecutive_id(node, ctx, df):
 
 # -- group size aggregates --------------------------------------------------
 
+# In ROW mode both follow the verb's AggOver lowering like the method
+# aggregates (functions/lowering.py _lower_method): the agg pool under
+# mutate(_agg_method="join"/"broadcast"), else the pooled group window.
+
 @register_fn("n")
 def _n(ctx, args, kwargs):
     agg = F.count(F.lit(1))
     if ctx.mode == AGG:
         return agg, AGGED
-    return agg.over(ctx.w_agg()), SCALAR
+    if ctx.joins_back():
+        return ctx.aggpool.add(agg), SCALAR
+    return ctx.pooled(agg.over(ctx.w_agg())), SCALAR
 
 
 @register_fn("n_distinct")
@@ -254,7 +260,12 @@ def _n_distinct(ctx, args, kwargs):
         packed = F.struct(*cols)
     else:
         packed = cols[0]
-    return F.size(F.collect_set(packed).over(ctx.w_agg())), SCALAR
+    if ctx.joins_back(packed):
+        # count_distinct of the packed value counts what collect_set
+        # keeps (NULL scalars dropped, structs with NULL fields kept);
+        # cast to the window form's int so the schemas match
+        return ctx.aggpool.add(F.count_distinct(packed).cast("int")), SCALAR
+    return ctx.pooled(F.size(F.collect_set(packed).over(ctx.w_agg()))), SCALAR
 
 
 @register_fn("approx_n_distinct")

@@ -14,6 +14,7 @@ from ..functions.lowering import SCALAR, TranslationError, lower
 from ..siu.calls import Call, FnCall, GetAttr, MetaArg, UnaryOp, strip_symbolic
 from ..plans.pipe import verb
 from ..plans.tbl import SparkTbl
+from .joins import join_back
 from .tidyselect import resolve_names, resolve_select
 
 __all__ = [
@@ -197,8 +198,9 @@ def mutate(tbl: SparkTbl, *args, _by=None, _agg_method: str = "window",
     (un)grouped state.
 
     ``_agg_method=`` picks the lowering for order-free grouped aggregates
-    (``_.x.sum()`` etc. under group_by) — the same crossover knob as
-    ``add_count(method=)``:
+    (``_.x.sum()`` etc. under group_by, ``n()`` and ``n_distinct()``
+    included) — the same crossover knob as ``add_count(method=)``, which
+    is this mutate:
 
     - ``"window"`` (default): AggOver — one full-table shuffle on the
       group keys; right for bounded, well-distributed keys.
@@ -279,18 +281,9 @@ def mutate(tbl: SparkTbl, *args, _by=None, _agg_method: str = "window",
             if pend_a:
                 keys = list(work.group_by)
                 aggdf = (df.groupBy(*[F.col(k) for k in keys])
-                         .agg(*[c.alias(n) for n, c in pend_a])
-                         .select(*[F.col(k).alias(f"__aj_{k}")
-                                   for k in keys],
-                                 *[n for n, _c in pend_a]))
-                if _agg_method == "broadcast":
-                    aggdf = F.broadcast(aggdf)
-                cond = None
-                for k in keys:
-                    eq = F.col(k).eqNullSafe(F.col(f"__aj_{k}"))
-                    cond = eq if cond is None else (cond & eq)
-                df = (df.join(aggdf, cond, "left")
-                      .drop(*[f"__aj_{k}" for k in keys]))
+                         .agg(*[c.alias(n) for n, c in pend_a]))
+                df = join_back(df, aggdf, keys,
+                               broadcast=_agg_method == "broadcast")
                 aggpool.materialized.extend(n for n, _c in pend_a)
         pending = wpool.pending()
         if pending:

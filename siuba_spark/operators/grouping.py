@@ -13,10 +13,12 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.lowering import AGGED, TranslationError, lower
-from ..siu.calls import Call, GetAttr, Lit, MetaArg, strip_symbolic
+from ..siu.calls import (Call, FnCall, GetAttr, Lit, MetaArg, MethodCall,
+                         strip_symbolic)
 from ..plans.pipe import verb
 from ..plans.tbl import SparkTbl
 from .core import arrange, mutate
+from .joins import join_back
 from ..functions.vector import desc as _desc_fn
 
 __all__ = ["group_by", "ungroup", "summarize", "summarise", "reframe",
@@ -209,15 +211,7 @@ def summarize(tbl: SparkTbl, *args, _sets=None, _by=None, **kwargs):
     main = tbl.df.groupBy(*keys).agg(*build(main_items))
     dist = tbl.df.groupBy(*keys).agg(*build(dist_items))
     if tbl.group_by:
-        m, d = main.alias("__sm"), dist.alias("__sd")
-        cond = None
-        for g in tbl.group_by:
-            c = F.col(f"__sm.{g}").eqNullSafe(F.col(f"__sd.{g}"))
-            cond = c if cond is None else (cond & c)
-        joined = m.join(d, cond).select(
-            *[F.col(f"__sm.{g}") for g in tbl.group_by],
-            *[F.col(f"__sm.{k}") for k, _ in main_items],
-            *[F.col(f"__sd.{k}") for k, _ in dist_items])
+        joined = join_back(main, dist, tbl.group_by, how="inner")
     else:
         joined = main.crossJoin(dist)
     return SparkTbl(joined.select(*tbl.group_by, *kwargs.keys()),
@@ -267,10 +261,29 @@ def reframe(tbl: SparkTbl, *args, _by=None, **kwargs):
     return out.evolve(df=df)
 
 
+def _count_keys(tbl, args, kwargs):
+    """count/add_count keys: the current groups, then the named and
+    computed columns."""
+    names = list(tbl.group_by)
+    for nm in _names_from_args(args) + list(kwargs):
+        if nm not in names:
+            names.append(nm)
+    return tuple(names)
+
+
+def _count_expr(wt):
+    """The count aggregate: ``n()``, or ``wt.sum()`` when weighted."""
+    if wt is None:
+        return FnCall("n", (MetaArg(),), {})
+    return MethodCall(strip_symbolic(wt), "sum", (), {})
+
+
 @verb
 def count(tbl: SparkTbl, *args, wt=None, sort: bool = False, name: str | None = None,
           **kwargs):
-    """Group sizes, optionally weighted (reference: siuba/sql/verbs/count.py:21-55).
+    """Group sizes, optionally weighted (reference: siuba/sql/verbs/count.py:21-55):
+    ``summarize(n=n())`` — or ``wt.sum()`` — over the current groups plus
+    the named columns.  ``sort=True`` orders the result heaviest first.
 
     Examples
     --------
@@ -279,79 +292,39 @@ def count(tbl: SparkTbl, *args, wt=None, sort: bool = False, name: str | None = 
     [['a', 2], ['b', 1]]
     """
     work = mutate(tbl, **kwargs) if kwargs else tbl
-    names = list(tbl.group_by)
-    for nm in _names_from_args(args) + list(kwargs):
-        if nm not in names:
-            names.append(nm)
+    names = _count_keys(tbl, args, kwargs)
     out_name = name or _fresh_name("n", names)
-    if wt is None:
-        agg = F.count(F.lit(1))
-    else:
-        ctx = work.row_ctx()
-        agg = F.sum(lower(strip_symbolic(wt), ctx)[0])
-    df = work.df.groupBy(*[F.col(c) for c in names]).agg(agg.alias(out_name))
+    out = summarize(work.evolve(group_by=names),
+                    **{out_name: _count_expr(wt)})
     if sort:
-        df = df.orderBy(F.col(out_name).desc_nulls_last())
-    # an explicit name= may shadow a factor column — clear the stale entry
-    # like mutate/summarize do (ADVICE r6 item 4)
-    factors = {k: v for k, v in work.factors.items() if k != out_name}
-    return SparkTbl(df, factors=factors)
+        out = out.evolve(df=out.df.orderBy(F.col(out_name).desc_nulls_last()))
+    return out
 
 
 @verb
 def add_count(tbl: SparkTbl, *args, wt=None, sort: bool = False,
               name: str | None = None, method: str = "window", **kwargs):
-    """Like count but joined back as a column — implemented as a window
-    aggregate by default, exactly the reference's AggOver(count) approach
-    (siuba/sql/verbs/count.py:58-86).
+    """Like count but added back as a column on every row: ``mutate(n=n())``
+    over the count keys, keeping the table's grouping — the reference's
+    AggOver(count) (siuba/sql/verbs/count.py:58-86).  ``sort=True``
+    arranges heaviest group first (deferred like ``arrange``).
 
-    ``method="join"`` (beyond the reference) lowers instead to
-    ``groupBy(keys).count`` + an equi-join back — the scale-safe shape
-    when the count key is high-cardinality CONTENT (a document text or
-    fingerprint column): the window form funnels every occurrence of one
-    hot key into a single Window task AQE cannot split, while the
-    aggregate partial-combines hot keys map-side and the join back is
-    AQE-skew-splittable.  Same rows, same values, one extra (small,
-    pre-aggregated) shuffle — choose it when ``lint_plan``'s skew watch
-    flags the window.  NULL keys count together in both lowerings (the
-    join uses null-safe equality, matching window partitioning).
-
-    Measured crossover (SCALE.md r12 `add_count_hot_*`, 10%-hot key,
-    10M rows): wall parity locally, but the window form shuffles the
-    whole table (103 MB at 10x, one unsplittable hot task — a plain
-    count window gets NO WindowGroupLimit rewrite) vs 12.7 MB for the
-    join form — 8x less, growing with distinct keys instead of corpus
-    size.  Default stays "window" for bounded user keys; pass "join"
-    whenever the key is content-derived or can be hot."""
+    ``method`` is mutate's ``_agg_method`` ("window" or "join"; see
+    mutate for the crossover).  Measured (SCALE.md r12 `add_count_hot_*`,
+    10%-hot key, 10M rows): wall parity locally, but the window form
+    shuffles the whole table (103 MB at 10x, one unsplittable hot task)
+    vs 12.7 MB for the join form — pass "join" whenever the key is
+    content-derived or can be hot."""
     if method not in ("window", "join"):
         raise ValueError("method must be 'window' or 'join'")
     work = mutate(tbl, **kwargs) if kwargs else tbl
-    names = list(tbl.group_by)
-    for nm in _names_from_args(args) + list(kwargs):
-        if nm not in names:
-            names.append(nm)
     out_name = name or _fresh_name("n", work.columns)
-    if wt is None:
-        agg = F.count(F.lit(1))
-    else:
-        ctx = work.row_ctx()
-        agg = F.sum(lower(strip_symbolic(wt), ctx)[0])
-    if method == "join" and names:
-        counts = (work.df.groupBy(*[F.col(c) for c in names])
-                  .agg(agg.alias(out_name))
-                  .select(*[F.col(c).alias(f"__ac_{c}") for c in names],
-                          out_name))
-        cond = None
-        for c in names:
-            eq = F.col(c).eqNullSafe(F.col(f"__ac_{c}"))
-            cond = eq if cond is None else (cond & eq)
-        df = (work.df.join(counts, cond, "left")
-              .drop(*[f"__ac_{c}" for c in names])
-              .select(*work.df.columns, out_name))
-        return work.evolve(df=df)
-    w = Window.partitionBy(*[F.col(c) for c in names])
-    df = work.df.withColumn(out_name, agg.over(w))
-    return work.evolve(df=df)
+    out = mutate(work.evolve(group_by=_count_keys(tbl, args, kwargs)),
+                 _agg_method=method, **{out_name: _count_expr(wt)})
+    out = out.evolve(group_by=work.group_by)
+    if sort:
+        out = arrange(out, _desc_fn(GetAttr(MetaArg(), out_name)))
+    return out
 
 
 @verb
@@ -359,16 +332,15 @@ def tally(tbl: SparkTbl, wt=None, sort: bool = False, name: str | None = None):
     """dplyr ``tally``: group sizes over the CURRENT grouping only —
     ``count()`` without introducing new grouping columns (a TODO the
     reference never shipped, siuba/dply/verbs.py:48).  Same wt=/sort=/
-    name-collision semantics as count; same single partial-agg shuffle."""
+    name-collision semantics as count."""
     return count(tbl, wt=wt, sort=sort, name=name)
 
 
 @verb
 def add_tally(tbl: SparkTbl, wt=None, sort: bool = False,
               name: str | None = None, method: str = "window"):
-    """dplyr ``add_tally``: the current group's size joined back as a
-    column (window aggregate by default; ``method="join"`` lowers to the
-    AQE-splittable aggregate+join like add_count)."""
+    """dplyr ``add_tally``: the current group's size added back as a
+    column — ``add_count`` with no new keys."""
     return add_count(tbl, wt=wt, sort=sort, name=name, method=method)
 
 

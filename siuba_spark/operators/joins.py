@@ -59,6 +59,32 @@ def _suffix_shared(ldf, rdf, keys):
     return ldf.withColumnsRenamed(lmap), rdf.withColumnsRenamed(rmap), lmap, rmap
 
 
+def join_back(df, keyed, keys, how: str = "left", broadcast: bool = False):
+    """Join ``keyed`` (``keys`` under df's names plus payload columns)
+    back onto ``df`` with null-safe equality on every key: a NULL key
+    matches a NULL key, the way a groupBy or window partition groups
+    them.  keyed's keys are renamed fresh against both schemas for the
+    join and dropped after, so the result is df's columns followed by
+    the payload.  ``broadcast=True`` hints the keyed side."""
+    taken = set(df.columns) | set(keyed.columns)
+    tmp = {}
+    for k in keys:
+        name = f"__jb_{k}"
+        while name in taken:
+            name = "_" + name
+        taken.add(name)
+        tmp[k] = name
+    side = keyed.select(*[F.col(k).alias(tmp[k]) for k in keys],
+                        *[c for c in keyed.columns if c not in tmp])
+    if broadcast:
+        side = F.broadcast(side)
+    cond = None
+    for k in keys:
+        eq = F.col(k).eqNullSafe(F.col(tmp[k]))
+        cond = eq if cond is None else cond & eq
+    return df.join(side, cond, how).drop(*tmp.values())
+
+
 def _apply_hint(rdf, hint):
     if hint == "broadcast":
         return F.broadcast(rdf)

@@ -127,17 +127,24 @@ def _bq(name):
     return F.col("`" + str(name).replace("`", "``") + "`")
 
 
+def _collect_spec(keys, what="pivot spec", exc=TranslationError):
+    """Collect a distinct key frame for a widening spec, bounded: at most
+    ``MAX_PIVOT_KEYS + 1`` rows reach the driver, and more than
+    ``MAX_PIVOT_KEYS`` raises ``exc``."""
+    rows = keys.limit(MAX_PIVOT_KEYS + 1).collect()
+    if len(rows) > MAX_PIVOT_KEYS:
+        raise exc(
+            f"{what} exceeds {MAX_PIVOT_KEYS} distinct keys; widening "
+            "that far is a driver hazard — aggregate first")
+    return rows
+
+
 def _distinct_keys(df, col):
     """Collect the pivot spec (the reference also requires a collected spec,
     sql_pivot_wide.py:31-38).  The caller should ``persist`` the input
     first — the spec scan and the pivot itself otherwise each recompute the
     full upstream plan."""
-    rows = df.select(col).distinct().limit(MAX_PIVOT_KEYS + 1).collect()
-    if len(rows) > MAX_PIVOT_KEYS:
-        raise TranslationError(
-            f"pivot spec exceeds {MAX_PIVOT_KEYS} distinct keys; pivoting "
-            "that wide is a driver hazard — aggregate first"
-        )
+    rows = _collect_spec(df.select(col).distinct())
     return sorted([r[0] for r in rows], key=lambda v: (v is None, str(v)))
 
 
@@ -808,12 +815,8 @@ def pivot_wider(tbl: SparkTbl, id_cols=None, names_from="name",
         else:
             # one spec scan collects the joined key AND its parts (needed
             # by names_glue) together
-            rows = (work.select("__pw_key", *names_from).distinct()
-                    .limit(MAX_PIVOT_KEYS + 1).collect())
-            if len(rows) > MAX_PIVOT_KEYS:
-                raise TranslationError(
-                    f"pivot spec exceeds {MAX_PIVOT_KEYS} distinct keys; pivoting "
-                    "that wide is a driver hazard — aggregate first")
+            rows = _collect_spec(
+                work.select("__pw_key", *names_from).distinct())
             rows.sort(key=lambda r: (r[0] is None, str(r[0])))
             keys = [r[0] for r in rows]
             parts_by_key = {_key_str(r[0]): tuple(str(p) for p in r[1:]) for r in rows}
@@ -892,11 +895,7 @@ def build_wider_spec(tbl: SparkTbl, names_from="name", values_from="value",
         else [_colname(c) for c in names_from]
     values_from = [_colname(values_from)] if not isinstance(values_from, (list, tuple)) \
         else [_colname(c) for c in values_from]
-    rows = (tbl.df.select(*names_from).distinct()
-            .limit(MAX_PIVOT_KEYS + 1).collect())
-    if len(rows) > MAX_PIVOT_KEYS:
-        raise TranslationError(
-            f"pivot spec exceeds {MAX_PIVOT_KEYS} distinct keys")
+    rows = _collect_spec(tbl.df.select(*names_from).distinct())
     rows.sort(key=lambda r: tuple((v is None, str(v)) for v in r))
     out = []
     for v in values_from:
@@ -1181,15 +1180,10 @@ def unnest_wider(tbl: SparkTbl, col, names_sep: str | None = None):
                for f in dt.fields]
         return tbl.evolve(df=tbl.df.select(*others, *new))
     if isinstance(dt, T.MapType):
-        rows = (tbl.df.select(F.explode(F.map_keys(F.col(name)))
-                              .alias("__k"))
-                .distinct().orderBy("__k")
-                .limit(MAX_PIVOT_KEYS + 1).collect())
-        if len(rows) > MAX_PIVOT_KEYS:
-            raise ValueError(
-                f"unnest_wider: map column {name!r} has more than "
-                f"{MAX_PIVOT_KEYS} distinct keys — widen explicitly or "
-                "unnest_longer instead")
+        rows = _collect_spec(
+            tbl.df.select(F.explode(F.map_keys(F.col(name))).alias("__k"))
+            .distinct().orderBy("__k"),
+            f"unnest_wider: map column {name!r}", ValueError)
         keys = [r["__k"] for r in rows]
         new = [F.element_at(F.col(name), F.lit(k)).alias(f"{pre}{k}")
                for k in keys]

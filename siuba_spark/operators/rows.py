@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..plans.pipe import join_verb, wrap_table
 from ..plans.tbl import SparkTbl
+from .joins import join_back
 
 __all__ = ["rows_insert", "rows_append", "rows_update", "rows_patch",
            "rows_upsert", "rows_delete"]
@@ -48,16 +49,8 @@ def _fresh(base, taken):
 
 def _key_filter(df, other, keys, how):
     """Semi/anti join ``df`` against ``other``'s key set, NULL-safe on
-    every key (NA matches NA).  ``other``'s keys are renamed fresh, so
-    the condition is unambiguous and the output keeps df's schema."""
-    taken = set(df.columns) | set(other.columns)
-    kn = {k: _fresh(f"__k_{k}", taken) for k in keys}
-    ok = other.select(*[F.col(k).alias(kn[k]) for k in keys]).distinct()
-    cond = None
-    for k in keys:
-        c = df[k].eqNullSafe(ok[kn[k]])
-        cond = c if cond is None else cond & c
-    return df.join(ok, cond, how)
+    every key (NA matches NA); the output keeps df's schema."""
+    return join_back(df, other.select(*keys).distinct(), keys, how)
 
 
 def _prep(left, right, by, op):
@@ -137,16 +130,10 @@ def _merge(l, r, keys, op, unmatched, patch_only):
     payload = [c for c in r.df.columns if c not in keys]
     taken = set(l.df.columns) | set(r.df.columns)
     m = _fresh("__m", taken)
-    kn = {k: _fresh(f"__k_{k}", taken) for k in keys}
     yn = {c: _fresh(f"__y_{c}", taken) for c in payload}
-    rdf = r.df.select(*[F.col(k).alias(kn[k]) for k in keys],
-                      F.lit(True).alias(m),
+    rdf = r.df.select(*keys, F.lit(True).alias(m),
                       *[F.col(c).alias(yn[c]) for c in payload])
-    cond = None
-    for k in keys:
-        c = l.df[k].eqNullSafe(rdf[kn[k]])
-        cond = c if cond is None else cond & c
-    out = l.df.join(rdf, cond, "left")
+    out = join_back(l.df, rdf, keys)
     for c in payload:
         y = F.col(yn[c])
         if patch_only:

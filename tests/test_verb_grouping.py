@@ -307,6 +307,16 @@ def test_tally_and_add_tally(spark):
     assert wt[0].n == 5  # sort=True: heaviest first
     at = (t >> group_by(_.g) >> add_tally()).df.orderBy("g", "w").collect()
     assert [r.n for r in at] == [2, 2, 1]
+    # add_count/add_tally(sort=True): heaviest group first at collect,
+    # rows and grouping unchanged
+    for out in (t >> add_count(_.g, wt=_.w, sort=True),
+                t >> group_by(_.g) >> add_tally(wt=_.w, sort=True)):
+        got = out >> collect()
+        assert got.n.tolist() == [5, 3, 3]
+        assert got.g.tolist()[0] == "b"
+    sc = t >> group_by(_.g) >> add_tally(sort=True)
+    assert sc.group_by == ("g",)
+    assert (sc >> collect()).n.tolist() == [2, 2, 1]
 
 
 def test_reframe_multi_quantile(spark):
@@ -398,6 +408,9 @@ def test_mutate_agg_method_join_matches_window(spark):
                >> mutate(dev=(_.x - _.x.mean()).round(6),
                          sd=_.x.std(),
                          nun=_.k.nunique(),
+                         cnt=n(_),
+                         nd=n_distinct(_.k),
+                         nd2=n_distinct(_.k, _.x),
                          _agg_method=method)
                >> ungroup())
         return out.df.orderBy("x").toPandas()
@@ -412,6 +425,21 @@ def test_mutate_agg_method_join_matches_window(spark):
     plan = d._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
     assert "BroadcastHashJoin" in plan
+    # n() follows the knob too: one broadcast agg side, no full-table
+    # window shuffle
+    d = (t >> group_by(_.g)
+         >> mutate(m=_.x.sum() / n(_), _agg_method="broadcast")).df
+    plan = d._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan
+    assert "BroadcastHashJoin" in plan
+
+    # a nondeterministic input is declined by the pool and stays on the
+    # group window instead of becoming an ungrouped plain aggregate
+    from pyspark.sql import functions as F
+    r = (t >> group_by(_.g)
+         >> mutate(nd=n_distinct(F.rand(7) < 2), _agg_method="join")).df
+    assert "Window" in r._jdf.queryExecution().executedPlan().toString()
+    assert r.toPandas().nd.tolist() == [1] * 5
 
     # ordered windows are unaffected by the knob; ungrouped mutate too
     r = (t >> group_by(_.g)

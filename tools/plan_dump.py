@@ -1,8 +1,8 @@
 """Dump .explain("formatted") physical plans for named bench queries to
-plans/r12/<query>_<tag>.txt (the judge checks optimization claims against
+plans/<round>/<query>_<tag>.txt (optimization claims are checked against
 these committed artifacts).
 
-    python tools/plan_dump_r12.py before semantic_dedup,lang_id_ngram [sf_dir]
+    python tools/plan_dump.py r13 before semantic_dedup,lang_id_ngram [sf_dir]
 
 Plan generation is driver-side; queries that run eager driver jobs while
 building (training collects, store writes) do that work but nothing is
@@ -18,9 +18,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main():
-    tag = sys.argv[1]
-    names = sys.argv[2].split(",")
-    sf = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
+    rnd, tag = sys.argv[1], sys.argv[2]
+    names = sys.argv[3].split(",")
+    sf = sys.argv[4] if len(sys.argv) > 4 else "/root/testdata/sf0.1"
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     from pyspark.sql import SparkSession
     spark = (
@@ -42,7 +42,7 @@ def main():
     qs["simhash_prod"] = entry.q_simhash_prod
     qs["minhash_near_dups_prod"] = entry.q_minhash_near_dups_prod
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out_dir = os.path.join(here, "plans", "r12")
+    out_dir = os.path.join(here, "plans", rnd)
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         df = qs[name](spark, sf)
