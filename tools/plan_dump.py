@@ -2,7 +2,7 @@
 plans/<round>/<query>_<tag>.txt (optimization claims are checked against
 these committed artifacts).
 
-    python tools/plan_dump.py r13 before semantic_dedup,lang_id_ngram [sf_dir]
+    python tools/plan_dump.py r13 before semantic_dedup,lang_id_ngram SF_DIR
 
 Plan generation is driver-side; queries that run eager driver jobs while
 building (training collects, store writes) do that work but nothing is
@@ -20,7 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main():
     rnd, tag = sys.argv[1], sys.argv[2]
     names = sys.argv[3].split(",")
-    sf = sys.argv[4] if len(sys.argv) > 4 else "/root/testdata/sf0.1"
+    sf = sys.argv[4]
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     from pyspark.sql import SparkSession
     spark = (
