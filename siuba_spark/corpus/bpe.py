@@ -538,7 +538,8 @@ def bpe_train(tbl, col: str = "text", n_merges: int = 256,
       Heaps' law keeps sublinear in corpus size;
     - the histogram is cut to the top ``max_vocab_words`` words by
       (count desc, word asc) — a deterministic bound whose byte weight
-      is checked against ``MAX_TRAIN_VOCAB_BYTES`` (the same explicit
+      (``max_vocab_words * (max_word_len + 16)``) is checked against
+      ``MAX_TRAIN_VOCAB_BYTES`` before any job runs (the same explicit
       driver-slice contract as the IVF Lloyd trainer) — and merge
       learning runs on those frequencies driver-side, exactly how
       single-node BPE trainers work on a word-count table.  Rare words
@@ -556,6 +557,16 @@ def bpe_train(tbl, col: str = "text", n_merges: int = 256,
         # min_freq=0 would let the trainer emit pairs whose live count
         # already dropped to zero (merged away) — never meaningful
         raise ValueError("min_freq must be >= 1")
+    # the cut is bounded by construction — at most max_vocab_words rows of
+    # <= max_word_len chars plus ~16 bytes of row overhead each — so the
+    # driver guard is checked before any job runs
+    bound = max_vocab_words * (max_word_len + 16)
+    if bound > MAX_TRAIN_VOCAB_BYTES:
+        raise ValueError(
+            f"training vocabulary slice up to ~{bound >> 20} MiB exceeds "
+            f"the {MAX_TRAIN_VOCAB_BYTES >> 20} MiB driver bound; "
+            "lower max_vocab_words (rare-word pair counts are "
+            "negligible)")
     df = tbl.df if isinstance(tbl, SparkTbl) else tbl
     words = F.regexp_extract_all(F.lower(F.col(col)), F.lit(_BPE_RE), 0)
     hist = (df.select(F.explode(words).alias("__w"))
@@ -564,21 +575,10 @@ def bpe_train(tbl, col: str = "text", n_merges: int = 256,
             .filter(F.col("__n") >= min_freq))
     # r13: ONE driver action.  The ordered-limit cut keeps Spark's
     # TakeOrderedAndProject top-K path (no global sort, no single-
-    # partition GlobalLimit); the collect is bounded to max_vocab_words
-    # rows of <= max_word_len chars by construction, so the byte guard
-    # is computed from the collected rows instead of a second aggregate
-    # action (the r12 persist() of the cut materialized it through a
-    # full Sort + GlobalLimit and regressed the gate ~2x).
-    cut = hist.orderBy(F.col("__n").desc(), F.col("__w")) \
-              .limit(max_vocab_words)
-    rows = cut.collect()
-    approx = sum(len(r["__w"]) for r in rows) + 16 * len(rows)
-    if approx > MAX_TRAIN_VOCAB_BYTES:
-        raise ValueError(
-            f"training vocabulary slice ~{approx >> 20} MiB exceeds "
-            f"the {MAX_TRAIN_VOCAB_BYTES >> 20} MiB driver bound; "
-            "lower max_vocab_words (rare-word pair counts are "
-            "negligible)")
+    # partition GlobalLimit); the r12 persist() of the cut materialized
+    # it through a full Sort + GlobalLimit and regressed the gate ~2x.
+    rows = (hist.orderBy(F.col("__n").desc(), F.col("__w"))
+            .limit(max_vocab_words).collect())
     pairs = sorted(((r["__w"], r["__n"]) for r in rows),
                    key=lambda wn: (-wn[1], wn[0]))
     return _train_on_histogram(pairs, n_merges, min_freq)

@@ -633,17 +633,24 @@ def minhash_near_dups(tbl: SparkTbl, col: str = "text", id_col: str = "doc_id",
     sigs = SparkTbl(sigs.df.persist())
     cands = lsh_candidate_pairs(sigs, id_col=id_col, bands=bands, rows=rows,
                                 bucket=bucket)
-    verified = (cands.df
-                .join(sets_.select(F.col(id_col).alias("id_a"),
-                                   F.col("shingles").alias("set_a")), "id_a")
-                .join(sets_.select(F.col(id_col).alias("id_b"),
-                                   F.col("shingles").alias("set_b")), "id_b")
-                .withColumn("jaccard", F.round(
-                    F.size(F.array_intersect("set_a", "set_b"))
-                    / F.size(F.array_union("set_a", "set_b")), 4))
-                .filter(F.col("jaccard") >= threshold)
-                .select("id_a", "id_b", "jaccard"))
+    verified = _jaccard_verify(cands.df, sets_, id_col, threshold)
     return SparkTbl(verified, pins=tbl.pins + (sets_, sigs.df))
+
+
+def _jaccard_verify(cands, sets_, id_col, threshold):
+    """Exact-Jaccard verification of candidate pairs ``(id_a, id_b)``
+    against the ``(id_col, shingles)`` sets: the pairs whose rounded
+    Jaccard clears ``threshold``, as ``(id_a, id_b, jaccard)``."""
+    return (cands
+            .join(sets_.select(F.col(id_col).alias("id_a"),
+                               F.col("shingles").alias("set_a")), "id_a")
+            .join(sets_.select(F.col(id_col).alias("id_b"),
+                               F.col("shingles").alias("set_b")), "id_b")
+            .withColumn("jaccard", F.round(
+                F.size(F.array_intersect("set_a", "set_b"))
+                / F.size(F.array_union("set_a", "set_b")), 4))
+            .filter(F.col("jaccard") >= threshold)
+            .select("id_a", "id_b", "jaccard"))
 
 
 @verb
@@ -867,16 +874,7 @@ def minhash_near_dups_incremental(
     all_sets = new_side.select(id_col, "shingles") if store_df is None else \
         new_side.select(id_col, "shingles").unionByName(
             store_df.select(id_col, "shingles"))
-    verified = (cands
-                .join(all_sets.select(F.col(id_col).alias("id_a"),
-                                      F.col("shingles").alias("set_a")), "id_a")
-                .join(all_sets.select(F.col(id_col).alias("id_b"),
-                                      F.col("shingles").alias("set_b")), "id_b")
-                .withColumn("jaccard", F.round(
-                    F.size(F.array_intersect("set_a", "set_b"))
-                    / F.size(F.array_union("set_a", "set_b")), 4))
-                .filter(F.col("jaccard") >= threshold)
-                .select("id_a", "id_b", "jaccard"))
+    verified = _jaccard_verify(cands, all_sets, id_col, threshold)
     new_store = new_side if store_df is None else \
         store_df.select(id_col, "shingles", "minhash").unionByName(new_side)
     return (SparkTbl(verified, pins=tbl.pins + (sets_, new_side)),

@@ -151,15 +151,13 @@ def _canon_host(host):
     return F.lower(F.regexp_replace(host, r"\.$", ""))
 
 
-def registrable_domain_expr(host, rules: PSLRules):
-    """Registrable domain of ``host`` under ``rules`` as one pure
-    codegen CASE chain.  NULL and IPv4-literal hosts pass through; so
-    does a host that is itself a public suffix (see module docstring).
-    ``try_element_at`` keeps short hosts NULL-safe under ANSI mode, and
-    a too-short ``lastk`` probe can never spuriously match (its dot
-    count is below the rule's)."""
-    host = _canon_host(host)
-    parts = F.split(host, r"\.")
+def _psl_case(host, parts, rules: PSLRules):
+    """The PSL ``CASE`` chain over a canonical ``host`` column and its
+    label array ``parts`` — the one lowering behind both
+    :func:`registrable_domain_expr` and
+    :func:`attach_registrable_domain`.  ``try_element_at`` keeps short
+    hosts NULL-safe under ANSI mode, and a too-short ``lastk`` probe can
+    never spuriously match (its dot count is below the rule's)."""
     n = F.size(parts)
 
     def lastk(k):
@@ -193,15 +191,24 @@ def registrable_domain_expr(host, rules: PSLRules):
     return expr.otherwise(keep(1))
 
 
+def registrable_domain_expr(host, rules: PSLRules):
+    """Registrable domain of ``host`` under ``rules`` as one pure
+    codegen CASE chain.  NULL and IPv4-literal hosts pass through; so
+    does a host that is itself a public suffix (see module docstring)."""
+    host = _canon_host(host)
+    return _psl_case(host, F.split(host, r"\."), rules)
+
+
 # compiled-CASE cache for attach_registrable_domain: the PSL CASE over
-# the FIXED temp column names depends only on the rules object (stable —
-# load_default_rules lru-caches it), and building it costs ~0.9 s of
-# pure driver/py4j time (one Literal round-trip per suffix name; ~470
-# names in the default set).  A Column is an unresolved expression AST,
-# reusable across DataFrames and queries within the same JVM gateway —
-# cache it per (rules, gateway) so every PSL consumer after the first
-# pays ~0 driver time (VERDICT r12 item 7).  Keyed on the gateway too:
-# a restarted JVM invalidates old JavaObjects.
+# the FIXED temp column names depends only on the rules, and building it
+# costs ~0.9 s of pure driver/py4j time (one Literal round-trip per
+# suffix name; ~470 names in the default set).  A Column is an
+# unresolved expression AST, reusable across DataFrames and queries
+# within the same JVM gateway — cache it per (rules, gateway) so every
+# PSL consumer after the first pays ~0 driver time (VERDICT r12 item 7).
+# Keyed on the frozen PSLRules VALUE, not its id(): a recycled id must
+# never serve another rule set's CASE.  Keyed on the gateway too: a
+# restarted JVM invalidates old JavaObjects.
 _CASE_CACHE: dict = {}
 
 
@@ -228,40 +235,12 @@ def attach_registrable_domain(df, host, out: str, rules: PSLRules):
     h, p = "__psl_h", "__psl_p"
     df = (df.withColumn(h, _canon_host(host))
           .withColumn(p, F.split(F.col(h), r"\.")))
-    key = (id(rules), _gateway_key())
-    cached = _CASE_CACHE.get(key)
-    if cached is not None:
-        return df.withColumn(out, cached).drop(h, p)
-    parts = F.col(p)
-    n = F.size(parts)
-
-    def lastk(k):
-        return F.concat_ws(".", *[F.try_element_at(parts, F.lit(-i))
-                                  for i in range(k, 0, -1)])
-
-    hc = F.col(h)
-
-    def keep(depth):
-        return F.when(n >= depth + 1, lastk(depth + 1)).otherwise(hc)
-
-    expr = F.when(hc.isNull() | hc.rlike(_IP_RE), hc)
-    for k, names in sorted(rules.exc, reverse=True):
-        expr = expr.when(lastk(k).isin(*sorted(names)), lastk(k))
-    wild = dict(rules.wild)
-    norm = dict(rules.norm)
-    for d in range(rules.max_suffix_depth, 1, -1):
-        cond = None
-        if d - 1 in wild:
-            c = lastk(d - 1).isin(*sorted(wild[d - 1])) & (n >= d)
-            cond = c if cond is None else (cond | c)
-        if d in norm:
-            c = lastk(d).isin(*sorted(norm[d]))
-            cond = c if cond is None else (cond | c)
-        if cond is not None:
-            expr = expr.when(cond, keep(d))
-    case = expr.otherwise(keep(1))
-    _CASE_CACHE.clear()     # one live gateway; stale entries are dead
-    _CASE_CACHE[key] = case
+    key = (rules, _gateway_key())
+    case = _CASE_CACHE.get(key)
+    if case is None:
+        case = _psl_case(F.col(h), F.col(p), rules)
+        _CASE_CACHE.clear()     # one live gateway; stale entries are dead
+        _CASE_CACHE[key] = case
     return df.withColumn(out, case).drop(h, p)
 
 

@@ -1,12 +1,21 @@
 """Similarity search over embedding columns (array<float>).
 
-Brute-force cosine top-k as the correctness baseline (broadcast the small
-query side — the corpus side streams, no shuffle), and an LSH
-(random-hyperplane) bucketed variant as the scale path: at 100 TB the
-bucket join touches only colliding candidates instead of |Q|×|N| pairs.
+Nearest neighbours: exact cosine ``brute_force_topk`` (the correctness
+baseline: the small query side is broadcast, the corpus streams),
+random-hyperplane LSH ``lsh_topk``, IVF cells ``ivf_topk`` (k-means,
+smallest-id sample or replayable Lloyd quantizers), and product
+quantization ``pq_topk`` / ``ivf_pq_topk``.  Pair scoring and dedup:
+``cosine_near_dups`` and SemDeDup ``semantic_dedup`` with its
+incremental store and compaction; plus ``assign_clusters``,
+``vector_mean`` and int8 (de)quantization.
 
-Dot products run through ``F.zip_with`` + ``F.aggregate`` — JVM-side
-folds, no Python UDF, vectorizable by codegen.
+Every verb is built from one set of private kernels — the side
+projection ``_side_cols``, the rounded cosine ``_cosine_score``, the
+squared-distance fold ``_d2``, the first-index ``_argmin``, the PQ
+codes / tables / ADC sum, the smallest-id ``_head_vectors`` sample and
+the ``_ranked`` top-k (ties to the smaller id) — whose fold orders and
+tie-breaks the DuckDB oracles replay bit for bit.  Folds run through
+``F.zip_with`` + ``F.aggregate``: JVM-side, no Python UDF.
 """
 
 from __future__ import annotations
@@ -15,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..plans.pipe import verb
+from ..plans.pipe import verb, wrap_table
 from ..plans.tbl import SparkTbl
 
 __all__ = ["cosine_sim_col", "brute_force_topk", "lsh_topk", "add_hyperplane_bucket",
@@ -23,6 +32,10 @@ __all__ = ["cosine_sim_col", "brute_force_topk", "lsh_topk", "add_hyperplane_buc
            "semantic_dedup", "semantic_dedup_incremental",
            "semantic_store_compact", "vector_mean", "assign_clusters",
            "quantize_embeddings", "dequantize_embeddings"]
+
+#: ``(id, vector, squared norm)`` names of the corpus and query sides
+_NBR = ("nbr_id", "nbr_vec", "__nn")
+_QRY = ("query_id", "query_vec", "__qn")
 
 
 def _dot(a, b):
@@ -48,12 +61,24 @@ def _norm_sq(a):
     return _dot(ad, ad)
 
 
+def _side_cols(id_col, vec_col, names):
+    """``(id, vector, squared norm)`` columns named ``names`` for one
+    side of a pair-scoring join: the vector is cast to array<double> and
+    its norm folded once per ROW, so the pair score (``_cosine_score``)
+    needs no per-pair cast."""
+    v = F.col(vec_col)
+    return [F.col(id_col).alias(names[0]), _to_double(v).alias(names[1]),
+            _norm_sq(v).alias(names[2])]
+
+
 def _cosine_pre(a, b, na_sq, nb_sq):
-    """``_cosine_from_parts`` for operands ALREADY cast to
-    array<double> at the row level: skips the per-PAIR ``_to_double``
-    transform (two fresh 64-element arrays per candidate — measured
-    ~15% of the pair-scoring stage even on double inputs, more on
-    float).  Same floats, same folds — bit-identical scores.
+    """Cosine of two vectors ALREADY cast to array<double> at the row
+    level, with their squared norms folded once per row
+    (``_side_cols``): dot / sqrt(na²·nb²), the same floats as
+    ``cosine_sim_col`` without its per-PAIR ``_to_double`` transforms
+    (two fresh 64-element arrays per candidate — measured ~15% of the
+    pair-scoring stage even on double inputs, more on float).
+    try_divide: zero-norm vectors score NULL, never an ANSI error.
 
     r12 negative result (recorded so it is not retried): unrolling the
     dot to a flat codegen-able ``((0.0 + a0*b0) + a1*b1) + ...`` chain
@@ -69,14 +94,50 @@ def _cosine_pre(a, b, na_sq, nb_sq):
     return F.try_divide(_dot(a, b), F.sqrt(na_sq * nb_sq))
 
 
-def _cosine_from_parts(a, b, na_sq, nb_sq):
-    """Same expression as ``cosine_sim_col`` (dot / sqrt(na²·nb²), bit-for-
-    bit identical floats) but with the norms precomputed once per ROW
-    instead of once per PAIR — zip_with/aggregate folds are interpreted,
-    not codegen'd, so at |pairs| ≫ |rows| this is the dominant cost.
-    try_divide: zero-norm vectors score NULL, never an ANSI error."""
-    return F.try_divide(_dot(_to_double(a), _to_double(b)),
-                        F.sqrt(na_sq * nb_sq))
+def _cosine_score(a, b, round_to):
+    """Rounded ``_cosine_pre`` of a pair whose sides ``a`` and ``b`` are
+    ``(id, vector, squared norm)`` column-name triples."""
+    return F.round(_cosine_pre(F.col(a[1]), F.col(b[1]),
+                               F.col(a[2]), F.col(b[2])), round_to)
+
+
+def _d2(a, b):
+    """Squared euclidean distance of two double arrays as an ordered left
+    fold, so an independent SQL engine (DuckDB list_transform +
+    list_reduce) reproduces the exact double."""
+    return F.aggregate(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+                       F.lit(0.0), lambda acc, x: acc + x)
+
+
+def _argmin(d2s):
+    """0-based index of the smallest distance in ``d2s``, the first index
+    on ties; NULL when no distance is defined."""
+    return (F.array_position(d2s, F.array_min(d2s)) - 1).cast("int")
+
+
+def _ranked(df, k, key, tie, rk="rk", desc=False):
+    """The first ``k`` rows of each ``query_id`` by ``key`` (descending
+    for a similarity, ascending for a distance), ties to the smaller
+    ``tie``, numbered 1..k in ``rk`` — the ranking behind every top-k
+    result and IVF probe list."""
+    order = F.col(key).desc() if desc else F.col(key).asc()
+    w = Window.partitionBy("query_id").orderBy(order, F.col(tie).asc())
+    return df.withColumn(rk, F.row_number().over(w)).filter(F.col(rk) <= k)
+
+
+def _topk(scored, k, key, desc=False):
+    """``(query_id, nbr_id, key, rk)``: each query's ``k`` best
+    neighbours, deterministic across engines and partitionings."""
+    return (_ranked(scored, k, key, "nbr_id", desc=desc)
+            .select("query_id", "nbr_id", key, "rk"))
+
+
+def _head_vectors(df, id_col, vec_col, n):
+    """The ``n`` smallest-id vectors as float lists (the sample/lloyd
+    seeds and PQ codebooks): a bounded eager collect of n rows."""
+    rows = (df.orderBy(F.col(id_col).asc()).limit(n)
+            .select(_to_double(F.col(vec_col)).alias("__c")).collect())
+    return [[float(x) for x in r["__c"]] for r in rows]
 
 
 @verb
@@ -87,25 +148,12 @@ def brute_force_topk(tbl: SparkTbl, queries, k: int = 10,
 
     Deterministic tie-break by corpus id so results are stable across
     engines and partitionings."""
-    # vectors cast to double ONCE per row here — pair scoring then runs
-    # the raw fold (_cosine_pre), not a per-pair cast
-    corpus = tbl.df.select(F.col(id_col).alias("nbr_id"),
-                           _to_double(F.col(vec_col)).alias("nbr_vec"),
-                           _norm_sq(F.col(vec_col)).alias("__nn"))
-    qdf = queries.df if isinstance(queries, SparkTbl) else queries
-    qdf = qdf.select(F.col(id_col).alias("query_id"),
-                     _to_double(F.col(vec_col)).alias("query_vec"),
-                     _norm_sq(F.col(vec_col)).alias("__qn"))
+    corpus = tbl.df.select(*_side_cols(id_col, vec_col, _NBR))
+    qdf = wrap_table(queries).df.select(*_side_cols(id_col, vec_col, _QRY))
     scored = (corpus.join(F.broadcast(qdf),
                           F.col("query_id") != F.col("nbr_id"))
-              .withColumn("score", F.round(_cosine_pre(
-                  F.col("query_vec"), F.col("nbr_vec"),
-                  F.col("__qn"), F.col("__nn")), round_to)))
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("nbr_id").asc())
-    out = (scored.withColumn("rk", F.row_number().over(w))
-           .filter(F.col("rk") <= k)
-           .select("query_id", "nbr_id", "score", "rk"))
-    return SparkTbl(out)
+              .withColumn("score", _cosine_score(_QRY, _NBR, round_to)))
+    return SparkTbl(_topk(scored, k, "score", desc=True))
 
 
 def _lloyd_train_local(vecs, cents, n_lists, n_iters):
@@ -227,7 +275,7 @@ def lsh_topk(tbl: SparkTbl, queries, k: int = 10, id_col: str = "vec_id",
     cosine so each surviving pair is scored once.  At 100 TB the join
     shuffles on (table, bucket) — candidate volume scales with
     n_tables · |bucket|², never |corpus|²."""
-    qtbl = queries if isinstance(queries, SparkTbl) else SparkTbl(queries)
+    qtbl = wrap_table(queries)
     if dim is None:
         # sniff from the (small) query side once; the corpus side stays lazy
         dim = len(qtbl.df.select(vec_col).first()[0])
@@ -240,26 +288,15 @@ def lsh_topk(tbl: SparkTbl, queries, k: int = 10, id_col: str = "vec_id",
         qt = add_hyperplane_bucket(qt, vec_col=vec_col, n_planes=n_planes,
                                    out=out_c, seed=seed + 97 * ti, dim=dim)
         bcols.append(out_c)
-    corpus = bt.df.select(F.col(id_col).alias("nbr_id"),
-                          _to_double(F.col(vec_col)).alias("nbr_vec"),
-                          _norm_sq(F.col(vec_col)).alias("__nn"),
-                          F.posexplode(F.array(*bcols)).alias("tbl_i", "bucket"))
-    qdf = qt.df.select(F.col(id_col).alias("query_id"),
-                       _to_double(F.col(vec_col)).alias("query_vec"),
-                       _norm_sq(F.col(vec_col)).alias("__qn"),
-                       F.posexplode(F.array(*bcols)).alias("tbl_i", "bucket"))
+    tables = F.posexplode(F.array(*bcols)).alias("tbl_i", "bucket")
+    corpus = bt.df.select(*_side_cols(id_col, vec_col, _NBR), tables)
+    qdf = qt.df.select(*_side_cols(id_col, vec_col, _QRY), tables)
     cand = (corpus.join(F.broadcast(qdf), ["tbl_i", "bucket"])
             .filter(F.col("query_id") != F.col("nbr_id")))
     if n_tables > 1:
         cand = cand.dropDuplicates(["query_id", "nbr_id"])
-    scored = cand.withColumn("score", F.round(_cosine_pre(
-        F.col("query_vec"), F.col("nbr_vec"),
-        F.col("__qn"), F.col("__nn")), round_to))
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("nbr_id").asc())
-    out = (scored.withColumn("rk", F.row_number().over(w))
-           .filter(F.col("rk") <= k)
-           .select("query_id", "nbr_id", "score", "rk"))
-    return SparkTbl(out)
+    scored = cand.withColumn("score", _cosine_score(_QRY, _NBR, round_to))
+    return SparkTbl(_topk(scored, k, "score", desc=True))
 
 
 @verb
@@ -277,28 +314,19 @@ def cosine_near_dups(tbl: SparkTbl, threshold: float = 0.9,
     cartesian product.  Near-identical vectors agree on every hyperplane
     sign, so recall at dedup-grade thresholds (>=0.9) stays high; the
     exact cosine afterwards keeps precision at 1."""
+    sa, sb = ("id_a", "vec_a", "__na"), ("id_b", "vec_b", "__nb")
     if method == "lsh":
         bt = add_hyperplane_bucket(tbl, vec_col=vec_col, n_planes=n_planes,
                                    dim=dim)
-        a = bt.df.select(F.col(id_col).alias("id_a"),
-                         _to_double(F.col(vec_col)).alias("vec_a"),
-                         F.col("bucket"), _norm_sq(F.col(vec_col)).alias("__na"))
-        b = bt.df.select(F.col(id_col).alias("id_b"),
-                         _to_double(F.col(vec_col)).alias("vec_b"),
-                         F.col("bucket"), _norm_sq(F.col(vec_col)).alias("__nb"))
+        # (id, vec, bucket, norm): the bucket sits inside the side
+        a, b = [bt.df.select(i, v, F.col("bucket"), n) for i, v, n in
+                (_side_cols(id_col, vec_col, s) for s in (sa, sb))]
         pairs = a.join(b, ["bucket"]).filter(F.col("id_a") < F.col("id_b"))
     else:
-        a = tbl.df.select(F.col(id_col).alias("id_a"),
-                          _to_double(F.col(vec_col)).alias("vec_a"),
-                          _norm_sq(F.col(vec_col)).alias("__na"))
-        b = tbl.df.select(F.col(id_col).alias("id_b"),
-                          _to_double(F.col(vec_col)).alias("vec_b"),
-                          _norm_sq(F.col(vec_col)).alias("__nb"))
+        a, b = [tbl.df.select(*_side_cols(id_col, vec_col, s))
+                for s in (sa, sb)]
         pairs = a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
-    out = (pairs
-           .withColumn("score", F.round(_cosine_pre(
-               F.col("vec_a"), F.col("vec_b"),
-               F.col("__na"), F.col("__nb")), round_to))
+    out = (pairs.withColumn("score", _cosine_score(sa, sb, round_to))
            .filter(F.col("score") >= threshold)
            .select("id_a", "id_b", "score"))
     return SparkTbl(out)
@@ -325,14 +353,12 @@ def _assign_cells(df, cents, vec_col):
     cannot move below the generator, so it stays a test on the column."""
     cpk = df.sparkSession.createDataFrame(
         [(cents,)], "__cents: array<array<double>>")
-    d2 = F.transform(F.col("__cents"), lambda c: F.aggregate(
-        F.zip_with(F.col("__vd"), c, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda acc, x: acc + x))
-    cell = (F.array_position("__d2", F.array_min("__d2")) - 1).cast("int")
+    d2 = F.transform(F.col("__cents"), lambda c: _d2(F.col("__vd"), c))
     return (df.crossJoin(F.broadcast(cpk))
             .withColumn("__vd", _to_double(F.col(vec_col)))
             .withColumn("__d2", d2)
-            .select("*", F.explode(F.array(cell)).alias("__cell"))
+            .select("*", F.explode(F.array(_argmin(F.col("__d2"))))
+                    .alias("__cell"))
             .drop("__cents", "__d2"))
 
 
@@ -340,18 +366,13 @@ def _cells_and_centers(tbl, id_col, vec_col, n_lists, centroids,
                        n_iters, seed, train_limit):
     """Coarse-quantizer training + full-corpus cell assignment — the
     shared front half of ``ivf_topk`` and ``semantic_dedup``.  Returns
-    ``(assigned, centers)``: ``assigned`` has columns (nbr_id, nbr_vec,
-    __nn, __cell); ``centers`` is a [(cell, center_vec)] list (tiny,
-    broadcastable).  See ivf_topk's docstring for the three centroids
+    ``(assigned, cents)``: ``assigned`` has columns (nbr_id, nbr_vec,
+    __nn, __cell); ``cents`` lists the center vectors, cell i at index i
+    (tiny, broadcastable).  See ivf_topk's docstring for the three centroids
     modes and their oracle-replayability contracts."""
     if centroids in ("sample", "lloyd"):
         if centroids == "sample":
-            # bounded eager probe: n_lists rows collected (same class of
-            # collected-spec job as pivot's key discovery)
-            rows = (tbl.df.orderBy(F.col(id_col).asc()).limit(n_lists)
-                    .select(_to_double(F.col(vec_col)).alias("__c"))
-                    .collect())
-            cents = [[float(x) for x in r["__c"]] for r in rows]
+            cents = _head_vectors(tbl.df, id_col, vec_col, n_lists)
         else:
             # train on the first-N-by-id slice only: corpus-size-free
             if train_limit is None:
@@ -399,15 +420,12 @@ def _cells_and_centers(tbl, id_col, vec_col, n_lists, centroids,
                              .collect()),
                             key=lambda r: r["__i"])
                 vecs = [[float(x) for x in r["__v"]] for r in vrows]
-                cents = vecs[:n_lists]
-                cents = _lloyd_train_local(vecs, cents, n_lists, n_iters)
+                cents = _lloyd_train_local(vecs, vecs[:n_lists], n_lists,
+                                           n_iters)
             elif head:
                 # large-slice path: seeds = first n_lists by id (its own
                 # bounded collect; the slice itself stays distributed)
-                rows = (tbl.df.orderBy(F.col(id_col).asc()).limit(n_lists)
-                        .select(_to_double(F.col(vec_col)).alias("__c"))
-                        .collect())
-                cents = [[float(x) for x in r["__c"]] for r in rows]
+                cents = _head_vectors(tbl.df, id_col, vec_col, n_lists)
                 cut = (tbl.df.select(F.col(id_col).alias("__i"))
                        .orderBy(F.col("__i").asc()).limit(train_limit)
                        .agg(F.max("__i")).collect()[0][0])
@@ -434,7 +452,6 @@ def _cells_and_centers(tbl, id_col, vec_col, n_lists, centroids,
                 train.unpersist()
             else:
                 cents = []          # empty table: no centroids to train
-        centers = list(enumerate(cents))
         # nbr_vec emitted as array<double> — every consumer (ivf scoring,
         # semantic pair join) folds on it; casting once per row here
         # replaces a per-pair cast downstream
@@ -453,16 +470,13 @@ def _cells_and_centers(tbl, id_col, vec_col, n_lists, centroids,
         model = KMeans(k=n_lists, seed=seed, featuresCol="__feat") \
             .fit(corpus_f.select("__feat"))
         assigned = (model.transform(corpus_f)
-                    .select(F.col(id_col).alias("nbr_id"),
-                            _to_double(F.col(vec_col)).alias("nbr_vec"),
-                            _norm_sq(F.col(vec_col)).alias("__nn"),
+                    .select(*_side_cols(id_col, vec_col, _NBR),
                             F.col("prediction").alias("__cell")))
-        centers = [(i, [float(x) for x in c])
-                   for i, c in enumerate(model.clusterCenters())]
+        cents = [[float(x) for x in c] for c in model.clusterCenters()]
     else:
         raise ValueError(f"unknown centroids mode: {centroids!r}")
 
-    return assigned, centers
+    return assigned, cents
 
 
 @verb
@@ -503,45 +517,65 @@ def ivf_topk(tbl: SparkTbl, queries, k: int = 10, id_col: str = "vec_id",
     and the candidate join shuffles on the cell id — per-query work is
     |corpus| * n_probes / n_lists instead of |corpus|."""
     spark = tbl.df.sparkSession
-    assigned, centers = _cells_and_centers(
+    assigned, cents = _cells_and_centers(
         tbl, id_col, vec_col, n_lists, centroids, n_iters, seed, train_limit)
 
     # tiny (n_lists × dim) centroid table → broadcast against the queries
-    cdf = spark.createDataFrame(centers, ["__cell", "__center"])
+    cdf = spark.createDataFrame(list(enumerate(cents)), ["__cell", "__center"])
 
-    qdf = queries.df if isinstance(queries, SparkTbl) else queries
-    qdf = qdf.select(F.col(id_col).alias("query_id"),
-                     _to_double(F.col(vec_col)).alias("query_vec"),
-                     _norm_sq(F.col(vec_col)).alias("__qn"))
-    dist = F.sqrt(F.aggregate(
-        F.zip_with(F.col("query_vec"), F.col("__center"),
-                   lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda acc, x: acc + x))
-    wq = Window.partitionBy("query_id").orderBy(F.col("__dist").asc(), F.col("__cell").asc())
-    probes = (qdf.crossJoin(F.broadcast(cdf))
-              .withColumn("__dist", dist)
-              .withColumn("__pr", F.row_number().over(wq))
-              .filter(F.col("__pr") <= n_probes)
+    qdf = wrap_table(queries).df.select(*_side_cols(id_col, vec_col, _QRY))
+    dist = F.sqrt(_d2(F.col("query_vec"), F.col("__center")))
+    probes = (_ranked(qdf.crossJoin(F.broadcast(cdf)).withColumn("__dist", dist),
+                      n_probes, "__dist", "__cell", rk="__pr")
               .select("query_id", "query_vec", "__qn", "__cell"))
 
     scored = (assigned.join(F.broadcast(probes), "__cell")
               .filter(F.col("query_id") != F.col("nbr_id"))
-              .withColumn("score", F.round(_cosine_pre(
-                  F.col("query_vec"), F.col("nbr_vec"),
-                  F.col("__qn"), F.col("__nn")), round_to)))
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("nbr_id").asc())
-    out = (scored.withColumn("rk", F.row_number().over(w))
-           .filter(F.col("rk") <= k)
-           .select("query_id", "nbr_id", "score", "rk"))
-    return SparkTbl(out)
+              .withColumn("score", _cosine_score(_QRY, _NBR, round_to)))
+    return SparkTbl(_topk(scored, k, "score", desc=True))
 
 
-def _sub_d2(a_slice, anchor):
-    """Squared euclidean distance of a subspace slice against a literal
-    anchor sub-vector: ordered left fold, so an independent SQL engine
-    (DuckDB list_transform + list_reduce) reproduces the exact double."""
-    return F.aggregate(F.zip_with(a_slice, anchor, lambda x, y: (x - y) * (x - y)),
-                       F.lit(0.0), lambda acc, x: acc + x)
+def _pq_books(head, n_head, n_subspaces, n_codes, who):
+    """PQ codebooks from the smallest-id ``head`` vectors:
+    ``(books, d)`` where ``books[m][c]`` is anchor c's slice for
+    subspace m (n_subspaces × n_codes × d floats)."""
+    if len(head) < n_head:
+        raise ValueError(f"{who}: corpus has fewer than {n_head} rows")
+    dim = len(head[0])
+    if dim % n_subspaces:
+        raise ValueError(
+            f"{who}: dim {dim} not divisible by n_subspaces {n_subspaces}")
+    d = dim // n_subspaces
+    return [[v[m * d:(m + 1) * d] for v in head[:n_codes]]
+            for m in range(n_subspaces)], d
+
+
+def _pq_d2s(v, bk, m, d):
+    """Distances of subspace ``m`` of ``v`` to every anchor of ``bk``."""
+    return F.transform(bk, lambda anc: _d2(
+        F.slice(v, m * F.lit(d) + 1, F.lit(d)), anc))
+
+
+def _pq_codes(v, d):
+    """Corpus encoding: per subspace, the nearest anchor of the broadcast
+    ``__books`` (first index on ties)."""
+    return F.transform(F.col("__books"),
+                       lambda bk, m: _argmin(_pq_d2s(v, bk, m, d)))
+
+
+def _pq_table(v, d):
+    """A query's n_subspaces × n_codes distance table, computed once."""
+    return F.transform(F.col("__books"), lambda bk, m: _pq_d2s(v, bk, m, d))
+
+
+def _adc(round_to):
+    """Asymmetric distance of a (``__qtab``, ``__codes``) pair: the
+    ordered sum over subspaces of the table entry the code picks —
+    O(n_subspaces) lookups per pair."""
+    return F.round(F.aggregate(
+        F.zip_with(F.col("__qtab"), F.col("__codes"),
+                   lambda trow, code: F.element_at(trow, code + 1)),
+        F.lit(0.0), lambda acc, x: acc + x), round_to)
 
 
 @verb
@@ -573,63 +607,29 @@ def pq_topk(tbl: SparkTbl, queries, k: int = 10, id_col: str = "vec_id",
     squared distance, ties broken by nbr_id.
     """
     spark = tbl.df.sparkSession
-
-    # bounded eager probe: n_codes anchor rows (collected-spec class)
-    rows = (tbl.df.orderBy(F.col(id_col).asc()).limit(n_codes)
-            .select(_to_double(F.col(vec_col)).alias("__c")).collect())
-    if len(rows) < n_codes:
-        raise ValueError(f"pq_topk: corpus has fewer than {n_codes} rows")
-    dim = len(rows[0]["__c"])
-    if dim % n_subspaces:
-        raise ValueError(
-            f"pq_topk: dim {dim} not divisible by n_subspaces {n_subspaces}")
-    d = dim // n_subspaces
-    # books[m][c] = anchor c's slice for subspace m  (n_subspaces × n_codes × d)
-    books = [[[float(x) for x in r["__c"][m * d:(m + 1) * d]]
-              for r in rows] for m in range(n_subspaces)]
+    books, d = _pq_books(_head_vectors(tbl.df, id_col, vec_col, n_codes),
+                         n_codes, n_subspaces, n_codes, "pq_topk")
     bpk = (spark.createDataFrame([(books,)],
                                  "__books: array<array<array<double>>>")
            .withColumn("__jk", F.lit(1)))
 
     # -- encode the corpus: one map pass, argmin per subspace ---------------
     vd = _to_double(F.col(vec_col))
-
-    def _codes(col):
-        return F.transform(
-            F.col("__books"),
-            lambda bk, m: (lambda d2s: (F.array_position(
-                d2s, F.array_min(d2s)) - 1).cast("int"))(
-                F.transform(bk, lambda anc: _sub_d2(
-                    F.slice(col, m * F.lit(d) + 1, F.lit(d)), anc))))
-
     corpus = (tbl.df.withColumn("__jk", F.lit(1)).join(F.broadcast(bpk), "__jk")
               .select(F.col(id_col).alias("nbr_id"),
-                      _codes(vd).alias("__codes")))
+                      _pq_codes(vd, d).alias("__codes")))
 
     # -- per-query distance TABLE (n_subspaces × n_codes), computed once ----
-    qdf = queries.df if isinstance(queries, SparkTbl) else queries
-    qd = _to_double(F.col(vec_col))
-    qtab = F.transform(
-        F.col("__books"),
-        lambda bk, m: F.transform(bk, lambda anc: _sub_d2(
-            F.slice(qd, m * F.lit(d) + 1, F.lit(d)), anc)))
-    qenc = (qdf.withColumn("__jk", F.lit(1)).join(F.broadcast(bpk), "__jk")
+    qtab = _pq_table(_to_double(F.col(vec_col)), d)
+    qenc = (wrap_table(queries).df.withColumn("__jk", F.lit(1))
+            .join(F.broadcast(bpk), "__jk")
             .select(F.col(id_col).alias("query_id"), qtab.alias("__qtab")))
 
     # -- ADC: O(n_subspaces) lookups per pair, ordered fold -----------------
-    adist = F.round(F.aggregate(
-        F.zip_with(F.col("__qtab"), F.col("__codes"),
-                   lambda trow, code: F.element_at(trow, code + 1)),
-        F.lit(0.0), lambda acc, x: acc + x), round_to)
     scored = (corpus.join(F.broadcast(qenc),
                           F.col("query_id") != F.col("nbr_id"))
-              .withColumn("adist", adist))
-    w = Window.partitionBy("query_id").orderBy(F.col("adist").asc(),
-                                               F.col("nbr_id").asc())
-    out = (scored.withColumn("rk", F.row_number().over(w))
-           .filter(F.col("rk") <= k)
-           .select("query_id", "nbr_id", "adist", "rk"))
-    return SparkTbl(out)
+              .withColumn("adist", _adc(round_to)))
+    return SparkTbl(_topk(scored, k, "adist"))
 
 
 @verb
@@ -659,74 +659,37 @@ def ivf_pq_topk(tbl: SparkTbl, queries, k: int = 10, id_col: str = "vec_id",
     squared distance, ties by nbr_id.
     """
     spark = tbl.df.sparkSession
-
-    head = (tbl.df.orderBy(F.col(id_col).asc()).limit(max(n_lists, n_codes))
-            .select(_to_double(F.col(vec_col)).alias("__c")).collect())
-    if len(head) < max(n_lists, n_codes):
-        raise ValueError(
-            f"ivf_pq_topk: corpus has fewer than {max(n_lists, n_codes)} rows")
-    dim = len(head[0]["__c"])
-    if dim % n_subspaces:
-        raise ValueError(
-            f"ivf_pq_topk: dim {dim} not divisible by n_subspaces {n_subspaces}")
-    d = dim // n_subspaces
-    cents = [[float(x) for x in head[i]["__c"]] for i in range(n_lists)]
-    books = [[[float(x) for x in head[c]["__c"][m * d:(m + 1) * d]]
-              for c in range(n_codes)] for m in range(n_subspaces)]
+    n_head = max(n_lists, n_codes)
+    head = _head_vectors(tbl.df, id_col, vec_col, n_head)
+    books, d = _pq_books(head, n_head, n_subspaces, n_codes, "ivf_pq_topk")
     pk = (spark.createDataFrame(
-        [(cents, books)],
+        [(head[:n_lists], books)],
         "__cents: array<array<double>>, __books: array<array<array<double>>>")
         .withColumn("__jk", F.lit(1)))
 
-    def _full_d2(vcol, cent):
-        return F.aggregate(F.zip_with(vcol, cent, lambda x, y: (x - y) * (x - y)),
-                           F.lit(0.0), lambda acc, x: acc + x)
-
     # -- one corpus pass: cell id + PQ codes --------------------------------
     vd = _to_double(F.col(vec_col))
-    cd2 = F.transform(F.col("__cents"), lambda c: _full_d2(vd, c))
-    cell = (F.array_position(cd2, F.array_min(cd2)) - 1).cast("int")
-    codes = F.transform(
-        F.col("__books"),
-        lambda bk, m: (lambda d2s: (F.array_position(
-            d2s, F.array_min(d2s)) - 1).cast("int"))(
-            F.transform(bk, lambda anc: _sub_d2(
-                F.slice(vd, m * F.lit(d) + 1, F.lit(d)), anc))))
+    cell = _argmin(F.transform(F.col("__cents"), lambda c: _d2(vd, c)))
     corpus = (tbl.df.withColumn("__jk", F.lit(1)).join(F.broadcast(pk), "__jk")
               .select(F.col(id_col).alias("nbr_id"), cell.alias("__cell"),
-                      codes.alias("__codes")))
+                      _pq_codes(vd, d).alias("__codes")))
 
     # -- query side: probe cells + PQ distance table ------------------------
-    qdf = queries.df if isinstance(queries, SparkTbl) else queries
     qd = _to_double(F.col(vec_col))
-    qtab = F.transform(
-        F.col("__books"),
-        lambda bk, m: F.transform(bk, lambda anc: _sub_d2(
-            F.slice(qd, m * F.lit(d) + 1, F.lit(d)), anc)))
-    qbase = (qdf.withColumn("__jk", F.lit(1)).join(F.broadcast(pk), "__jk")
-             .select(F.col(id_col).alias("query_id"), qtab.alias("__qtab"),
+    qbase = (wrap_table(queries).df.withColumn("__jk", F.lit(1))
+             .join(F.broadcast(pk), "__jk")
+             .select(F.col(id_col).alias("query_id"),
+                     _pq_table(qd, d).alias("__qtab"),
                      F.posexplode(F.transform(
-                         F.col("__cents"), lambda c: _full_d2(qd, c)))
+                         F.col("__cents"), lambda c: _d2(qd, c)))
                      .alias("__cell", "__cd2")))
-    wq = Window.partitionBy("query_id").orderBy(F.col("__cd2").asc(),
-                                                F.col("__cell").asc())
-    probes = (qbase.withColumn("__pr", F.row_number().over(wq))
-              .filter(F.col("__pr") <= n_probes)
+    probes = (_ranked(qbase, n_probes, "__cd2", "__cell", rk="__pr")
               .select("query_id", "__qtab", "__cell"))
 
-    adist = F.round(F.aggregate(
-        F.zip_with(F.col("__qtab"), F.col("__codes"),
-                   lambda trow, code: F.element_at(trow, code + 1)),
-        F.lit(0.0), lambda acc, x: acc + x), round_to)
     scored = (corpus.join(F.broadcast(probes), "__cell")
               .filter(F.col("query_id") != F.col("nbr_id"))
-              .withColumn("adist", adist))
-    w = Window.partitionBy("query_id").orderBy(F.col("adist").asc(),
-                                               F.col("nbr_id").asc())
-    out = (scored.withColumn("rk", F.row_number().over(w))
-           .filter(F.col("rk") <= k)
-           .select("query_id", "nbr_id", "adist", "rk"))
-    return SparkTbl(out)
+              .withColumn("adist", _adc(round_to)))
+    return SparkTbl(_topk(scored, k, "adist"))
 
 
 def _spread_cells(df):
@@ -800,7 +763,7 @@ def _pair_blocks(spark, n_lists):
     return max(1, min(8, math.isqrt(max(0, 2 * p - 1) // n_lists) + 1))
 
 
-def _block_pair_sides(a, b, id_a, id_b, n_lists):
+def _block_pair_sides(a, b, id_col, n_lists):
     """Attach fragment-replicate block columns to the two sides of an
     intra-cell pair join.  Side ``a`` keeps its own id-hash block as
     ``__pba`` and replicates across all ``__pbb`` values; side ``b``
@@ -813,13 +776,22 @@ def _block_pair_sides(a, b, id_a, id_b, n_lists):
     if s <= 1:
         return a, b, []
     blocks = F.explode(F.array(*[F.lit(j) for j in range(s)]))
-    a = (a.withColumn("__pba",
-                      F.pmod(F.xxhash64(F.col(id_a)), F.lit(s)).cast("int"))
-         .withColumn("__pbb", blocks))
-    b = (b.withColumn("__pbb",
-                      F.pmod(F.xxhash64(F.col(id_b)), F.lit(s)).cast("int"))
-         .withColumn("__pba", blocks))
+    block = F.pmod(F.xxhash64(F.col(id_col)), F.lit(s)).cast("int")
+    a = a.withColumn("__pba", block).withColumn("__pbb", blocks)
+    b = b.withColumn("__pbb", block).withColumn("__pba", blocks)
     return a, b, ["__pba", "__pbb"]
+
+
+def _cell_join(a, b, id_col, n_lists, *conds):
+    """``a`` (alias ``l``) joined to ``b`` (alias ``r``) on ``__cell``
+    and ``conds``: both inputs spread over the cores (``_spread_cells``),
+    and split into fragment-replicate blocks when cells are too few to
+    fill them (``_block_pair_sides``)."""
+    a, b, bk = _block_pair_sides(a, b, id_col, n_lists)
+    cond = [F.col("l.__cell") == F.col("r.__cell"), *conds]
+    cond += [F.col(f"l.{k}") == F.col(f"r.{k}") for k in bk]
+    return _spread_cells(a).alias("l").join(_spread_cells(b).alias("r"),
+                                            cond)
 
 
 def _cell_pair_join(side, id_col, n_lists):
@@ -833,15 +805,10 @@ def _cell_pair_join(side, id_col, n_lists):
     ``ReusedExchange``.  At ``s > 1`` the two sides carry different
     fragment-replicate block columns and each is computed."""
     cols = [c for c in side.columns if c != "__cell"]
-    a, b, bk = _block_pair_sides(side, side, id_col, id_col, n_lists)
-    cond = F.col("__x.__cell") == F.col("__y.__cell")
-    for k in bk:
-        cond = cond & (F.col(f"__x.{k}") == F.col(f"__y.{k}"))
-    joined = _spread_cells(a).alias("__x").join(
-        _spread_cells(b).alias("__y"), cond)
-    return (joined.filter(F.col(f"__x.{id_col}") < F.col(f"__y.{id_col}"))
-            .select(*[F.col(f"__x.{c}").alias(f"{c}_a") for c in cols],
-                    *[F.col(f"__y.{c}").alias(f"{c}_b") for c in cols]))
+    return (_cell_join(side, side, id_col, n_lists)
+            .filter(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
+            .select(*[F.col(f"l.{c}").alias(f"{c}_a") for c in cols],
+                    *[F.col(f"r.{c}").alias(f"{c}_b") for c in cols]))
 
 
 def _int8_prefiltered_pairs(assigned, threshold, round_to,
@@ -938,16 +905,11 @@ def _int8_prefiltered_pairs(assigned, threshold, round_to,
     # _spread_cells).  AQE still runtime-converts to broadcast from the
     # TRUE materialized sizes when the surviving pair set is small — the
     # SemDeDup regime — without ever recomputing the subtree.
-    va = assigned.select(F.col("nbr_id").alias("id_a"),
-                         F.col("nbr_vec").alias("vec_a"),
-                         F.col("__nn").alias("__na")).hint("SHUFFLE_MERGE")
-    vb = assigned.select(F.col("nbr_id").alias("id_b"),
-                         F.col("nbr_vec").alias("vec_b"),
-                         F.col("__nn").alias("__nb")).hint("SHUFFLE_MERGE")
+    sa, sb = ("id_a", "vec_a", "__na"), ("id_b", "vec_b", "__nb")
+    va, vb = [assigned.select(*[F.col(c).alias(n) for c, n in zip(_NBR, s)])
+              .hint("SHUFFLE_MERGE") for s in (sa, sb)]
     return (survivors.join(va, ["id_a"]).join(vb, ["id_b"])
-            .withColumn("score", F.round(_cosine_pre(
-                F.col("vec_a"), F.col("vec_b"),
-                F.col("__na"), F.col("__nb")), round_to))
+            .withColumn("score", _cosine_score(sa, sb, round_to))
             .filter(F.col("score") >= threshold)
             .select("id_a", "id_b", "score"))
 
@@ -992,7 +954,7 @@ def semantic_dedup(tbl: SparkTbl, threshold: float = 0.95,
     proven by the no-false-drops bound (tests + the shared oracle)."""
     if prefilter not in (None, "int8"):
         raise ValueError(f"unknown prefilter {prefilter!r}")
-    assigned, _centers = _cells_and_centers(
+    assigned, _cents = _cells_and_centers(
         tbl, id_col, vec_col, n_lists, centroids, n_iters, seed, train_limit)
     if prefilter == "int8":
         pairs = _int8_prefiltered_pairs(assigned, threshold, round_to,
@@ -1002,9 +964,9 @@ def semantic_dedup(tbl: SparkTbl, threshold: float = 0.95,
                                F.col("nbr_vec").alias("vec"),
                                F.col("__nn").alias("n"), "__cell")
         pairs = (_cell_pair_join(side, "id", n_lists)
-                 .withColumn("score", F.round(_cosine_pre(
-                     F.col("vec_a"), F.col("vec_b"),
-                     F.col("n_a"), F.col("n_b")), round_to))
+                 .withColumn("score", _cosine_score(
+                     ("id_a", "vec_a", "n_a"), ("id_b", "vec_b", "n_b"),
+                     round_to))
                  .filter(F.col("score") >= threshold)
                  .select("id_a", "id_b", "score"))
     from .dedup import drop_near_dups
@@ -1052,10 +1014,9 @@ def semantic_dedup_incremental(
 
     Contract: ids are globally unique across snapshots."""
     if store is None:
-        assigned, centers = _cells_and_centers(
+        assigned, cents = _cells_and_centers(
             tbl, id_col, vec_col, n_lists, centroids, n_iters, seed,
             train_limit)
-        cents = [c for _i, c in centers]
         new_asg = assigned.select(
             F.col("nbr_id").alias(id_col), F.col("nbr_vec").alias(vec_col),
             "__nn", "__cell")
@@ -1070,7 +1031,7 @@ def semantic_dedup_incremental(
         new_asg = (_assign_cells(tbl.df, cents, vec_col)
                    .select(F.col(id_col), vd.alias(vec_col),
                            _dot(vd, vd).alias("__nn"), "__cell"))
-        store_df = store.df if isinstance(store, SparkTbl) else store
+        store_df = wrap_table(store).df
 
     # r13: the snapshot's assignment is consumed TWICE here (pair-join
     # left side + the store union) and the returned store feeds every
@@ -1088,17 +1049,13 @@ def semantic_dedup_incremental(
     nb = new_asg.withColumn("__new", F.lit(True))
     all_b = nb if store_df is None else \
         nb.unionByName(store_df.withColumn("__new", F.lit(False)))
-    nb2, all2, bk = _block_pair_sides(nb, all_b, id_col, id_col, n_lists)
-    l, r = _spread_cells(nb2).alias("l"), _spread_cells(all2).alias("r")
-    cond = [F.col("l.__cell") == F.col("r.__cell"),
-            (~F.col("r.__new"))
-            | (F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))]
-    cond += [F.col(f"l.{k}") == F.col(f"r.{k}") for k in bk]
-    pairs = (l.join(r, cond)
+    pairs = (_cell_join(nb, all_b, id_col, n_lists,
+                        (~F.col("r.__new"))
+                        | (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")))
              .filter(F.col(f"l.{id_col}") != F.col(f"r.{id_col}"))
-             .withColumn("score", F.round(_cosine_pre(
-                 F.col(f"l.{vec_col}"), F.col(f"r.{vec_col}"),
-                 F.col("l.__nn"), F.col("r.__nn")), round_to))
+             .withColumn("score", _cosine_score(
+                 *[(f"{t}.{id_col}", f"{t}.{vec_col}", f"{t}.__nn")
+                   for t in "lr"], round_to))
              .filter(F.col("score") >= threshold)
              .select(F.least(F.col(f"l.{id_col}"),
                              F.col(f"r.{id_col}")).alias("id_a"),
@@ -1156,7 +1113,7 @@ def semantic_store_compact(store, id_col: str = "vec_id",
 
     Returns ``(new_store, new_cents, did_compact)``; ``new_cents`` is
     ``None`` when no compaction ran."""
-    store_df = store.df if isinstance(store, SparkTbl) else store
+    store_df = wrap_table(store).df
     if p99_limit is not None:
         sizes = (store_df.groupBy("__cell").count()
                  .agg(F.expr("percentile(count, 0.99)")).first()[0])
@@ -1165,7 +1122,7 @@ def semantic_store_compact(store, id_col: str = "vec_id",
     corpus = SparkTbl(store_df.select(id_col, vec_col))
     if n_lists is None:
         n_lists = max(16, int(store_df.count() ** 0.5))
-    assigned, centers = _cells_and_centers(
+    assigned, cents = _cells_and_centers(
         corpus, id_col, vec_col, n_lists, centroids, n_iters, seed,
         train_limit)
     new_store = assigned.select(
@@ -1176,9 +1133,8 @@ def semantic_store_compact(store, id_col: str = "vec_id",
     # as the incremental path above)
     if not new_store.isStreaming:
         new_store = new_store.persist()
-        return (SparkTbl(new_store).pin(new_store),
-                [c for _i, c in centers], True)
-    return SparkTbl(new_store), [c for _i, c in centers], True
+        return SparkTbl(new_store).pin(new_store), cents, True
+    return SparkTbl(new_store), cents, True
 
 
 @verb
@@ -1202,7 +1158,7 @@ def assign_clusters(tbl: SparkTbl, n_clusters: int = 16,
     argmin distance in place, no join key, no shuffle.  The kmeans mode
     joins MLlib's own predictions back on ``id_col`` (one AQE-sized
     narrow join) so the assignment is exactly the model's."""
-    assigned, centers = _cells_and_centers(
+    assigned, cents = _cells_and_centers(
         tbl, id_col, vec_col, n_clusters, centroids, n_iters, seed,
         train_limit)
     if centroids == "kmeans":
@@ -1212,7 +1168,7 @@ def assign_clusters(tbl: SparkTbl, n_clusters: int = 16,
               .join(cells, F.col(id_col) == F.col("__aid"), "left")
               .drop("__aid"))
         return tbl.evolve(df=df)
-    df = (_assign_cells(tbl.df.drop(out), [c for _i, c in centers], vec_col)
+    df = (_assign_cells(tbl.df.drop(out), cents, vec_col)
           .drop("__vd").withColumnRenamed("__cell", out))
     return tbl.evolve(df=df)
 

@@ -251,13 +251,9 @@ def _ranked_grams(df, part_col, col, n, k, single_shuffle=False):
 
     rows = _char_ngram_rows(df, part_col, col, n)
     if single_shuffle:
-        spark = df.sparkSession
-        try:
-            conf_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except Exception:
-            conf_p = 0
-        p = max(conf_p, spark.sparkContext.defaultParallelism)
-        rows = rows.repartition(p, part_col)
+        from .similarity import _spread_parallelism
+        rows = rows.repartition(_spread_parallelism(df.sparkSession),
+                                part_col)
     rows = rows.groupBy(part_col, "__g").agg(F.count(F.lit(1)).alias("__cnt"))
     w = (Window.partitionBy(part_col)
          .orderBy(F.col("__cnt").desc(), F.col("__g").asc()))

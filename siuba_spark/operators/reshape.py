@@ -121,6 +121,30 @@ def _key_str(k):
     return str(k)
 
 
+def _concat_key(parts, sep):
+    """The ``concat_ws(sep, *names_from)`` pivot key of typed name parts:
+    ``_key_str`` names, NULL parts skipped."""
+    return sep.join(_key_str(p) for p in parts if p is not None)
+
+
+def _wide_name(key, parts, v, names_prefix, names_sep, names_glue):
+    """Output column name of one widened key — the one naming rule of
+    ``pivot_wider`` and ``build_wider_spec``.  ``key`` is the key's pivot
+    name (``_key_str``, or ``_concat_key`` for several names_from),
+    ``parts`` its name parts as ``_key_str`` names, ``v`` the value
+    column when several are widened (else None).  ``names_glue`` fills
+    ``{variable}``/``{value}`` from the first two name parts, like the
+    reference's ``_collapse_index_names`` (pivot_wide.py:48-61), and is
+    ignored for a single part."""
+    if names_glue is not None and len(parts) + (v is not None) > 1:
+        if v is not None:
+            return names_glue.format(variable=v, value=parts[0])
+        return names_glue.format(variable=parts[0], value=parts[1])
+    if v is not None:
+        return f"{names_prefix}{v}{names_sep}{key}"
+    return f"{names_prefix}{key}"
+
+
 def _bq(name):
     """Backtick-quoted column ref: plain ``df.select(name)`` parses dots
     as struct access, so pivot keys like '1.5' need escaping."""
@@ -819,21 +843,14 @@ def pivot_wider(tbl: SparkTbl, id_cols=None, names_from="name",
                 work.select("__pw_key", *names_from).distinct())
             rows.sort(key=lambda r: (r[0] is None, str(r[0])))
             keys = [r[0] for r in rows]
-            parts_by_key = {_key_str(r[0]): tuple(str(p) for p in r[1:]) for r in rows}
+            parts_by_key = {_key_str(r[0]): tuple(_key_str(p) for p in r[1:])
+                            for r in rows}
         work = work.drop(*names_from)
     key_strs = [_key_str(k) for k in keys]
 
     def tidy_name(ks, v=None):
-        parts = parts_by_key[ks]
-        n_parts = len(parts) + (1 if v is not None else 0)
-        if names_glue is not None and n_parts > 1:
-            if v is not None:
-                return names_glue.format(variable=v, value=parts[0])
-            return names_glue.format(variable=parts[0],
-                                     value=parts[1] if len(parts) > 1 else "")
-        if v is not None:
-            return f"{names_prefix}{v}{names_sep}{ks}"
-        return f"{names_prefix}{ks}"
+        return _wide_name(ks, parts_by_key[ks], v, names_prefix, names_sep,
+                          names_glue)
 
     key_name = names_from[0] if len(names_from) == 1 else "__pw_key"
     if len(values_from) == 1:
@@ -900,19 +917,10 @@ def build_wider_spec(tbl: SparkTbl, names_from="name", values_from="value",
     out = []
     for v in values_from:
         for r in rows:
-            parts = tuple(str(p) for p in r)
-            key = names_sep.join(parts)
-            if names_glue is not None and (len(values_from) > 1 or len(names_from) > 1):
-                if len(values_from) > 1:
-                    name = names_glue.format(variable=v, value=parts[0])
-                else:
-                    name = names_glue.format(
-                        variable=parts[0],
-                        value=parts[1] if len(parts) > 1 else "")
-            elif len(values_from) > 1:
-                name = f"{names_prefix}{v}{names_sep}{key}"
-            else:
-                name = f"{names_prefix}{key}"
+            parts = tuple(_key_str(p) for p in r)
+            key = parts[0] if len(r) == 1 else _concat_key(r, names_sep)
+            name = _wide_name(key, parts, v if len(values_from) > 1 else None,
+                              names_prefix, names_sep, names_glue)
             out.append({".name": name, ".value": v,
                         **dict(zip(names_from, r))})
     return pd.DataFrame(out)
@@ -939,33 +947,36 @@ def pivot_wider_spec(tbl: SparkTbl, spec, id_cols=None, values_fill=None,
     else:
         fn_for = {v: _agg_fn(values_fn) for v in values_from}
 
+    recs = spec.to_dict("records")
+
+    def typed(x):       # pandas holds a NULL key as None or NaN
+        return None if x is None or (isinstance(x, float) and x != x) else x
+
     if len(names_from) == 1:
-        work = tbl.df
-        key_name = names_from[0]
-        key_of = lambda r: str(r[key_name])  # noqa: E731
+        work, key_name = tbl.df, names_from[0]
+        key_of = lambda r: typed(r[key_name])  # noqa: E731
     else:
         key_name = "__pw_key"
         work = tbl.df.withColumn(key_name, F.concat_ws(names_sep, *names_from)) \
             .drop(*names_from)
-        key_of = lambda r: names_sep.join(str(r[c]) for c in names_from)  # noqa: E731
-    keys = sorted({key_of(r) for r in spec.to_dict("records")})
-
-    if len(values_from) == 1:
-        v0 = values_from[0]
-        df = work.groupBy(*ids).pivot(key_name, keys).agg(fn_for[v0](F.col(v0)))
-        rename = {key_of(r): r[".name"] for r in spec.to_dict("records")}
-    else:
-        aggs = [fn_for[v](F.col(v)).alias(v) for v in values_from]
-        df = work.groupBy(*ids).pivot(key_name, keys).agg(*aggs)
-        rename = {f"{key_of(r)}_{r['.value']}": r[".name"]
-                  for r in spec.to_dict("records")}
-    out_names = list(rename.values())
-    df = df.withColumnsRenamed({k: v for k, v in rename.items() if k != v})
-    # spec may deliberately omit keys the pivot produced — drop those
-    keep = ids + out_names
-    df = df.select(*[c for c in df.columns if c in keep])
+        key_of = lambda r: _concat_key(  # noqa: E731
+            [typed(r[c]) for c in names_from], names_sep)
+    # pivot on the typed keys (a NULL key is its own column, as in
+    # pivot_wider); the pivot emits one column per (key, value) after the
+    # ids, key-major, and each spec row picks its column by position and
+    # names it — output in spec row order
+    keys = sorted({key_of(r) for r in recs}, key=lambda k: (k is None, str(k)))
+    cells = [(k, v) for k in keys for v in values_from]
+    df = (work.groupBy(*ids).pivot(key_name, keys)
+          .agg(*[fn_for[v](F.col(v)).alias(v) for v in values_from])
+          .toDF(*ids, *[f"__pw{i}" for i in range(len(cells))]))
+    pos = {c: f"__pw{i}" for i, c in enumerate(cells)}
+    names = [r[".name"] for r in recs]
+    df = df.select(*[_bq(c) for c in ids],
+                   *[F.col(pos[(key_of(r), r[".value"])]).alias(r[".name"])
+                     for r in recs])
     if values_fill is not None:
-        df = df.fillna(values_fill, subset=out_names)
+        df = df.fillna(values_fill, subset=names)
     return SparkTbl(df)
 
 

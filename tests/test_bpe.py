@@ -338,6 +338,33 @@ def test_bpe_train_driver_bound_enforced(spark):
         bpe_mod.MAX_TRAIN_VOCAB_BYTES = old
 
 
+def test_bpe_train_byte_guard_fires_before_any_job(spark, monkeypatch):
+    """The training cut is bounded by construction (max_vocab_words rows
+    of <= max_word_len chars + 16 bytes each), so a bound below that
+    raises before the histogram job runs — even on a tiny corpus — and
+    a bound at it trains normally."""
+    import uuid
+
+    import siuba_spark.corpus.bpe as bpe_mod
+    t = tbl(spark.createDataFrame([(0, "aa aa bb")],
+                                  "doc_id long, text string"))
+    kw = dict(min_freq=1, max_vocab_words=100, max_word_len=8)
+    bound = 100 * (8 + 16)
+    sc = spark.sparkContext
+    group = f"bpe-guard-{uuid.uuid4().hex}"
+    monkeypatch.setattr(bpe_mod, "MAX_TRAIN_VOCAB_BYTES", bound - 1)
+    sc.setJobGroup(group, "bpe_train byte guard")
+    try:
+        with pytest.raises(ValueError, match="driver bound"):
+            bpe_mod.bpe_train(t, **kw)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    monkeypatch.setattr(bpe_mod, "MAX_TRAIN_VOCAB_BYTES", bound)
+    assert bpe_mod.bpe_train(t, n_merges=1, **kw) == [("a", "a")]
+
+
 def test_bpe_train_truncation_matches_apply(spark):
     """Words longer than max_word_len train on the SAME truncated form
     the apply tiers tokenize, so train/apply stay consistent."""

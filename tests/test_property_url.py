@@ -163,3 +163,21 @@ def test_psl_two_stage_lowering_equals_single_expression(spark, hosts):
     out = df.toPandas()
     for h, d1, d2 in zip(out.host, out.d1, out.d2):
         assert d1 == d2, h
+
+
+def test_psl_case_cache_serves_each_rule_set_its_own_case(spark, monkeypatch):
+    """The compiled-CASE cache must not key on ``id(rules)``: a recycled
+    id would serve a stale CASE built for another rule set.  With every
+    id() forced equal, two different rule sets still get their own
+    domains."""
+    from siuba_spark.corpus import psl
+
+    monkeypatch.setattr(psl, "id", lambda _obj: 0, raising=False)
+    monkeypatch.setattr(psl, "_CASE_CACHE", {})
+    hosts = ["www.shop.co.uk", "a.b.example.com"]
+    df = spark.createDataFrame([(h,) for h in hosts], "host string")
+    for text in ("co.uk\n", "example.com\n"):
+        rules = psl.parse_psl(text)
+        got = psl.attach_registrable_domain(df, F.col("host"), "d", rules)
+        assert ({r.host: r.d for r in got.collect()}
+                == {h: psl.registrable_domain_py(h, rules) for h in hosts})

@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 from siuba_spark import filter, tbl, _
 from siuba_spark.corpus.similarity import brute_force_topk, pq_topk
 
+from .conftest import SF_ORACLE
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -87,6 +89,26 @@ def test_ivf_pq_probes_widen_candidates(emb):
     w = wide.sort_values(["query_id", "rk"]).reset_index(drop=True)
     f = full.sort_values(["query_id", "rk"]).reset_index(drop=True)
     assert (w.nbr_id == f.nbr_id).all() and (w.adist == f.adist).all()
+
+
+def test_single_cell_ivf_verbs_equal_their_flat_twins(spark):
+    """With one cell probed, the IVF verbs reduce to their flat twins —
+    same candidates, same score / ADC kernels, same top-k rule with the
+    nbr_id tie-break — so the results must match row for row."""
+    from siuba_spark.corpus.similarity import ivf_pq_topk, ivf_topk
+    emb = tbl(spark, f"{SF_ORACLE}/embeddings.parquet")
+    q = emb >> filter(_.vec_id < 5)
+
+    def rows(t):
+        return sorted(map(tuple, t.df.collect()))
+
+    pq = rows(pq_topk(emb, q, k=10))
+    assert len(pq) == 50
+    assert rows(ivf_pq_topk(emb, q, k=10, n_lists=1, n_probes=1)) == pq
+    exact = rows(brute_force_topk(emb, q, k=10))
+    assert len(exact) == 50
+    assert rows(ivf_topk(emb, q, k=10, n_lists=1, n_probes=1,
+                         centroids="sample")) == exact
 
 
 def test_cosine_zero_norm_vector_is_null_not_error(spark):

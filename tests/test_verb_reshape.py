@@ -265,6 +265,33 @@ def test_build_wider_spec_and_pivot_wider_spec(spark):
     assert sorted(out2.columns) == ["id", "only_x"]
     assert sorted(out2["only_x"]) == [1, 3]
 
+    def rows(df):
+        return sorted(map(tuple, df.toPandas().astype(object)
+                          .where(lambda d: d.notna(), None).values.tolist()),
+                      key=str)
+
+    # a NULL key and boolean keys: the spec names and pivots them exactly
+    # as pivot_wider does (Spark's names null/true/false, typed keys)
+    nk = data_frame(spark, id=[1, 1, 2], k=["a", None, "b"], v=[10, 11, 12])
+    bk = data_frame(spark, id=[1, 1, 2], k=[True, False, True], v=[1, 2, 3])
+    two = data_frame(spark, id=[1, 1, 2], k=["a", None, "b"],
+                     j=[True, True, False], v=[10, 11, 12])
+    vw = data_frame(spark, id=[1, 1, 2], k=["a", None, "a"], v=[1, 2, 3],
+                    w=[4, 5, 6])
+    for src, names, values, want in [
+            (nk, "k", "v", ["a", "b", "null"]),
+            (bk, "k", "v", ["false", "true"]),
+            (two, ["k", "j"], "v", ["a_true", "b_false", "true"]),
+            (vw, "k", ["v", "w"], ["v_a", "v_null", "w_a", "w_null"])]:
+        spec = build_wider_spec(src, names_from=names, values_from=values)
+        assert spec[".name"].tolist() == want
+        got = (src >> pivot_wider_spec(spec)).df
+        ref = (src >> pivot_wider(names_from=names, values_from=values)).df
+        assert got.columns == ref.columns == ["id"] + want
+        assert rows(got) == rows(ref)
+    got = (nk >> pivot_wider_spec(build_wider_spec(nk, "k", "v"))).df
+    assert {r.id: r["null"] for r in got.collect()} == {1: 11, 2: None}
+
 
 def test_pivot_longer_names_transform(spark):
     t = data_frame(spark, id=[1], wk1=[10], wk2=[20])
