@@ -3,16 +3,24 @@ nest, unnest, expand, complete, pivot_longer, pivot_wider, bind_rows.
 
 Spark-first implementations (reference semantics from
 siuba/dply/verbs.py:1919-2543 and siuba/experimental/pivot/*):
-wide→long uses an explode of an array of structs (one shuffle-free
-projection); long→wide uses ``groupBy().pivot()`` (Spark's native pivot
-does map-side partial aggregation).  ``pivot_wider``/``spread`` must learn
-the distinct key values first — the reference has the same constraint
-(sql_pivot_wide.py:31-38); we cap the collected spec to guard the driver.
+wide→long is one shuffle-free explode of an array of structs
+(``_pivot_longer_impl``; ``gather`` is its one-part case).  Long→wide is
+one spec path: ``_wider_cells`` lists the output cells from ONE bounded
+distinct scan of the names_from columns (more than ``MAX_PIVOT_KEYS``
+keys raise before they reach the driver; the reference collects its spec
+too, sql_pivot_wide.py:31-38), and ``_widen`` is the one grouped pivot
+(Spark's native pivot does map-side partial aggregation).  pivot_wider,
+build_wider_spec, pivot_wider_spec, spread, crosstab and one_hot all go
+through that spec.
 """
 
 from __future__ import annotations
 
+import math
 import re
+from datetime import datetime
+from decimal import Decimal
+from itertools import product
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -62,21 +70,13 @@ def gather(tbl: SparkTbl, key: str = "key", value: str = "value", *args,
            drop_na: bool = False, convert: bool = False):
     """Wide→long (reference: siuba/dply/verbs.py:1919-2000).  Measure
     selection is full tidyselect — ``-_.id`` / ``~_.id`` ("everything
-    except") work like the reference's gather doc examples."""
+    except") work like the reference's gather doc examples.  Duplicate
+    output names are not checked (``names_repair="minimal"``)."""
     measure = resolve_measure_names(args, tbl.columns) if args else [
         c for c in tbl.columns if c not in tbl.group_by
     ]
-    ids = [c for c in tbl.columns if c not in measure]
-    vtype = _common_value_type(tbl.df, measure)
-    pairs = F.array(*[
-        F.struct(F.lit(c).alias(key), F.col(c).cast(vtype).alias(value))
-        for c in measure
-    ])
-    df = (tbl.df
-          .withColumn("__kv", F.explode(pairs))
-          .select(*ids, F.col("__kv")[key].alias(key), F.col("__kv")[value].alias(value)))
-    if drop_na:
-        df = df.filter(F.col(value).isNotNull())
+    df = _pivot_longer_impl(tbl, [(c, {key: c}) for c in measure], (key,),
+                            value, drop_na, "minimal").df
     if isinstance(convert, str):
         # explicit target dtype: fully lazy, no probe job
         df = df.withColumn(value, F.col(value).try_cast(convert))
@@ -108,16 +108,43 @@ def _agg_fn(fn):
     raise TranslationError(f"unknown values_fn {fn!r}")
 
 
+def _value_aggs(values_fn, values_from):
+    """``{value column: aggregate Column}``: ``values_fn`` is one
+    aggregate, or a dict with one per values_from column."""
+    fns = values_fn if isinstance(values_fn, dict) else dict.fromkeys(
+        values_from, values_fn)
+    missing = [v for v in values_from if v not in fns]
+    if missing:
+        raise ValueError(f"values_fn dict is missing entries for {missing}")
+    return {v: _agg_fn(fns[v])(F.col(v)) for v in values_from}
+
+
+def _wider_ids(tbl, id_cols, names_from, values_from):
+    if id_cols is None:
+        return [c for c in tbl.columns if c not in names_from + values_from]
+    return resolve_names(id_cols if isinstance(id_cols, (list, tuple))
+                         else [id_cols], tbl.columns)
+
+
 def _key_str(k):
-    """The column name Spark's pivot gives a key value: Scala toString —
-    None → 'null', booleans lowercase.  Using str() here broke NULL and
-    boolean keys (the rename/select targeted nonexistent columns)."""
+    """The text Spark gives a key value (its pivot column name, and its
+    string cast inside ``concat_ws``): None → 'null', booleans lowercase,
+    finite doubles like Java's ``Double.toString`` ('1.0E-4'), timestamp
+    fractions without trailing zeros.  Python's ``str()`` differs, so a
+    joined key built with it misses the data's."""
     if k is None:
         return "null"
     if k is True:
         return "true"
     if k is False:
         return "false"
+    if isinstance(k, float) and math.isfinite(k) and not (
+            k == 0 or 1e-3 <= abs(k) < 1e7):
+        sign, digits, exp = Decimal(repr(float(k))).normalize().as_tuple()
+        d = "".join(map(str, digits))
+        return f"{'-' * sign}{d[0]}.{d[1:] or '0'}E{len(d) - 1 + exp}"
+    if isinstance(k, datetime) and k.microsecond:
+        return str(k).rstrip("0")
     return str(k)
 
 
@@ -129,7 +156,7 @@ def _concat_key(parts, sep):
 
 def _wide_name(key, parts, v, names_prefix, names_sep, names_glue):
     """Output column name of one widened key — the one naming rule of
-    ``pivot_wider`` and ``build_wider_spec``.  ``key`` is the key's pivot
+    the widening spec (``_wider_cells``).  ``key`` is the key's pivot
     name (``_key_str``, or ``_concat_key`` for several names_from),
     ``parts`` its name parts as ``_key_str`` names, ``v`` the value
     column when several are widened (else None).  ``names_glue`` fills
@@ -163,13 +190,68 @@ def _collect_spec(keys, what="pivot spec", exc=TranslationError):
     return rows
 
 
-def _distinct_keys(df, col):
-    """Collect the pivot spec (the reference also requires a collected spec,
-    sql_pivot_wide.py:31-38).  The caller should ``persist`` the input
-    first — the spec scan and the pivot itself otherwise each recompute the
-    full upstream plan."""
-    rows = _collect_spec(df.select(col).distinct())
-    return sorted([r[0] for r in rows], key=lambda v: (v is None, str(v)))
+def _wider_cells(tbl, work, names_from, values_from, names_prefix="",
+                 names_sep="_", names_glue=None, names_vary="fastest",
+                 names_expand=False):
+    """The widening spec: ``[(typed name parts, value column, output
+    name)]`` in output column order, from ONE bounded distinct scan of
+    ``names_from`` over ``work``.  One names_from sorts NULL last, then by
+    declared factor level (functions/cat.py ledger), then by ``str``;
+    several sort by ``_concat_key``, or with ``names_expand`` cross each
+    part's levels from that scan (reference: pivot_wide.py:486-488)."""
+    rows = [tuple(r) for r in _collect_spec(work.select(*names_from).distinct())]
+    if len(names_from) == 1:
+        meta = tbl.factors.get(names_from[0])
+        levels = meta.levels if meta is not None and meta.levels is not None else ()
+        pos = {v: i for i, v in enumerate(levels)}
+        rows.sort(key=lambda r: (r[0] is None, pos.get(r[0], len(pos)), str(r[0])))
+    elif names_expand:
+        rows = list(product(*[
+            sorted({r[i] for r in rows}, key=lambda v: (v is None, str(v)))
+            for i in range(len(names_from))]))
+        if len(rows) > MAX_PIVOT_KEYS:
+            raise TranslationError(
+                f"names_expand grid exceeds {MAX_PIVOT_KEYS} keys")
+    else:
+        rows.sort(key=lambda r: _concat_key(r, names_sep))
+
+    def cell(parts, v):
+        strs = tuple(_key_str(p) for p in parts)
+        key = strs[0] if len(parts) == 1 else _concat_key(parts, names_sep)
+        return (parts, v, _wide_name(key, strs, v if len(values_from) > 1 else None,
+                                     names_prefix, names_sep, names_glue))
+
+    if names_vary == "fastest":
+        return [cell(r, v) for v in values_from for r in rows]
+    return [cell(r, v) for r in rows for v in values_from]
+
+
+def _widen(work, ids, names_from, names_sep, cells, aggs):
+    """The one long→wide lowering of ``cells`` (see ``_wider_cells``),
+    ``aggs`` mapping each value column to its aggregate Column: ONE pivot
+    on the typed key (``concat_ws`` of several names_from, like
+    ``_concat_key``), renamed by position, the ids then the cells."""
+    names = [n for _p, _v, n in cells]
+    if len(set(names)) != len(names):
+        raise ValueError(
+            f"pivot_wider output names are not unique: {names} "
+            "(names_repair='check_unique', the reference default)")
+    if len(names_from) == 1:
+        key_col, key_of = names_from[0], lambda parts: parts[0]
+    else:
+        key_col = "__pw_key"
+        key_of = lambda parts: _concat_key(parts, names_sep)  # noqa: E731
+        work = work.withColumn(key_col, F.concat_ws(names_sep, *names_from))
+    keys = list(dict.fromkeys(key_of(p) for p, _v, _n in cells))
+    exprs = list(aggs.values())
+    if len(exprs) > 1:      # Spark names several aggregates' columns by alias
+        exprs = [e.alias(v) for v, e in aggs.items()]
+    slot = {kv: f"__pw{i}" for i, kv in enumerate(product(keys, aggs))}
+    df = (work.groupBy(*ids).pivot(key_col, keys).agg(*exprs)
+          .toDF(*ids, *slot.values()))
+    # backtick-escape: ids containing '.' must not parse as struct refs
+    return df.select(*[_bq(c) for c in ids],
+                     *[F.col(slot[key_of(p), v]).alias(n) for p, v, n in cells])
 
 
 @verb
@@ -180,14 +262,12 @@ def spread(tbl: SparkTbl, key, value, fill=None, sep: str | None = None,
     valc = _colname(value)
     ids = [c for c in tbl.columns if c not in (keyc, valc)]
     base = tbl.df.persist()
-    keys = _distinct_keys(base, keyc)
-    tbl = tbl.evolve(df=base)
-    out_names = [f"{keyc}{sep}{_key_str(k)}" if sep else _key_str(k) for k in keys]
-    df = tbl.df.groupBy(*ids).pivot(keyc, keys).agg(F.first(valc, ignorenulls=True))
-    if sep:
-        df = df.withColumnsRenamed(dict(zip([_key_str(k) for k in keys], out_names)))
+    cells = _wider_cells(tbl, base, [keyc], [valc],
+                         names_prefix=f"{keyc}{sep}" if sep else "")
+    df = _widen(base, ids, [keyc], "_", cells,
+                {valc: F.first(valc, ignorenulls=True)})
     if fill is not None:
-        df = df.fillna(fill, subset=out_names)
+        df = df.fillna(fill, subset=[n for *_c, n in cells])
     return tbl.evolve(df=df).pin(base)
 
 
@@ -469,14 +549,14 @@ def one_hot(tbl: SparkTbl, col, prefix: str | None = None,
     values get all-zeros like pandas ``dummy_na=False``."""
     name = _colname(col)
     base = tbl.df.persist()
-    keys = [k for k in _distinct_keys(base, name) if k is not None]
-    if drop_first:
-        keys = keys[1:]
     pre = f"{prefix}_" if prefix else f"{name}_"
+    cells = [c for c in _wider_cells(tbl, base, [name], [name], names_prefix=pre)
+             if c[0][0] is not None]
+    if drop_first:
+        cells = cells[1:]
     out = base.withColumns({
-        f"{pre}{_key_str(k)}":
-            F.when(F.col(name) == F.lit(k), 1).otherwise(0).cast(dtype)
-        for k in keys
+        n: F.when(F.col(name) == F.lit(k), 1).otherwise(0).cast(dtype)
+        for (k,), _v, n in cells
     })
     if remove:  # pandas get_dummies drops the encoded column
         out = out.drop(name)
@@ -796,93 +876,13 @@ def pivot_wider(tbl: SparkTbl, id_cols=None, names_from="name",
 
     names_from = _pivot_sel(names_from)
     values_from = _pivot_sel(values_from)
-    if id_cols is None:
-        ids = [c for c in tbl.columns if c not in names_from + values_from]
-    else:
-        ids = resolve_names(id_cols if isinstance(id_cols, (list, tuple)) else [id_cols],
-                            tbl.columns)
-    if isinstance(values_fn, dict):
-        missing = [v for v in values_from if v not in values_fn]
-        if missing:
-            raise ValueError(f"values_fn dict is missing entries for {missing}")
-        fn_for = {v: _agg_fn(values_fn[v]) for v in values_from}
-    else:
-        fn_for = {v: _agg_fn(values_fn) for v in values_from}
-
-    if len(names_from) == 1:
-        work = tbl.df.persist()
-        keys = _distinct_keys(work, names_from[0])
-        # a names_from column with declared factor levels orders the
-        # widened columns by LEVEL ORDER, like tidyr on a factor
-        # (functions/cat.py ledger); unknown values follow, string-sorted
-        meta = tbl.factors.get(names_from[0])
-        if meta is not None and meta.levels is not None:
-            pos = {v: i for i, v in enumerate(meta.levels)}
-            keys.sort(key=lambda k: (k is None, pos.get(k, len(pos)), str(k)))
-        # one name part per key: (key,)
-        parts_by_key = {_key_str(k): (_key_str(k),) for k in keys}
-    else:
-        work = tbl.df.withColumn(
-            "__pw_key", F.concat_ws(names_sep, *names_from)).persist()
-        if names_expand:
-            # cartesian product of each names_from column's levels
-            # (reference: expand() over name_data, pivot_wide.py:486-488)
-            from itertools import product
-            per_col = [_distinct_keys(work, c) for c in names_from]
-            combos = list(product(*per_col))
-            if len(combos) > MAX_PIVOT_KEYS:
-                raise TranslationError(
-                    f"names_expand grid exceeds {MAX_PIVOT_KEYS} keys")
-            keys = [names_sep.join(str(p) for p in combo) for combo in combos]
-            parts_by_key = {k: tuple(str(p) for p in combo)
-                            for k, combo in zip(keys, combos)}
-        else:
-            # one spec scan collects the joined key AND its parts (needed
-            # by names_glue) together
-            rows = _collect_spec(
-                work.select("__pw_key", *names_from).distinct())
-            rows.sort(key=lambda r: (r[0] is None, str(r[0])))
-            keys = [r[0] for r in rows]
-            parts_by_key = {_key_str(r[0]): tuple(_key_str(p) for p in r[1:])
-                            for r in rows}
-        work = work.drop(*names_from)
-    key_strs = [_key_str(k) for k in keys]
-
-    def tidy_name(ks, v=None):
-        return _wide_name(ks, parts_by_key[ks], v, names_prefix, names_sep,
-                          names_glue)
-
-    key_name = names_from[0] if len(names_from) == 1 else "__pw_key"
-    if len(values_from) == 1:
-        v0 = values_from[0]
-        df = work.groupBy(*ids).pivot(key_name, keys).agg(fn_for[v0](F.col(v0)))
-        rename = {ks: tidy_name(ks) for ks in key_strs}
-        out_names = [rename[ks] for ks in key_strs]
-        rename = {k: v for k, v in rename.items() if k != v}
-    else:
-        aggs = [fn_for[v](F.col(v)).alias(v) for v in values_from]
-        df = work.groupBy(*ids).pivot(key_name, keys).agg(*aggs)
-        # spark names these "<key>_<value>"; tidyr uses "<value>_<key>".
-        # names_vary="fastest" (default): names_from varies fastest, i.e.
-        # value-major column order; "slowest" is key-major.
-        rename = {}
-        out_names = []
-        outer, inner = ((values_from, key_strs) if names_vary == "fastest"
-                        else (key_strs, values_from))
-        for a in outer:
-            for b in inner:
-                v, ks = (a, b) if names_vary == "fastest" else (b, a)
-                tidy = tidy_name(ks, v)
-                rename[f"{ks}_{v}"] = tidy
-                out_names.append(tidy)
-    if len(set(out_names)) != len(out_names):
-        raise ValueError(
-            f"pivot_wider output names are not unique: {out_names} "
-            "(names_repair='check_unique', the reference default)")
-    if rename:
-        df = df.withColumnsRenamed(rename)
-    # backtick-escape: ids/keys containing '.' must not parse as struct refs
-    df = df.select(*[_bq(c) for c in ids], *[_bq(c) for c in out_names])
+    ids = _wider_ids(tbl, id_cols, names_from, values_from)
+    aggs = _value_aggs(values_fn, values_from)
+    work = tbl.df.persist()
+    cells = _wider_cells(tbl, work, names_from, values_from, names_prefix,
+                         names_sep, names_glue, names_vary, names_expand)
+    df = _widen(work, ids, names_from, names_sep, cells, aggs)
+    out_names = [n for *_c, n in cells]
     if id_expand and ids:
         # complete the id grid (cartesian product of per-id levels) and
         # sort by ids, like the reference's expand() path (pivot_wide.py:320+)
@@ -908,22 +908,13 @@ def build_wider_spec(tbl: SparkTbl, names_from="name", values_from="value",
     MAX_PIVOT_KEYS) — the reference needs the data for this too."""
     import pandas as pd
 
-    names_from = [_colname(names_from)] if not isinstance(names_from, (list, tuple)) \
-        else [_colname(c) for c in names_from]
-    values_from = [_colname(values_from)] if not isinstance(values_from, (list, tuple)) \
-        else [_colname(c) for c in values_from]
-    rows = _collect_spec(tbl.df.select(*names_from).distinct())
-    rows.sort(key=lambda r: tuple((v is None, str(v)) for v in r))
-    out = []
-    for v in values_from:
-        for r in rows:
-            parts = tuple(_key_str(p) for p in r)
-            key = parts[0] if len(r) == 1 else _concat_key(r, names_sep)
-            name = _wide_name(key, parts, v if len(values_from) > 1 else None,
-                              names_prefix, names_sep, names_glue)
-            out.append({".name": name, ".value": v,
-                        **dict(zip(names_from, r))})
-    return pd.DataFrame(out)
+    names_from, values_from = (
+        [_colname(c) for c in (a if isinstance(a, (list, tuple)) else [a])]
+        for a in (names_from, values_from))
+    cells = _wider_cells(tbl, tbl.df, names_from, values_from, names_prefix,
+                         names_sep, names_glue)
+    return pd.DataFrame([{".name": n, ".value": v, **dict(zip(names_from, p))}
+                         for p, v, n in cells])
 
 
 @verb
@@ -937,46 +928,17 @@ def pivot_wider_spec(tbl: SparkTbl, spec, id_cols=None, values_fill=None,
     spec = pd.DataFrame(spec)
     names_from = [c for c in spec.columns if c not in (".name", ".value")]
     values_from = list(pd.unique(spec[".value"]))
-    if id_cols is None:
-        ids = [c for c in tbl.columns if c not in names_from + values_from]
-    else:
-        ids = resolve_names(id_cols if isinstance(id_cols, (list, tuple)) else [id_cols],
-                            tbl.columns)
-    if isinstance(values_fn, dict):
-        fn_for = {v: _agg_fn(values_fn[v]) for v in values_from}
-    else:
-        fn_for = {v: _agg_fn(values_fn) for v in values_from}
-
-    recs = spec.to_dict("records")
+    ids = _wider_ids(tbl, id_cols, names_from, values_from)
 
     def typed(x):       # pandas holds a NULL key as None or NaN
         return None if x is None or (isinstance(x, float) and x != x) else x
 
-    if len(names_from) == 1:
-        work, key_name = tbl.df, names_from[0]
-        key_of = lambda r: typed(r[key_name])  # noqa: E731
-    else:
-        key_name = "__pw_key"
-        work = tbl.df.withColumn(key_name, F.concat_ws(names_sep, *names_from)) \
-            .drop(*names_from)
-        key_of = lambda r: _concat_key(  # noqa: E731
-            [typed(r[c]) for c in names_from], names_sep)
-    # pivot on the typed keys (a NULL key is its own column, as in
-    # pivot_wider); the pivot emits one column per (key, value) after the
-    # ids, key-major, and each spec row picks its column by position and
-    # names it — output in spec row order
-    keys = sorted({key_of(r) for r in recs}, key=lambda k: (k is None, str(k)))
-    cells = [(k, v) for k in keys for v in values_from]
-    df = (work.groupBy(*ids).pivot(key_name, keys)
-          .agg(*[fn_for[v](F.col(v)).alias(v) for v in values_from])
-          .toDF(*ids, *[f"__pw{i}" for i in range(len(cells))]))
-    pos = {c: f"__pw{i}" for i, c in enumerate(cells)}
-    names = [r[".name"] for r in recs]
-    df = df.select(*[_bq(c) for c in ids],
-                   *[F.col(pos[(key_of(r), r[".value"])]).alias(r[".name"])
-                     for r in recs])
+    cells = [(tuple(typed(r[c]) for c in names_from), r[".value"], r[".name"])
+             for r in spec.to_dict("records")]
+    df = _widen(tbl.df, ids, names_from, names_sep, cells,
+                _value_aggs(values_fn, values_from))
     if values_fill is not None:
-        df = df.fillna(values_fill, subset=names)
+        df = df.fillna(values_fill, subset=[n for *_c, n in cells])
     return SparkTbl(df)
 
 
@@ -996,19 +958,19 @@ def crosstab(tbl: SparkTbl, row, col, values=None, aggfunc: str = "count",
     """Contingency table (pandas.crosstab): counts — or an aggregate of
     ``values`` — per (row, col) cell, one wide row per row-key.
 
-    Spark's native ``groupBy().pivot()`` does map-side partial
-    aggregation; the column spec is collected once (capped), same
-    discipline as pivot_wider."""
+    ``pivot_wider``'s spec and widening, with ``row`` as the one id and
+    NULL ``col`` values dropped (pandas' ``dropna``)."""
     rowc = _colname(row)
     colc = _colname(col)
+    valc = _colname(values) if values is not None else None
     base = tbl.df.persist()
-    keys = [k for k in _distinct_keys(base, colc) if k is not None]
-    agg = _agg_fn(aggfunc)(F.col(_colname(values))) if values is not None \
+    cells = [c for c in _wider_cells(tbl, base, [colc], [valc])
+             if c[0][0] is not None]
+    agg = _agg_fn(aggfunc)(F.col(valc)) if valc is not None \
         else F.count(F.lit(1))
-    df = (base.groupBy(rowc).pivot(colc, keys).agg(agg))
-    out_names = [_key_str(k) for k in keys]
+    df = _widen(base, [rowc], [colc], "_", cells, {valc: agg})
     if fill is not None:
-        df = df.fillna(fill, subset=out_names)
+        df = df.fillna(fill, subset=[n for *_c, n in cells])
     return tbl.evolve(df=df, group_by=()).pin(base)
 
 

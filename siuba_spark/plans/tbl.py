@@ -9,6 +9,8 @@ window specs (SURVEY.md §1.3).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.lowering import AGG, ROW, LowerCtx
@@ -524,6 +526,19 @@ def cache(tbl: SparkTbl):
     return tbl.evolve(df=tbl.df.cache())
 
 
+def _else_case_depth(plan):
+    """The deepest when().otherwise(when()...) chain in a plan string: the
+    most ``ELSE CASE WHEN`` open at once (each CASE prints one ``END``)."""
+    opened, deepest = [], 0
+    for tok in re.findall(r"ELSE CASE WHEN|CASE WHEN|\bEND\b", plan):
+        if tok != "END":
+            opened.append(tok[0] == "E")
+            deepest = max(deepest, sum(opened))
+        elif opened:
+            opened.pop()
+    return deepest
+
+
 def _window_skew_watch(jdf):
     """Advisory skew watch: list every Window whose partition key is
     derived from high-cardinality CONTENT — a raw string/binary column
@@ -556,11 +571,11 @@ def _window_skew_watch(jdf):
         # every nesting level, so a when().otherwise(when()...) chain
         # N deep serializes at 2^N cost — 16 levels is ~100 MB of JSON
         # and 20 OOMed an 8 GB driver (r13 e2e-pipeline failure).  The
-        # linear toString is a cheap sentinel: each nesting level prints
-        # exactly one "ELSE CASE WHEN", so deep chains are detected and
-        # the (advisory-only) JSON walk is skipped instead of risking
-        # the driver.
-        if opt.toString().count("ELSE CASE WHEN") > 8:
+        # linear toString is a cheap sentinel: the cost is per chain, so
+        # the DEEPEST chain is bounded (many shallow chains are cheap)
+        # and the (advisory-only) JSON walk is skipped instead of
+        # risking the driver.
+        if _else_case_depth(opt.toString()) > 8:
             return ["skew watch skipped: plan has deeply nested CASE "
                     "WHEN chains (exponential to serialize) — flatten "
                     "them with when().when()...otherwise()"]

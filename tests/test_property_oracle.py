@@ -151,6 +151,48 @@ def test_gather_spread_roundtrip(spark, rows):
     assert got[["id", "p", "q"]].equals(want)
 
 
+@settings(max_examples=12, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(rows=st.lists(
+    st.tuples(st.integers(0, 2), st.sampled_from(["a", "a_b", "b", None]),
+              st.sampled_from([True, False, None]),
+              st.one_of(st.none(), st.integers(-9, 9)),
+              st.one_of(st.none(), st.integers(-9, 9))),
+    min_size=1, max_size=8),
+    names=st.sampled_from([["k"], ["j"], ["k", "j"]]),
+    values=st.sampled_from([["v"], ["v", "w"]]))
+def test_one_widening_spec_and_spread_agree(spark, rows, names, values):
+    """pivot_wider equals pivot_wider_spec(build_wider_spec(...)) in
+    names, column order and rows — or both raise; and for one key, spread
+    equals pivot_wider(values_fn="first") on (id, key, value).  NULL and
+    boolean keys, one and two names_from/values_from, single rows."""
+    from siuba_spark import (
+        build_wider_spec, pivot_wider, pivot_wider_spec, spread)
+    t = SparkTbl(spark.createDataFrame(
+        rows, "id long, k string, j boolean, v long, w long"))
+
+    def outcome(build):
+        try:
+            df = build().df
+            return df.columns, sorted(map(tuple, df.collect()), key=str)
+        except ValueError as e:
+            return "raises", str(e)
+
+    kw = dict(names_from=names, values_from=values)
+    assert outcome(lambda: pivot_wider(t, **kw)) == outcome(
+        lambda: pivot_wider_spec(t, build_wider_spec(t, **kw)))
+    if len(names) == 1:
+        # one value per (id, key), so "first" is order-free
+        key = names[0]
+        kept = {(r[0], r[1 if key == "k" else 2]): r[3] for r in rows}
+        sub = SparkTbl(spark.createDataFrame(
+            [(i, k, v) for (i, k), v in kept.items()],
+            f"id long, {key} {'string' if key == 'k' else 'boolean'}, v long"))
+        assert outcome(lambda: spread(sub, key, "v")) == outcome(
+            lambda: pivot_wider(sub, names_from=key, values_from="v",
+                                values_fn="first"))
+
+
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(rows=st.lists(

@@ -790,6 +790,37 @@ def test_lint_plan_skew_watch_content_keyed_windows(spark):
     assert lint_plan(span)["skew_watch"] == []
 
 
+def test_skew_watch_sentinel_bounds_the_deepest_case_chain(spark):
+    """The toJSON guard bounds the DEEPEST when().otherwise(when()...)
+    chain (the serialization cost is 2^depth per chain): many shallow
+    chains keep the raw-string-key watch, while a chain still more than
+    8 ELSE levels deep after optimization skips the JSON walk."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from siuba_spark.plans.tbl import lint_plan
+
+    df = spark.createDataFrame(
+        [("a", 1, 10), ("a", 2, 20), ("b", 3, 30)], ["seg", "pos", "id"])
+    raw = df.withColumn(
+        "rn", F.row_number().over(Window.partitionBy("seg").orderBy("pos")))
+    shallow = raw.withColumns({
+        f"c{i}": F.when(F.col("pos") == i, 1).otherwise(
+            F.when(F.col("id") == i, 2).otherwise(3)) for i in range(9)})
+    watch = lint_plan(tbl(shallow))["skew_watch"]
+    assert any("raw string" in w for w in watch), watch
+
+    def chain(n):       # the innermost branch (value 0 = else 0) folds away
+        e = F.lit(0)
+        for i in range(n):
+            e = F.when(F.col("pos") == i, i).otherwise(e)
+        return e
+
+    for n, skipped in [(10, False), (11, True)]:
+        watch = lint_plan(tbl(raw.withColumn("deep", chain(n))))["skew_watch"]
+        assert any("skipped" in w for w in watch) == skipped, (n, watch)
+
+
 def test_rank_limit_verbs_get_window_group_limit(spark):
     """Every rank-limit verb (slice family, top_n, stratified_sample(n=),
     cap_per_key) relies on InferWindowGroupLimit (SPARK-37099) injecting

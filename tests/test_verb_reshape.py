@@ -7,6 +7,7 @@ import pandas as pd
 from siuba_spark import (
     _, gather, spread, separate, unite, extract, nest, unnest, expand,
     complete, pivot_longer, pivot_wider, bind_rows, arrange, select, tbl,
+    mutate,
 )
 from .helpers import data_frame, assert_equal_query
 
@@ -278,11 +279,20 @@ def test_build_wider_spec_and_pivot_wider_spec(spark):
                      j=[True, True, False], v=[10, 11, 12])
     vw = data_frame(spark, id=[1, 1, 2], k=["a", None, "a"], v=[1, 2, 3],
                     w=[4, 5, 6])
+    # several names_from order by the joined key, not the part tuple
+    ab = data_frame(spark, id=[1, 1, 2], k=["a", "a", "a_b"],
+                    j=["x", "y", "x"], v=[1, 2, 3])
+    # a names_from with declared levels orders by level, as pivot_wider does
+    fk = data_frame(spark, id=[1, 1, 1], k=["lo", "hi", "mid"],
+                    v=[1.0, 2.0, 3.0]) >> mutate(
+        k=_.k.cat.set_categories(["mid", "hi", "lo"]))
     for src, names, values, want in [
             (nk, "k", "v", ["a", "b", "null"]),
             (bk, "k", "v", ["false", "true"]),
             (two, ["k", "j"], "v", ["a_true", "b_false", "true"]),
-            (vw, "k", ["v", "w"], ["v_a", "v_null", "w_a", "w_null"])]:
+            (vw, "k", ["v", "w"], ["v_a", "v_null", "w_a", "w_null"]),
+            (ab, ["k", "j"], "v", ["a_b_x", "a_x", "a_y"]),
+            (fk, "k", "v", ["mid", "hi", "lo"])]:
         spec = build_wider_spec(src, names_from=names, values_from=values)
         assert spec[".name"].tolist() == want
         got = (src >> pivot_wider_spec(spec)).df
@@ -291,6 +301,84 @@ def test_build_wider_spec_and_pivot_wider_spec(spark):
         assert rows(got) == rows(ref)
     got = (nk >> pivot_wider_spec(build_wider_spec(nk, "k", "v"))).df
     assert {r.id: r["null"] for r in got.collect()} == {1: 11, 2: None}
+
+
+def test_pivot_wider_spec_raises_on_merged_cells(spark):
+    """Two cells whose joined keys coincide — (NULL, "x") and ("x", NULL)
+    both join to "x" — would silently share one pivot column: the spec
+    path raises like pivot_wider instead of returning duplicate columns."""
+    import pytest
+    from siuba_spark import build_wider_spec, pivot_wider_spec
+    t = data_frame(spark, id=[1, 1, 2], k=[None, "x", "a"],
+                   j=["x", None, "b"], v=[1, 2, 3])
+    kw = dict(names_from=["k", "j"], values_from="v")
+    with pytest.raises(ValueError, match="not unique"):
+        pivot_wider(t, values_fn="sum", **kw)
+    spec = build_wider_spec(t, **kw)
+    assert spec[".name"].tolist() == ["a_b", "x", "x"]
+    with pytest.raises(ValueError, match="not unique"):
+        pivot_wider_spec(t, spec, values_fn="sum")
+
+
+def test_pivot_wider_names_expand_keeps_null_level(spark):
+    """names_expand keys its grid like the data (concat_ws skips a NULL
+    part, so (NULL, "x") is the column "x") and builds it from the one
+    spec scan: no more jobs than the plain several-key call."""
+    import uuid
+
+    def mk():
+        return data_frame(spark, id=[1, 1, 2], k=[None, "a", "b"],
+                          j=["x", "x", "y"], v=[11, 10, 12])
+
+    sc = spark.sparkContext
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")  # one action, one job
+
+    def build(**kw):
+        group = f"pw-expand-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "pivot_wider spec scan")
+        try:
+            out = pivot_wider(mk(), names_from=["k", "j"], values_from="v", **kw)
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    try:
+        plain, plain_jobs = build()
+        grid, grid_jobs = build(names_expand=True)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert plain.df.columns == ["id", "a_x", "b_y", "x"]
+    assert grid.df.columns == ["id", "a_x", "a_y", "b_x", "b_y", "x", "y"]
+    got = {r.id: r.asDict() for r in grid.df.collect()}
+    assert got[1] == {"id": 1, "a_x": 10, "a_y": None, "b_x": None,
+                      "b_y": None, "x": 11, "y": None}
+    assert got[2]["b_y"] == 12
+    assert grid_jobs <= plain_jobs, (grid_jobs, plain_jobs)
+
+
+def test_pivot_wider_keys_render_like_spark(spark):
+    """Double and fractional-second timestamp keys render like Spark's
+    string cast ('1.0E-4', '00:00:00.5'): a several-names_from cell finds
+    its values under the concat_ws key, and a single-key column is named
+    as Spark names it."""
+    t = data_frame(spark, id=[1, 2], k=["a", "a"], d=[0.0001, 2.5],
+                   v=[10, 20])
+    out = (t >> pivot_wider(names_from=["k", "d"], values_from="v")).df
+    assert out.columns == ["id", "a_1.0E-4", "a_2.5"]
+    assert sorted(map(tuple, out.collect())) == [(1, 10, None), (2, None, 20)]
+    one = (t >> pivot_wider(names_from="d", values_from="v")).df
+    assert one.columns == ["id", "k", "1.0E-4", "2.5"]
+    assert sorted(map(tuple, one.collect())) == [(1, "a", 10, None),
+                                                 (2, "a", None, 20)]
+    ts = tbl(spark.sql(
+        "SELECT 1L id, 'a' k, TIMESTAMP_NTZ'2020-01-01 00:00:00.5' t, 10L v "
+        "UNION ALL SELECT 2L, 'a', TIMESTAMP_NTZ'2020-01-01 00:00:01', 20L"))
+    out = (ts >> pivot_wider(names_from=["k", "t"], values_from="v")).df
+    assert out.columns == ["id", "a_2020-01-01 00:00:00.5",
+                           "a_2020-01-01 00:00:01"]
+    assert sorted(map(tuple, out.collect())) == [(1, 10, None), (2, None, 20)]
 
 
 def test_pivot_longer_names_transform(spark):
