@@ -129,17 +129,19 @@ def _wider_ids(tbl, id_cols, names_from, values_from):
 def _key_str(k):
     """The text Spark gives a key value (its pivot column name, and its
     string cast inside ``concat_ws``): None → 'null', booleans lowercase,
-    finite doubles like Java's ``Double.toString`` ('1.0E-4'), timestamp
-    fractions without trailing zeros.  Python's ``str()`` differs, so a
-    joined key built with it misses the data's."""
+    NaN/Infinity and finite doubles like Java's ``Double.toString``
+    ('1.0E-4'), timestamp fractions without trailing zeros.  Python's
+    ``str()`` differs, so a joined key built with it misses the data's
+    (a 32-bit float still does: Python sees it widened)."""
     if k is None:
         return "null"
     if k is True:
         return "true"
     if k is False:
         return "false"
-    if isinstance(k, float) and math.isfinite(k) and not (
-            k == 0 or 1e-3 <= abs(k) < 1e7):
+    if isinstance(k, float) and not math.isfinite(k):
+        return "NaN" if k != k else "Infinity" if k > 0 else "-Infinity"
+    if isinstance(k, float) and not (k == 0 or 1e-3 <= abs(k) < 1e7):
         sign, digits, exp = Decimal(repr(float(k))).normalize().as_tuple()
         d = "".join(map(str, digits))
         return f"{'-' * sign}{d[0]}.{d[1:] or '0'}E{len(d) - 1 + exp}"
@@ -149,15 +151,16 @@ def _key_str(k):
 
 
 def _concat_key(parts, sep):
-    """The ``concat_ws(sep, *names_from)`` pivot key of typed name parts:
-    ``_key_str`` names, NULL parts skipped."""
+    """The ``concat_ws(sep, *names_from)`` pivot key of typed name parts
+    as ``_key_str`` renders them, NULL parts skipped: for a spec frame's
+    rows and ``names_expand`` combinations absent from the data."""
     return sep.join(_key_str(p) for p in parts if p is not None)
 
 
 def _wide_name(key, parts, v, names_prefix, names_sep, names_glue):
     """Output column name of one widened key — the one naming rule of
     the widening spec (``_wider_cells``).  ``key`` is the key's pivot
-    name (``_key_str``, or ``_concat_key`` for several names_from),
+    name (``_key_str``, or the ``concat_ws`` key for several names_from),
     ``parts`` its name parts as ``_key_str`` names, ``v`` the value
     column when several are widened (else None).  ``names_glue`` fills
     ``{variable}``/``{value}`` from the first two name parts, like the
@@ -193,56 +196,69 @@ def _collect_spec(keys, what="pivot spec", exc=TranslationError):
 def _wider_cells(tbl, work, names_from, values_from, names_prefix="",
                  names_sep="_", names_glue=None, names_vary="fastest",
                  names_expand=False):
-    """The widening spec: ``[(typed name parts, value column, output
-    name)]`` in output column order, from ONE bounded distinct scan of
-    ``names_from`` over ``work``.  One names_from sorts NULL last, then by
-    declared factor level (functions/cat.py ledger), then by ``str``;
-    several sort by ``_concat_key``, or with ``names_expand`` cross each
-    part's levels from that scan (reference: pivot_wide.py:486-488)."""
-    rows = [tuple(r) for r in _collect_spec(work.select(*names_from).distinct())]
-    if len(names_from) == 1:
-        meta = tbl.factors.get(names_from[0])
-        levels = meta.levels if meta is not None and meta.levels is not None else ()
-        pos = {v: i for i, v in enumerate(levels)}
-        rows.sort(key=lambda r: (r[0] is None, pos.get(r[0], len(pos)), str(r[0])))
-    elif names_expand:
-        rows = list(product(*[
-            sorted({r[i] for r in rows}, key=lambda v: (v is None, str(v)))
-            for i in range(len(names_from))]))
+    """The widening spec: ``[(typed name parts, pivot key, value column,
+    output name)]`` in output column order, from ONE bounded distinct scan
+    of ``names_from`` over ``work``.  One names_from pivots on its typed
+    value and sorts NULL last, then by declared factor level
+    (functions/cat.py ledger), then by ``str``.  Several pivot on the
+    data's own ``concat_ws`` key, read in that same scan, and sort by it;
+    ``names_expand`` crosses each part's levels from the scan instead
+    (reference: pivot_wide.py:486-488), keying an absent combination with
+    ``_concat_key`` and dropping it when that key is already taken."""
+    key_col = F.concat_ws(names_sep, *names_from) if len(names_from) > 1 \
+        else F.col(names_from[0])
+    rows = [(r[0], tuple(r[1:])) for r in _collect_spec(
+        work.select(key_col.alias("__pw_key"), *names_from).distinct())]
+    meta = tbl.factors.get(names_from[0]) if len(names_from) == 1 else None
+    pos = {v: i for i, v in enumerate(
+        meta.levels if meta is not None and meta.levels is not None else ())}
+    rows.sort(key=lambda r: (r[0] is None, pos.get(r[0], len(pos)), str(r[0]),
+                             [(p is None, str(p)) for p in r[1]]))
+    if names_expand and len(names_from) > 1:
+        seen = {parts: key for key, parts in rows}
+        taken, rows = set(seen.values()), []
+        for parts in product(*[sorted({p[i] for p in seen},
+                                      key=lambda v: (v is None, str(v)))
+                               for i in range(len(names_from))]):
+            key = seen.get(parts, _concat_key(parts, names_sep))
+            if parts in seen or key not in taken:
+                taken.add(key)
+                rows.append((key, parts))
         if len(rows) > MAX_PIVOT_KEYS:
             raise TranslationError(
                 f"names_expand grid exceeds {MAX_PIVOT_KEYS} keys")
-    else:
-        rows.sort(key=lambda r: _concat_key(r, names_sep))
 
-    def cell(parts, v):
+    def cell(key, parts, v):
         strs = tuple(_key_str(p) for p in parts)
-        key = strs[0] if len(parts) == 1 else _concat_key(parts, names_sep)
-        return (parts, v, _wide_name(key, strs, v if len(values_from) > 1 else None,
-                                     names_prefix, names_sep, names_glue))
+        name = _wide_name(strs[0] if len(parts) == 1 else key, strs,
+                          v if len(values_from) > 1 else None,
+                          names_prefix, names_sep, names_glue)
+        return (parts, key, v, name)
 
     if names_vary == "fastest":
-        return [cell(r, v) for v in values_from for r in rows]
-    return [cell(r, v) for r in rows for v in values_from]
+        return [cell(*r, v) for v in values_from for r in rows]
+    return [cell(*r, v) for r in rows for v in values_from]
 
 
 def _widen(work, ids, names_from, names_sep, cells, aggs):
     """The one long→wide lowering of ``cells`` (see ``_wider_cells``),
     ``aggs`` mapping each value column to its aggregate Column: ONE pivot
-    on the typed key (``concat_ws`` of several names_from, like
-    ``_concat_key``), renamed by position, the ids then the cells."""
-    names = [n for _p, _v, n in cells]
-    if len(set(names)) != len(names):
+    on the cells' keys (``names_from[0]``, or the ``concat_ws`` of several
+    names_from), renamed by position, the ids then the cells.  Both the
+    output names and the (pivot key, value column) slots must be unique:
+    two cells on one slot would show the same merged values."""
+    names = [n for *_c, n in cells]
+    slots = {(k, v) for _p, k, v, _n in cells}
+    if len(set(names)) != len(names) or len(slots) != len(cells):
         raise ValueError(
             f"pivot_wider output names are not unique: {names} "
-            "(names_repair='check_unique', the reference default)")
-    if len(names_from) == 1:
-        key_col, key_of = names_from[0], lambda parts: parts[0]
-    else:
+            "(names_repair='check_unique', the reference default; "
+            "concat_ws skips NULL name parts, so two can share a key)")
+    key_col = names_from[0]
+    if len(names_from) > 1:
         key_col = "__pw_key"
-        key_of = lambda parts: _concat_key(parts, names_sep)  # noqa: E731
         work = work.withColumn(key_col, F.concat_ws(names_sep, *names_from))
-    keys = list(dict.fromkeys(key_of(p) for p, _v, _n in cells))
+    keys = list(dict.fromkeys(k for _p, k, _v, _n in cells))
     exprs = list(aggs.values())
     if len(exprs) > 1:      # Spark names several aggregates' columns by alias
         exprs = [e.alias(v) for v, e in aggs.items()]
@@ -251,7 +267,7 @@ def _widen(work, ids, names_from, names_sep, cells, aggs):
           .toDF(*ids, *slot.values()))
     # backtick-escape: ids containing '.' must not parse as struct refs
     return df.select(*[_bq(c) for c in ids],
-                     *[F.col(slot[key_of(p), v]).alias(n) for p, v, n in cells])
+                     *[F.col(slot[k, v]).alias(n) for _p, k, v, n in cells])
 
 
 @verb
@@ -487,11 +503,10 @@ def extract(tbl: SparkTbl, col, into, regex: str = r"(\w+)",
     if flags:
         # re module flags -> Java inline flags (reference passes them to
         # pandas str.extract, verbs.py:2480)
-        import re as _re
         inline = "".join(ch for f, ch in
-                         [(_re.IGNORECASE, "i"), (_re.MULTILINE, "m"),
-                          (_re.DOTALL, "s"), (_re.UNICODE, "u"),
-                          (_re.VERBOSE, "x")] if flags & f)
+                         [(re.IGNORECASE, "i"), (re.MULTILINE, "m"),
+                          (re.DOTALL, "s"), (re.UNICODE, "u"),
+                          (re.VERBOSE, "x")] if flags & f)
         if inline:
             regex = f"(?{inline}){regex}"
     df = tbl.df
@@ -551,12 +566,12 @@ def one_hot(tbl: SparkTbl, col, prefix: str | None = None,
     base = tbl.df.persist()
     pre = f"{prefix}_" if prefix else f"{name}_"
     cells = [c for c in _wider_cells(tbl, base, [name], [name], names_prefix=pre)
-             if c[0][0] is not None]
+             if c[1] is not None]
     if drop_first:
         cells = cells[1:]
     out = base.withColumns({
         n: F.when(F.col(name) == F.lit(k), 1).otherwise(0).cast(dtype)
-        for (k,), _v, n in cells
+        for _p, k, _v, n in cells
     })
     if remove:  # pandas get_dummies drops the encoded column
         out = out.drop(name)
@@ -914,7 +929,7 @@ def build_wider_spec(tbl: SparkTbl, names_from="name", values_from="value",
     cells = _wider_cells(tbl, tbl.df, names_from, values_from, names_prefix,
                          names_sep, names_glue)
     return pd.DataFrame([{".name": n, ".value": v, **dict(zip(names_from, p))}
-                         for p, v, n in cells])
+                         for p, _k, v, n in cells])
 
 
 @verb
@@ -933,8 +948,11 @@ def pivot_wider_spec(tbl: SparkTbl, spec, id_cols=None, values_fill=None,
     def typed(x):       # pandas holds a NULL key as None or NaN
         return None if x is None or (isinstance(x, float) and x != x) else x
 
-    cells = [(tuple(typed(r[c]) for c in names_from), r[".value"], r[".name"])
-             for r in spec.to_dict("records")]
+    cells = []
+    for r in spec.to_dict("records"):
+        parts = tuple(typed(r[c]) for c in names_from)
+        key = parts[0] if len(parts) == 1 else _concat_key(parts, names_sep)
+        cells.append((parts, key, r[".value"], r[".name"]))
     df = _widen(tbl.df, ids, names_from, names_sep, cells,
                 _value_aggs(values_fn, values_from))
     if values_fill is not None:
@@ -965,7 +983,7 @@ def crosstab(tbl: SparkTbl, row, col, values=None, aggfunc: str = "count",
     valc = _colname(values) if values is not None else None
     base = tbl.df.persist()
     cells = [c for c in _wider_cells(tbl, base, [colc], [valc])
-             if c[0][0] is not None]
+             if c[1] is not None]
     agg = _agg_fn(aggfunc)(F.col(valc)) if valc is not None \
         else F.count(F.lit(1))
     df = _widen(base, [rowc], [colc], "_", cells, {valc: agg})
@@ -999,9 +1017,8 @@ def separate_wider_delim(tbl: SparkTbl, col, delim: str, names,
     "align_start" (missing pieces become NULL, lazy).  ``too_many``:
     "error", "drop" (discard extras) or "merge" (last column keeps the
     remainder).  Zero shuffle — a split + projection, codegen'd."""
-    import re as _re
     name = _colname(col)
-    pat = _re.escape(delim)
+    pat = re.escape(delim)
     if too_few not in ("error", "align_start"):
         raise ValueError("too_few must be 'error' or 'align_start'")
     if too_many not in ("error", "drop", "merge"):

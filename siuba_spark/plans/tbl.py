@@ -528,15 +528,20 @@ def cache(tbl: SparkTbl):
 
 def _else_case_depth(plan):
     """The deepest when().otherwise(when()...) chain in a plan string: the
-    most ``ELSE CASE WHEN`` open at once (each CASE prints one ``END``)."""
+    most ``ELSE CASE WHEN`` open at once (each CASE prints one ``END``).
+    Literals print unquoted, so when the tokens do not pair up (a literal
+    'END') the total ``ELSE CASE WHEN`` count, an upper bound, stands in."""
+    toks = re.findall(r"ELSE CASE WHEN|CASE WHEN|\bEND\b", plan)
     opened, deepest = [], 0
-    for tok in re.findall(r"ELSE CASE WHEN|CASE WHEN|\bEND\b", plan):
+    for tok in toks:
         if tok != "END":
             opened.append(tok[0] == "E")
             deepest = max(deepest, sum(opened))
-        elif opened:
+        elif not opened:
+            return toks.count("ELSE CASE WHEN")
+        else:
             opened.pop()
-    return deepest
+    return toks.count("ELSE CASE WHEN") if opened else deepest
 
 
 def _window_skew_watch(jdf):

@@ -820,6 +820,14 @@ def test_skew_watch_sentinel_bounds_the_deepest_case_chain(spark):
         watch = lint_plan(tbl(raw.withColumn("deep", chain(n))))["skew_watch"]
         assert any("skipped" in w for w in watch) == skipped, (n, watch)
 
+    # the plan prints string literals unquoted: a chain comparing with
+    # the literal 'END' must not read as shallow
+    e = F.lit(0)
+    for i in range(11):
+        e = F.when((F.col("pos") == i) | (F.col("seg") == "END"), i).otherwise(e)
+    watch = lint_plan(tbl(raw.withColumn("deep", e)))["skew_watch"]
+    assert any("skipped" in w for w in watch), watch
+
 
 def test_rank_limit_verbs_get_window_group_limit(spark):
     """Every rank-limit verb (slice family, top_n, stratified_sample(n=),

@@ -318,6 +318,14 @@ def test_pivot_wider_spec_raises_on_merged_cells(spark):
     assert spec[".name"].tolist() == ["a_b", "x", "x"]
     with pytest.raises(ValueError, match="not unique"):
         pivot_wider_spec(t, spec, values_fn="sum")
+    # names_glue names the two cells apart ('null.x' / 'x.null'), but they
+    # still read one pivot slot: the check is on the slot, not the name
+    glue = dict(kw, names_glue="{variable}.{value}")
+    with pytest.raises(ValueError, match="not unique"):
+        pivot_wider(t, values_fn="sum", **glue)
+    spec = build_wider_spec(t, **glue)
+    with pytest.raises(ValueError, match="not unique"):
+        pivot_wider_spec(t, spec, values_fn="sum")
 
 
 def test_pivot_wider_names_expand_keeps_null_level(spark):
@@ -325,6 +333,8 @@ def test_pivot_wider_names_expand_keeps_null_level(spark):
     part, so (NULL, "x") is the column "x") and builds it from the one
     spec scan: no more jobs than the plain several-key call."""
     import uuid
+
+    import pytest
 
     def mk():
         return data_frame(spark, id=[1, 1, 2], k=[None, "a", "b"],
@@ -356,13 +366,31 @@ def test_pivot_wider_names_expand_keeps_null_level(spark):
                       "b_y": None, "x": 11, "y": None}
     assert got[2]["b_y"] == 12
     assert grid_jobs <= plain_jobs, (grid_jobs, plain_jobs)
+    # crossing two parts' NULL levels gives absent combinations whose
+    # keys are taken — ("x", NULL) joins to "x" like the data's
+    # (NULL, "x") — and they are left out, so the grid raises no more
+    # than the plain call does
+    t = data_frame(spark, id=[1, 2, 3], k=[None, "x", "a"],
+                   j=["x", "x", None], v=[1, 2, 3])
+    kw = dict(names_from=["k", "j"], values_from="v")
+    plain = pivot_wider(t, **kw).df
+    grid = pivot_wider(t, names_expand=True, **kw).df
+    assert plain.columns == ["id", "a", "x", "x_x"]
+    assert grid.columns == ["id", "a_x", "a", "x_x", "x", ""]
+    assert sorted(map(tuple, grid.select(*plain.columns).collect())) == \
+        sorted(map(tuple, plain.collect())) == [
+            (1, None, 1, None), (2, None, None, 2), (3, 3, None, None)]
+    t = data_frame(spark, id=[1, 2], k=[None, "x"], j=["x", None], v=[1, 2])
+    with pytest.raises(ValueError, match="not unique"):
+        pivot_wider(t, **kw)
 
 
 def test_pivot_wider_keys_render_like_spark(spark):
     """Double and fractional-second timestamp keys render like Spark's
     string cast ('1.0E-4', '00:00:00.5'): a several-names_from cell finds
     its values under the concat_ws key, and a single-key column is named
-    as Spark names it."""
+    as Spark names it.  32-bit float and NaN/Infinity parts, which Python
+    renders otherwise, are keyed by the data's own concat_ws."""
     t = data_frame(spark, id=[1, 2], k=["a", "a"], d=[0.0001, 2.5],
                    v=[10, 20])
     out = (t >> pivot_wider(names_from=["k", "d"], values_from="v")).df
@@ -379,6 +407,20 @@ def test_pivot_wider_keys_render_like_spark(spark):
     assert out.columns == ["id", "a_2020-01-01 00:00:00.5",
                            "a_2020-01-01 00:00:01"]
     assert sorted(map(tuple, out.collect())) == [(1, 10, None), (2, None, 20)]
+    fl = tbl(spark.sql(
+        "SELECT 1L id, 'a' k, CAST(0.1 AS FLOAT) f, double('NaN') d, 10L v "
+        "UNION ALL SELECT 2L, 'a', CAST(2.5 AS FLOAT), double('Infinity'), 20L "
+        "UNION ALL SELECT 3L, 'a', CAST(2.5 AS FLOAT), double('-Infinity'), 30L"))
+    out = (fl >> pivot_wider(id_cols="id", names_from=["k", "f"],
+                             values_from="v")).df
+    assert out.columns == ["id", "a_0.1", "a_2.5"]
+    assert sorted(map(tuple, out.collect())) == [
+        (1, 10, None), (2, None, 20), (3, None, 30)]
+    out = (fl >> pivot_wider(id_cols="id", names_from=["k", "d"],
+                             values_from="v")).df
+    assert out.columns == ["id", "a_-Infinity", "a_Infinity", "a_NaN"]
+    assert sorted(map(tuple, out.collect())) == [
+        (1, None, None, 10), (2, None, 20, None), (3, 30, None, None)]
 
 
 def test_pivot_longer_names_transform(spark):
