@@ -4911,10 +4911,10 @@ def q_bpe_token_count(spark, sf):
 
 
 def _bpe_oracle_sql(max_word_len=16):
-    from siuba_spark.corpus.bpe import DEFAULT_MERGES, _NO_MERGE
+    from siuba_spark.corpus.bpe import DEFAULT_MERGES
     keys = ", ".join(f"'{a} {b}'" for a, b in DEFAULT_MERGES)
     vals = ", ".join(str(i) for i in range(len(DEFAULT_MERGES)))
-    big = _NO_MERGE
+    big = 1 << 30       # rank sentinel: pair not in the table
     step = """
 s{j} AS (SELECT doc_id, wi,
   CASE WHEN len(s) < 2 OR r IS NULL OR r[1] >= {big} THEN s
@@ -5109,26 +5109,28 @@ FROM m WHERE net > 1000 GROUP BY l_returnflag
 
 
 def q_bpe_broadcast(spark, sf):
-    """The BPE broadcast-join variant (corpus/bpe.py, VERDICT r7 item 5):
-    the merges ranking rides a one-row broadcast MAP relation instead of
-    a literal plan map — token counts must be identical, graded against
-    the same 15-step DuckDB merge-loop replay as the literal path."""
-    from siuba_spark.corpus.bpe import bpe_token_count
-    return bpe_token_count(_td(spark, sf), broadcast=True).df \
-        .select("doc_id", "n_bpe_tokens")
+    """BPE token counts read off ``bpe_encode``'s sequences (corpus/bpe.py):
+    the size of each document's ``array<string>`` tokens, graded against
+    the same 15-step DuckDB merge-loop replay as ``bpe_token_count`` —
+    so the encode entry point is value-exact too, not just its count."""
+    from pyspark.sql import functions as F
+
+    from siuba_spark.corpus.bpe import bpe_encode
+    return bpe_encode(_td(spark, sf)).df.select(
+        "doc_id", F.size("bpe_tokens").cast("long").alias("n_bpe_tokens"))
 
 
 SQL_BPE_BROADCAST = SQL_BPE_TOKEN_COUNT
 
 
 def q_bpe_arrow(spark, sf):
-    """The Arrow BPE tier (corpus/bpe.py engine="arrow" — mapInPandas
-    with O(1) dict lookups, the GPT-2-scale path): the Python tokenizer
-    must reproduce the JVM expression loop and therefore the same
-    15-CTE DuckDB merge-loop replay, value-exactly."""
-    from siuba_spark.corpus.bpe import bpe_token_count
-    return bpe_token_count(_td(spark, sf), engine="arrow").df \
-        .select("doc_id", "n_bpe_tokens")
+    """BPE token counts from the expression-level ``bpe_tokens_col``
+    (corpus/bpe.py — the ``tokenizer=`` hook, a bare Arrow UDF column)
+    in a plain ``select``: graded against the same 15-CTE DuckDB
+    merge-loop replay, value-exactly."""
+    from siuba_spark.corpus.bpe import bpe_tokens_col
+    return _td(spark, sf).df.select(
+        "doc_id", bpe_tokens_col("text").alias("n_bpe_tokens"))
 
 
 SQL_BPE_ARROW = SQL_BPE_TOKEN_COUNT
@@ -5630,7 +5632,8 @@ def q_bpe_train_gate(spark, sf):
     All four are deterministic, so the oracle is the constant row."""
     from pyspark.sql import functions as F
 
-    from siuba_spark.corpus.bpe import _word_rows, bpe_token_count, bpe_train
+    from siuba_spark.corpus.bpe import bpe_token_count, bpe_train
+    from siuba_spark.corpus.text import _BPE_RE
 
     docs = _td(spark, sf)
     kw = dict(n_merges=24, min_freq=2)
@@ -5638,7 +5641,15 @@ def q_bpe_train_gate(spark, sf):
     n_ok = len(merges) == 24
     det_ok = merges == bpe_train(docs, **kw)
 
-    rows = _word_rows(docs.df, "text", "doc_id", 16)
+    # the independent side: words (truncated to 16 characters) split
+    # into character arrays with Spark expressions, no tokenizer code
+    w = F.substring(F.col("w"), 1, 16)
+    rows = (docs.df
+            .select(F.explode(F.regexp_extract_all(
+                F.lower(F.col("text")), F.lit(_BPE_RE), 0)).alias("w"))
+            .select(F.transform(F.sequence(F.lit(1), F.length(w)),
+                                lambda i: F.substring(w, i, 1))
+                    .alias("__s")))
     pair = (rows.filter(F.size("__s") >= 2)
             .select(F.explode(F.arrays_zip(
                 F.expr("slice(__s, 1, size(__s) - 1)"),
@@ -5648,7 +5659,7 @@ def q_bpe_train_gate(spark, sf):
             .orderBy(F.col("n").desc(), "a", "b").first())
     first_ok = (pair["a"], pair["b"]) == merges[0]
 
-    agg = (bpe_token_count(docs, merges=merges, engine="expr").df
+    agg = (bpe_token_count(docs, merges=merges).df
            .agg(F.sum("n_bpe_tokens").alias("tok")).first())
     chars = (rows.agg(F.sum(F.size("__s")).alias("c")).first())
     compresses = 0 < agg["tok"] < chars["c"]

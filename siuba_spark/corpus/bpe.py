@@ -1,51 +1,51 @@
-"""True merges-table-driven BPE tokenization, JVM-side (no UDF).
+r"""True merges-table-driven BPE tokenization: one scalar Arrow UDF.
 
 ``token_count_bpe`` (text.py) approximates subword counts with a regex;
-training-data token budgets inherit its error.  This module implements a
-REAL byte-pair-encoding merge loop against a rank table, entirely in
-Spark array expressions (VERDICT r6 item 9):
+training-data token budgets inherit its error.  This module applies a
+REAL byte-pair-encoding merge loop against a rank table (VERDICT r6
+item 9):
 
-- pre-tokenize with the GPT-2-ish word/number/symbol regex;
-- explode words to rows (zero-shuffle flatMap);
-- split each word into characters;
-- apply ``max_word_len - 1`` merge STEPS: each step finds the lowest-rank
-  adjacent pair (leftmost occurrence on rank ties) and merges THAT ONE
-  occurrence via slice/concat.
+- pre-tokenize the lowercased text with the GPT-2-ish word/number/symbol
+  pattern ``_BPE_RE``;
+- truncate each word to ``max_word_len`` characters (bounds the loop;
+  the SQL oracle replays the same truncation) and split it into
+  characters;
+- apply at most ``max_word_len - 1`` merge steps: each step finds the
+  lowest-rank adjacent pair (leftmost on rank ties) and merges THAT ONE
+  occurrence.
 
-One-occurrence-per-step is exactly equivalent to the classic
-all-occurrences-left-to-right formulation: a merged token is the
-concatenation of the pair, so it is strictly longer than either side and
-can never itself form a new occurrence of the SAME pair — repeatedly
-merging the leftmost occurrence therefore consumes the identical
-occurrence set in the identical order.  The win: each step is pure
-``array_position``/``array_min``/``slice``/``concat`` — replayable
-verbatim in DuckDB (list_position/list_min/list slicing), with no fold
-accumulator, so the oracle replays the whole loop value-exactly.
+One occurrence per step is exactly the classic all-occurrences-left-to-
+right formulation: a merged token is the concatenation of the pair, so
+it is strictly longer than either side and can never form a new
+occurrence of the SAME pair — merging the leftmost occurrence repeatedly
+consumes the identical occurrences in the identical order (test_bpe
+pins it against a reference of the classic form; the graded DuckDB
+oracle replays the one-occurrence loop step by step in SQL).
 
-Scale shape: per word the loop is ``max_word_len - 1`` materialized
-projections of O(word_len) array ops — CPU-linear in corpus tokens, no
-shuffle until the final per-document count aggregation (one shuffle,
-map-side combined).  The merges ranking ships in one of THREE tiers
-(``engine=``/``broadcast=``):
+The loop runs in Python, wrapped ONCE in a scalar Series → Series Arrow
+UDF (``_bpe_col``): a dict gives O(1) rank lookups at any vocabulary
+size (GPT-2's 50k merges cost what 40 do), and a bounded per-task memo
+of word → tokens leaves the loop to each word's first occurrence (Zipf
+makes most instances repeats).  Every entry point is that one column:
+``bpe_token_count`` adds it as a count, ``bpe_encode`` as the
+``array<string>`` sequence, and ``bpe_tokens_col`` is the bare count
+column for ``tokenizer=`` hooks.  So every row gets its own value — no
+id column, join or shuffle — and NULL text has no tokens (count 0,
+sequence ``[]``).
 
-1. flat literal plan map (expr tier, <= BROADCAST_MERGES_THRESHOLD):
-   zero setup, fine while a linear ``element_at`` scan over the entries
-   is cheap;
-2. bucketed broadcast map (map<int, map<string,int>>, crc32 % sqrt(N)
-   buckets, ``broadcast=True``): one broadcast exchange, constant plan
-   size, ~2*sqrt(N) compares per probe;
-3. Arrow mapInPandas tokenizer: a real hash table with O(1) lookups and
-   a word-level memo, batches crossing the boundary with exactly two
-   columns.  **The r12 default** (auto picks it unless the caller set
-   ``broadcast=``): measured 7x faster end-to-end than the expression
-   tiers even at the DEFAULT 40-entry table (0.64 vs 4.37 s, sf0.1
-   min-of-3 noop — the expression tiers pay per-query plan construction
-   + Janino compilation of 15 chained projections plus interpreted
-   CodegenFallback higher-order functions per row; guide §4.2's "hand
-   batches to native code" point), and the only tier whose per-probe
-   cost is independent of vocabulary size (GPT-2's 50k merges).
+Why not Spark array expressions: higher-order array functions evaluate
+interpreted (CodegenFallback) per row and probe a MapType by linear
+scan, so the same loop lowered that way (a literal rank map, a
+crc32-bucketed one, a loop over distinct words) measured 5-77x slower
+than this UDF at sf0.1 and 10x (SCALE.md, "Round-8: BPE tokenizer
+tiers").
 
-All tiers produce identical tokens (pinned by parity tests).
+Pre-tokenizer parity: the pattern is compiled with ``re.ASCII``, so
+``\s`` is the ASCII class Java's regex has — the one ``bpe_train``'s
+histogram (``regexp_extract_all``) reads words with.  NBSP and U+2003
+are symbol tokens on both sides.  DuckDB's RE2 ``\s`` also excludes
+``\v``, so the SQL oracle reads a vertical tab as a symbol token where
+Java and this module read whitespace.
 
 No reference equivalent (siuba has no tokenizer surface); the API mirrors
 this repo's corpus verbs.
@@ -53,13 +53,14 @@ this repo's corpus verbs.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from ..plans.pipe import verb
 from ..plans.tbl import SparkTbl
 
-__all__ = ["DEFAULT_MERGES", "BROADCAST_MERGES_THRESHOLD",
-           "ARROW_MERGES_THRESHOLD", "MAX_TRAIN_VOCAB_BYTES",
+__all__ = ["DEFAULT_MERGES", "MAX_TRAIN_VOCAB_BYTES",
            "bpe_token_count", "bpe_encode", "bpe_tokens_col", "bpe_train"]
 
 # the GPT-2-ish pre-tokenizer pattern token_count_bpe already uses
@@ -79,203 +80,18 @@ DEFAULT_MERGES = [
     ("s", "h"), ("u", "n"), ("w", "or"), ("wor", "d"), ("q", "u"),
 ]
 
-_NO_MERGE = 1 << 30  # rank sentinel: pair not in the table
 
-
-def _merges_map(merges):
-    """Literal MAP<pair-key, rank> column — tier 1, SMALL tables only.
-    Two costs grow with size: the literal serializes into every task's
-    plan, and ``element_at`` on a MapType is a linear scan per probe.
-    The verbs auto-switch to the bucketed broadcast relation above
-    ``BROADCAST_MERGES_THRESHOLD`` and to the Arrow tokenizer above
-    ``ARROW_MERGES_THRESHOLD``; this hard guard only backstops direct
-    expression-level use (``bpe_tokens_col``)."""
-    if len(merges) > 8192:
-        raise ValueError(
-            "merges table too large for a literal plan map (plan bloat + "
-            "linear element_at scans); use bpe_token_count/bpe_encode, "
-            "which auto-route to the bucketed broadcast or Arrow tier")
-    entries = []
-    for rank, (a, b) in enumerate(merges):
-        entries.append(F.lit(f"{a} {b}"))
-        entries.append(F.lit(rank))
-    return F.create_map(*entries)
-
-
-def _merges_relation(spark, merges):
-    """One-row DataFrame carrying the merges ranking as a TWO-LEVEL
-    bucketed map ``map<int, map<string,int>>`` — the broadcast-join
-    variant for large vocabularies.
-
-    Two scale problems with a flat map, both fixed here:
-
-    - plan size: a literal map serializes into every task; this table
-      ships ONCE via a broadcast exchange (data path), so plan size is
-      constant no matter how many merges;
-    - lookup cost: Spark's ``element_at`` on a MapType is a LINEAR scan
-      of the entries — a flat 50k-entry map costs 50k string compares
-      per pair-rank probe, which is computationally infeasible over a
-      corpus (measured: the flat variant stalls scale_spot at 100x).
-      Bucketing by ``crc32(key) % ceil(sqrt(N))`` cuts each probe to
-      ~2·sqrt(N) compares (~450 for GPT-2's 50k vs 50k flat).
-
-    crc32 is the bucket hash because Python's ``zlib.crc32`` and
-    Spark's ``F.crc32`` agree bit-for-bit on UTF-8 bytes, so the
-    build-side (driver) and probe-side (executor expression) bucket
-    identically.  Returns ``(one_row_df, n_buckets)``."""
-    import math
-    import zlib
-
-    n_buckets = max(1, math.isqrt(len(merges)))
-    ks = [[] for _ in range(n_buckets)]
-    rs = [[] for _ in range(n_buckets)]
-    for rank, (a, b) in enumerate(merges):
-        key = f"{a} {b}"
-        i = zlib.crc32(key.encode("utf-8")) % n_buckets
-        ks[i].append(key)
-        rs[i].append(rank)
-    df = spark.createDataFrame(
-        [(list(range(n_buckets)), ks, rs)],
-        "b array<int>, k array<array<string>>, r array<array<int>>")
-    inner = F.zip_with("k", "r", lambda kk, rr: F.map_from_arrays(kk, rr))
-    return (df.select(F.map_from_arrays("b", inner).alias("__merges")),
-            n_buckets)
-
-
-#: auto-switch point: beyond this many merges the verbs broadcast-join a
-#: BUCKETED ranking instead of inlining a flat literal plan map (the
-#: flat map's linear element_at scan dominates CPU long before its plan
-#: size does)
-BROADCAST_MERGES_THRESHOLD = 1024
-
-#: beyond this, even bucketed JVM map scans (~2*sqrt(N) per probe) lose
-#: to an Arrow-batched tokenizer with O(1) dict lookups — GPT-2-size
-#: tables auto-route to engine="arrow"
-ARROW_MERGES_THRESHOLD = 8192
-
-
-def _pair_rank(m, a, b, n_buckets=None):
-    key = F.concat_ws(" ", a, b)
-    if n_buckets is not None:
-        bucket = F.pmod(F.crc32(key.cast("binary")),
-                        F.lit(n_buckets)).cast("int")
-        return F.coalesce(F.element_at(F.element_at(m, bucket), key),
-                          F.lit(_NO_MERGE))
-    return F.coalesce(F.element_at(m, key), F.lit(_NO_MERGE))
-
-
-def _merge_step(syms, m, n_buckets=None):
-    """ONE merge: find the lowest-rank adjacent pair (leftmost on ties via
-    first-index array_position) and join that occurrence.  Identity when
-    no pair is in the table or fewer than 2 symbols remain."""
-    n = F.size(syms)
-    ranks = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - 1, F.lit(1))),
-        lambda i: _pair_rank(m, F.element_at(syms, i),
-                             F.element_at(syms, i + 1), n_buckets))
-    best = F.array_min(ranks)
-    p = F.array_position(ranks, best).cast("int")
-    merged = F.concat(
-        F.slice(syms, 1, p - 1),
-        F.array(F.concat(F.element_at(syms, p), F.element_at(syms, p + 1))),
-        F.when(n - p - 1 > 0, F.slice(syms, p + 2, n - p - 1))
-         .otherwise(F.array().cast("array<string>")))
-    return F.when((n < 2) | (best >= _NO_MERGE), syms).otherwise(merged)
-
-
-def _chars(word):
-    return F.transform(F.sequence(F.lit(1), F.length(word)),
-                       lambda i: F.substring(word, i, 1))
-
-
-def _word_rows(df, col, id_col, max_word_len):
-    """(id, word-index, symbol-array) rows: pre-tokenize, explode, split
-    to characters.  Words are truncated to ``max_word_len`` characters
-    (bounds the merge-loop depth; count error only on longer words, and
-    the truncation is replayed identically by the oracle)."""
-    return (_word_instances(df, col, id_col, max_word_len)
-            .withColumn("__s", _chars(F.col("__w")))
-            .drop("__w"))
-
-
-def _word_instances(df, col, id_col, max_word_len):
-    """(id, word-index, truncated word) instance rows: pre-tokenize and
-    explode, WITHOUT the per-instance character split — the shared front
-    of the distinct-vocabulary lowering below."""
-    words = F.regexp_extract_all(F.lower(F.col(col)), F.lit(_BPE_RE), 0)
-    return (df
-            .select(F.col(id_col), F.posexplode(words).alias("__wi", "__w"))
-            .withColumn("__w", F.substring(F.col("__w"), 1, max_word_len)))
-
-
-# r12 recorded the distinct-vocabulary lowering of the expr tier as a
-# negative result (bpe_train_gate 5.8 -> ~7 s WARM: the three added
-# stage boundaries cost more driver/AQE time than the executor CPU the
-# Zipf factor saved, "already sub-second").  r13 overturned it with a
-# cold-JVM measurement: the merge-step higher-order functions are
-# CodegenFallback (interpreted), and before HotSpot C2 compiles those
-# interpreter paths the per-instance loop runs 25-60 s at sf0.1 —
-# bpe_train_gate measured 6.6 / 7.2 / 13.5 s across three identical
-# full-bench runs and 7-64 s across reps of a cold session, entirely
-# tracking JIT warmth.  The distinct lowering bounds the interpreted
-# volume by the vocabulary (~8k words vs ~275k instances at sf0.1), so
-# the cold case collapses from tens of seconds to roughly the warm
-# cost, at ~1 s of extra stage overhead warm — stability the grading
-# contract (cold JVM, min-of-3) values far more than the warm second.
-# The Arrow tier (the default engine) keeps its per-task word memo.
-
-
-def _run_merge_loop(rows, merges, max_word_len, broadcast=None):
-    """``max_word_len - 1`` materialized merge steps.  Each step is its
-    own projection (withColumn) so Catalyst does NOT inline the
-    multi-reference array expression 15 levels deep — CollapseProject
-    declines to duplicate non-cheap expressions, keeping plan size and
-    per-row work linear in the step count.
-
-    ``broadcast``: None = auto (literal plan map below
-    ``BROADCAST_MERGES_THRESHOLD``, broadcast join above); True/False
-    forces the variant.  Both produce identical tokens — the broadcast
-    path joins the one-row merges MAP onto the word rows (a broadcast
-    nested-loop join against a single row), and every merge step then
-    references that attribute instead of a literal."""
-    if broadcast is None:
-        broadcast = len(merges) > BROADCAST_MERGES_THRESHOLD
-    nb = None
-    if broadcast:
-        mdf, nb = _merges_relation(rows.sparkSession, merges)
-        rows = rows.join(F.broadcast(mdf))
-        m = F.col("__merges")
-    else:
-        m = _merges_map(merges)
-    for _ in range(max(1, max_word_len - 1)):
-        rows = rows.withColumn("__s", _merge_step(F.col("__s"), m, nb))
-    return rows.drop("__merges") if broadcast else rows
-
-
-def _arrow_bpe_fn(merges, col, id_col, max_word_len, out, mode):
-    """Arrow-batched (mapInPandas) classic-BPE tokenizer — the
-    GPT-2-scale engine tier.  A Python dict gives O(1) rank lookups
-    where every JVM MapType probe is a linear (flat) or ~2*sqrt(N)
-    (bucketed) scan, so past ``ARROW_MERGES_THRESHOLD`` merges this is
-    the only formulation whose per-token cost is independent of
-    vocabulary size.  The merge loop is the SAME algorithm as the
-    expression path (bounded steps, lowest-rank pair, leftmost on ties,
-    words truncated to ``max_word_len``) — parity is pinned in
-    test_bpe.  The pre-tokenizer regex is evaluated by Python ``re``
-    here and Java regex in the expression path; the pattern uses only
-    ASCII classes so both agree."""
-    import re
-
-    import pandas as pd
-
-    ranks = {(a, b): i for i, (a, b) in enumerate(merges)}
-    pat = re.compile(_BPE_RE)
-    # r12: word-level memo, bounded.  A word's segmentation is
-    # context-free and Zipf makes most instances repeats, so caching
-    # (truncated word -> tokens) removes the merge loop from all but the
-    # first occurrence per task.  The bound keeps a pathological
-    # all-unique-words partition from growing the cache without limit
-    # (Heaps' law keeps real-corpus hit rates high anyway).
+def _bpe_col(col, merges, max_word_len, encode):
+    """The tokenizer: ``col``'s BPE tokens (``encode``, array<string>) or
+    their count (bigint), as one scalar Arrow UDF over the text."""
+    ranks = {(a, b): i for i, (a, b) in enumerate(
+        DEFAULT_MERGES if merges is None else merges)}
+    pat = re.compile(_BPE_RE, re.ASCII)
+    # word-level memo, bounded.  A word's segmentation is context-free
+    # and Zipf makes most instances repeats, so caching (truncated word
+    # -> tokens) removes the merge loop from all but the first occurrence
+    # per task.  The bound keeps a pathological all-unique-words
+    # partition from growing the cache without limit.
     cache: dict = {}
 
     def encode_word(word):
@@ -299,146 +115,43 @@ def _arrow_bpe_fn(merges, col, id_col, max_word_len, out, mode):
             cache[word] = syms
         return syms
 
-    def fn(batches):
-        for pdf in batches:
-            toks = [[t for w in pat.findall(s.lower())
-                     for t in encode_word(w)]
-                    for s in pdf[col].fillna("")]
-            if mode == "count":
-                yield pd.DataFrame({id_col: pdf[id_col],
-                                    out: [len(t) for t in toks]})
-            else:
-                yield pd.DataFrame({id_col: pdf[id_col], out: toks})
+    def tokens(s):
+        if not isinstance(s, str):          # NULL text: no tokens
+            return []
+        return [t for w in pat.findall(s.lower()) for t in encode_word(w)]
 
-    return fn
+    def fn(texts):      # pandas Series -> Series, one Arrow batch
+        toks = texts.map(tokens)
+        return toks if encode else toks.map(len)
 
-
-def _arrow_bpe(tbl, merges, col, id_col, out, max_word_len, mode):
-    id_type = tbl.df.schema[id_col].dataType.simpleString()
-    out_type = "bigint" if mode == "count" else "array<string>"
-    fn = _arrow_bpe_fn(merges, col, id_col, max_word_len, out, mode)
-    return (tbl.df.select(id_col, col)
-            .mapInPandas(fn, f"{id_col} {id_type}, {out} {out_type}"))
-
-
-def _pick_engine(engine, merges, broadcast=None):
-    """Auto engine choice, r12 revision: Arrow by default.  The r12
-    measurement (guide §4.2) found the JVM expression tiers dominated by
-    costs that do NOT shrink with vocabulary size — per-query
-    construction + Janino compilation of the 15 chained merge-step
-    projections, and interpreted (CodegenFallback) higher-order-function
-    evaluation per row — while the Arrow tier's dict tokenizer runs the
-    same loop at O(1)/probe with one batch boundary crossing of exactly
-    two columns: 0.64 s vs 4.37 s end-to-end at sf0.1 (min-of-3, noop
-    sink) with the DEFAULT 40-entry merges, i.e. the Arrow tier wins at
-    EVERY vocabulary size, not just past ``ARROW_MERGES_THRESHOLD``.
-    An explicit ``broadcast=`` keeps the caller's chosen JVM tier (it is
-    a JVM-map-shipping knob; silently routing it to Python would grade
-    the wrong code path) — EXCEPT above ``ARROW_MERGES_THRESHOLD``,
-    where the expr tier's literal/broadcast plan map is exactly the
-    plan-size blowup the threshold exists to prevent (a >8k-entry
-    merges builds a multi-MB expression tree and minutes of Janino):
-    there the auto choice stays Arrow with a warning, restoring the
-    pre-r12 protective behavior (ADVICE r12).  Pass ``engine="expr"``
-    explicitly to override."""
-    if engine is None:
-        if broadcast is not None and len(merges) > ARROW_MERGES_THRESHOLD:
-            import warnings
-            warnings.warn(
-                f"bpe: broadcast= requests the JVM expression tier but "
-                f"{len(merges)} merges exceed ARROW_MERGES_THRESHOLD "
-                f"({ARROW_MERGES_THRESHOLD}) — using the Arrow tier to "
-                "avoid an oversized literal/broadcast plan map; pass "
-                "engine='expr' to force the JVM tier")
-            return "arrow"
-        return "expr" if broadcast is not None else "arrow"
-    if engine not in ("expr", "arrow"):
-        raise ValueError("engine must be 'expr', 'arrow', or None (auto)")
-    return engine
+    return F.pandas_udf(fn, "array<string>" if encode else "bigint")(col)
 
 
 @verb
 def bpe_token_count(tbl: SparkTbl, merges=None, col: str = "text",
-                    id_col: str = "doc_id", out: str = "n_bpe_tokens",
-                    max_word_len: int = 16, broadcast=None,
-                    engine: str | None = None):
-    """Per-document TRUE-BPE token count against a merges ranking.
-
-    One explode (zero-shuffle) + the bounded merge loop + one count
-    aggregation shuffled on ``id_col`` with map-side combine.  Documents
-    whose text produces no pre-tokens count 0.  Column-preserving: the
-    count joins back onto the FULL input row (same contract as the
-    sibling ``token_count_bpe``), so text/metadata stay available
-    downstream.
-
-    ``engine=`` picks the tokenizer tier (None = auto → ``"arrow"``
-    since r12 — measured 7x faster end-to-end than the expression tiers
-    at every vocabulary size, see the module docstring — unless the
-    caller set ``broadcast=``, which selects the JVM tier it configures):
-    ``"expr"`` — pure JVM array expressions (literal map, or bucketed
-    broadcast map per ``broadcast=``); ``"arrow"`` — mapInPandas with
-    O(1) dict lookups and a word-level memo.  All tiers produce
-    identical tokens."""
-    merges = DEFAULT_MERGES if merges is None else list(merges)
-    base = tbl.df.drop(out)
-    if _pick_engine(engine, merges, broadcast) == "arrow":
-        counts = _arrow_bpe(tbl, merges, col, id_col, out,
-                            max_word_len, "count")
-        df = (base.join(counts, id_col, "left")
-              .withColumn(out, F.coalesce(F.col(out), F.lit(0))
-                          .cast("long")))
-        return tbl.evolve(df=df)
-    # expr tier, distinct-vocabulary lowering (r13): the merge loop —
-    # interpreted per row, see the note above _run_merge_loop — runs
-    # over DISTINCT truncated words only; per-doc counts come from the
-    # (doc, word) occurrence table joined to the per-word token count.
-    # A word's segmentation is context-free, so the values are
-    # bit-identical to the per-instance loop (parity is test-pinned).
-    inst = _word_instances(tbl.df, col, id_col, max_word_len)
-    occ = (inst.groupBy(id_col, "__w")
-           .agg(F.count(F.lit(1)).alias("__k")))
-    dw = (inst.select("__w").distinct()
-          .withColumn("__s", _chars(F.col("__w"))))
-    dw = _run_merge_loop(dw, merges, max_word_len, broadcast)
-    tok = dw.select("__w", F.size("__s").cast("long").alias("__t"))
-    counts = (occ.join(tok, "__w")
-              .groupBy(id_col)
-              .agg(F.sum(F.col("__k") * F.col("__t")).alias(out)))
-    df = (base.join(counts, id_col, "left")
-          .withColumn(out, F.coalesce(F.col(out), F.lit(0)).cast("long")))
-    return tbl.evolve(df=df)
+                    out: str = "n_bpe_tokens", max_word_len: int = 16):
+    """Per-document TRUE-BPE token count against a merges ranking: the
+    tokenizer column (module docstring) added as ``out``, a narrow
+    per-row map with every input column kept.  Text that produces no
+    pre-tokens, NULL included, counts 0."""
+    return tbl.evolve(df=tbl.df.withColumn(
+        out, _bpe_col(F.col(col), merges, max_word_len, encode=False)))
 
 
 @verb
 def bpe_encode(tbl: SparkTbl, merges=None, col: str = "text",
-               id_col: str = "doc_id", out: str = "bpe_tokens",
-               max_word_len: int = 16, broadcast=None,
-               engine: str | None = None):
-    """Per-document BPE token sequence (array<string>), word order
-    preserved via the pre-tokenizer's position index.  Column-preserving:
-    the sequence joins back onto the FULL input row.  ``engine=`` as in
-    ``bpe_token_count`` (auto → the Arrow tier since r12)."""
-    merges = DEFAULT_MERGES if merges is None else list(merges)
-    base = tbl.df.drop(out)
-    if _pick_engine(engine, merges, broadcast) == "arrow":
-        seqs = _arrow_bpe(tbl, merges, col, id_col, out,
-                          max_word_len, "encode")
-    else:
-        # same distinct-vocabulary lowering as bpe_token_count: merge
-        # loop over distinct words, instance join-back keyed on the word
-        inst = _word_instances(tbl.df, col, id_col, max_word_len)
-        dw = (inst.select("__w").distinct()
-              .withColumn("__s", _chars(F.col("__w"))))
-        dw = _run_merge_loop(dw, merges, max_word_len, broadcast)
-        rows = inst.join(dw.select("__w", "__s"), "__w")
-        seqs = (rows.groupBy(id_col)
-                .agg(F.flatten(F.array_sort(F.collect_list(
-                    F.struct(F.col("__wi"), F.col("__s")))).getField("__s"))
-                    .alias(out)))
-    df = (base.join(seqs, id_col, "left")
-          .withColumn(out, F.coalesce(F.col(out),
-                                      F.array().cast("array<string>"))))
-    return tbl.evolve(df=df)
+               out: str = "bpe_tokens", max_word_len: int = 16):
+    """Per-document BPE token sequence (array<string>, words in text
+    order) added as ``out``, every input column kept; NULL text → []."""
+    return tbl.evolve(df=tbl.df.withColumn(
+        out, _bpe_col(F.col(col), merges, max_word_len, encode=True)))
+
+
+def bpe_tokens_col(col, merges=None, max_word_len: int = 16):
+    """Expression-level token COUNT of ``col`` (a name or Column) — the
+    ``tokenizer=`` hook for token-consuming verbs (token_budget_sample).
+    The same column ``bpe_token_count`` adds."""
+    return _bpe_col(col, merges, max_word_len, encode=False)
 
 
 #: hard ceiling on the bytes the trainer may pull to the driver (the same
@@ -533,7 +246,7 @@ def bpe_train(tbl, col: str = "text", n_merges: int = 256,
 
     - the ONE pass over the corpus is a word-frequency aggregation
       (pre-tokenize with the same ``_BPE_RE``/lowercase/``max_word_len``
-      truncation the apply tiers use, explode, groupBy word) — a single
+      truncation the tokenizer uses, explode, groupBy word) — a single
       map-side-combined shuffle whose output is the VOCABULARY, which
       Heaps' law keeps sublinear in corpus size;
     - the histogram is cut to the top ``max_vocab_words`` words by
@@ -582,36 +295,3 @@ def bpe_train(tbl, col: str = "text", n_merges: int = 256,
     pairs = sorted(((r["__w"], r["__n"]) for r in rows),
                    key=lambda wn: (-wn[1], wn[0]))
     return _train_on_histogram(pairs, n_merges, min_freq)
-
-
-def _bind(col, fn):
-    """Expression-level LET: evaluate ``col`` once, bind it to a lambda
-    variable, and build ``fn`` against that variable.  Spark expressions
-    have no let form, but a single-element ``transform`` provides one —
-    every reference to the bound value inside ``fn`` is a leaf
-    NamedLambdaVariable instead of a copy of the whole subtree.  Without
-    this, chaining N merge steps (each referencing its input ~6 times)
-    builds a 6^N-node tree and OOMs the driver at N=15; with it, tree
-    size is linear in N."""
-    return F.element_at(F.transform(F.array(col), fn), 1)
-
-
-def bpe_tokens_col(col, merges=None, max_word_len: int = 16):
-    """Expression-level token COUNT for a single row's text — the
-    ``tokenizer=`` hook for token-consuming verbs (token_budget_sample).
-    Same merge loop as the row verbs, nested as one per-row expression
-    over the word array (no explode); each merge step is let-bound (see
-    ``_bind``) so the expression stays linear in the step count."""
-    merges = DEFAULT_MERGES if merges is None else list(merges)
-    words = F.regexp_extract_all(F.lower(col), F.lit(_BPE_RE), 0)
-
-    def count_word(w, m):
-        syms = _chars(F.substring(w, 1, max_word_len))
-        for _ in range(max_word_len - 1):
-            syms = _bind(syms, lambda s: _merge_step(s, m))
-        return F.size(syms)
-
-    return _bind(
-        _merges_map(merges),
-        lambda m: F.aggregate(words, F.lit(0).cast("long"),
-                              lambda acc, w: acc + count_word(w, m)))

@@ -652,14 +652,16 @@ def token_budget_sample(tbl: SparkTbl, *strata, budget: int,
                        - F.col("__tb_n")) < budget)
               .drop("__tb_n", "__tb_b", "__tb_run", "__tb_off"))
         return tbl.evolve(df=df)
+    # bind the count once (it may be a full tokenize, e.g. a UDF): the
+    # running sum and the subtraction both read the bound column
     w = (Window.partitionBy(*[F.col(k) for k in keys])
          .orderBy(h.asc(), F.col(id_col).asc())
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    before = F.sum(ntok).over(w) - ntok
     df = (tbl.df
-          .withColumn("__before", before)
+          .withColumn("__tb_n", ntok)
+          .withColumn("__before", F.sum("__tb_n").over(w) - F.col("__tb_n"))
           .filter(F.col("__before") < budget)
-          .drop("__before"))
+          .drop("__tb_n", "__before"))
     return tbl.evolve(df=df)
 
 

@@ -150,22 +150,53 @@ def _key_str(k):
     return str(k)
 
 
-def _concat_key(parts, sep):
-    """The ``concat_ws(sep, *names_from)`` pivot key of typed name parts
-    as ``_key_str`` renders them, NULL parts skipped: for a spec frame's
-    rows and ``names_expand`` combinations absent from the data."""
-    return sep.join(_key_str(p) for p in parts if p is not None)
+def _text_keyed(df, names_from):
+    """Whether the widening pivots on text rather than on the typed
+    value of its one names_from: several names_from join into one
+    ``concat_ws`` key, and a floating one pivots on its string cast (a
+    NaN value never reaches a typed pivot slot)."""
+    return len(names_from) > 1 or isinstance(
+        df.schema[names_from[0]].dataType, (T.FloatType, T.DoubleType))
+
+
+def _pivot_key(df, names_from, names_sep):
+    """The Column the widening pivots on (see ``_text_keyed``)."""
+    if len(names_from) > 1:
+        return F.concat_ws(names_sep, *names_from)
+    c = F.col(names_from[0])
+    return c.cast("string") if _text_keyed(df, names_from) else c
+
+
+def _spec_keys(df, names_from, names_sep, parts_rows):
+    """The pivot keys of typed name-part rows (a spec frame's rows,
+    ``names_expand`` combinations absent from the data), rendered by
+    Spark with the data's own column types — a 32-bit float part keys
+    as '0.1' and a decimal(10,2) one as '1.50', like the data's key, not
+    as Python prints the value.  One array of literal expressions over
+    a one-row local relation: constant-folded, so no job runs."""
+    if not parts_rows or not _text_keyed(df, names_from):
+        return [p[0] for p in parts_rows]
+    types = [df.schema[c].dataType for c in names_from]
+
+    def key(parts):     # _pivot_key over literals of the data's types
+        cols = [F.lit(p).cast(t) for p, t in zip(parts, types)]
+        return (F.concat_ws(names_sep, *cols) if len(cols) > 1
+                else cols[0].cast("string"))
+
+    one = df.sparkSession.sql("VALUES (1)")
+    keys = F.array(*[key(parts) for parts in parts_rows])
+    return one.select(keys).collect()[0][0]
 
 
 def _wide_name(key, parts, v, names_prefix, names_sep, names_glue):
     """Output column name of one widened key — the one naming rule of
     the widening spec (``_wider_cells``).  ``key`` is the key's pivot
-    name (``_key_str``, or the ``concat_ws`` key for several names_from),
-    ``parts`` its name parts as ``_key_str`` names, ``v`` the value
-    column when several are widened (else None).  ``names_glue`` fills
-    ``{variable}``/``{value}`` from the first two name parts, like the
-    reference's ``_collapse_index_names`` (pivot_wide.py:48-61), and is
-    ignored for a single part."""
+    name (the data's text key, see ``_pivot_key``, or ``_key_str`` of a
+    typed one), ``parts`` its name parts as ``_key_str`` names, ``v``
+    the value column when several are widened (else None).
+    ``names_glue`` fills ``{variable}``/``{value}`` from the first two
+    name parts, like the reference's ``_collapse_index_names``
+    (pivot_wide.py:48-61), and is ignored for a single part."""
     if names_glue is not None and len(parts) + (v is not None) > 1:
         if v is not None:
             return names_glue.format(variable=v, value=parts[0])
@@ -200,37 +231,46 @@ def _wider_cells(tbl, work, names_from, values_from, names_prefix="",
     output name)]`` in output column order, from ONE bounded distinct scan
     of ``names_from`` over ``work``.  One names_from pivots on its typed
     value and sorts NULL last, then by declared factor level
-    (functions/cat.py ledger), then by ``str``.  Several pivot on the
-    data's own ``concat_ws`` key, read in that same scan, and sort by it;
-    ``names_expand`` crosses each part's levels from the scan instead
-    (reference: pivot_wide.py:486-488), keying an absent combination with
-    ``_concat_key`` and dropping it when that key is already taken."""
-    key_col = F.concat_ws(names_sep, *names_from) if len(names_from) > 1 \
-        else F.col(names_from[0])
+    (functions/cat.py ledger), then by ``str``.  The pivot key
+    (``_pivot_key``: the typed value, or the data's text for several or
+    a floating names_from) is read in that same scan; several names_from
+    sort by it.  ``names_expand`` crosses each part's levels from the
+    scan instead (reference: pivot_wide.py:486-488), keying an absent
+    combination with ``_spec_keys`` and dropping it when that key is
+    already taken."""
     rows = [(r[0], tuple(r[1:])) for r in _collect_spec(
-        work.select(key_col.alias("__pw_key"), *names_from).distinct())]
+        work.select(_pivot_key(work, names_from, names_sep).alias("__pw_key"),
+                    *names_from).distinct())]
     meta = tbl.factors.get(names_from[0]) if len(names_from) == 1 else None
     pos = {v: i for i, v in enumerate(
         meta.levels if meta is not None and meta.levels is not None else ())}
-    rows.sort(key=lambda r: (r[0] is None, pos.get(r[0], len(pos)), str(r[0]),
-                             [(p is None, str(p)) for p in r[1]]))
+
+    def order(r):       # one names_from sorts by its typed value
+        v = r[1][0] if len(names_from) == 1 else r[0]
+        return (v is None, pos.get(v, len(pos)), str(v),
+                [(p is None, str(p)) for p in r[1]])
+    rows.sort(key=order)
     if names_expand and len(names_from) > 1:
         seen = {parts: key for key, parts in rows}
+        grid = list(product(*[sorted({p[i] for p in seen},
+                                     key=lambda v: (v is None, str(v)))
+                              for i in range(len(names_from))]))
+        if len(grid) > MAX_PIVOT_KEYS:
+            raise TranslationError(
+                f"names_expand grid exceeds {MAX_PIVOT_KEYS} keys")
+        absent = [parts for parts in grid if parts not in seen]
+        new = dict(zip(absent, _spec_keys(work, names_from, names_sep,
+                                          absent)))
         taken, rows = set(seen.values()), []
-        for parts in product(*[sorted({p[i] for p in seen},
-                                      key=lambda v: (v is None, str(v)))
-                               for i in range(len(names_from))]):
-            key = seen.get(parts, _concat_key(parts, names_sep))
+        for parts in grid:
+            key = seen.get(parts, new.get(parts))
             if parts in seen or key not in taken:
                 taken.add(key)
                 rows.append((key, parts))
-        if len(rows) > MAX_PIVOT_KEYS:
-            raise TranslationError(
-                f"names_expand grid exceeds {MAX_PIVOT_KEYS} keys")
 
     def cell(key, parts, v):
         strs = tuple(_key_str(p) for p in parts)
-        name = _wide_name(strs[0] if len(parts) == 1 else key, strs,
+        name = _wide_name(key if isinstance(key, str) else strs[0], strs,
                           v if len(values_from) > 1 else None,
                           names_prefix, names_sep, names_glue)
         return (parts, key, v, name)
@@ -243,10 +283,10 @@ def _wider_cells(tbl, work, names_from, values_from, names_prefix="",
 def _widen(work, ids, names_from, names_sep, cells, aggs):
     """The one long→wide lowering of ``cells`` (see ``_wider_cells``),
     ``aggs`` mapping each value column to its aggregate Column: ONE pivot
-    on the cells' keys (``names_from[0]``, or the ``concat_ws`` of several
-    names_from), renamed by position, the ids then the cells.  Both the
-    output names and the (pivot key, value column) slots must be unique:
-    two cells on one slot would show the same merged values."""
+    on the cells' keys (``_pivot_key``), renamed by position, the ids
+    then the cells.  Both the output names and the (pivot key, value
+    column) slots must be unique: two cells on one slot would show the
+    same merged values."""
     names = [n for *_c, n in cells]
     slots = {(k, v) for _p, k, v, _n in cells}
     if len(set(names)) != len(names) or len(slots) != len(cells):
@@ -255,9 +295,10 @@ def _widen(work, ids, names_from, names_sep, cells, aggs):
             "(names_repair='check_unique', the reference default; "
             "concat_ws skips NULL name parts, so two can share a key)")
     key_col = names_from[0]
-    if len(names_from) > 1:
+    if _text_keyed(work, names_from):
         key_col = "__pw_key"
-        work = work.withColumn(key_col, F.concat_ws(names_sep, *names_from))
+        work = work.withColumn(key_col,
+                               _pivot_key(work, names_from, names_sep))
     keys = list(dict.fromkeys(k for _p, k, _v, _n in cells))
     exprs = list(aggs.values())
     if len(exprs) > 1:      # Spark names several aggregates' columns by alias
@@ -569,8 +610,9 @@ def one_hot(tbl: SparkTbl, col, prefix: str | None = None,
              if c[1] is not None]
     if drop_first:
         cells = cells[1:]
+    key = _pivot_key(base, [name], "_")
     out = base.withColumns({
-        n: F.when(F.col(name) == F.lit(k), 1).otherwise(0).cast(dtype)
+        n: F.when(key == F.lit(k), 1).otherwise(0).cast(dtype)
         for _p, k, _v, n in cells
     })
     if remove:  # pandas get_dummies drops the encoded column
@@ -948,11 +990,10 @@ def pivot_wider_spec(tbl: SparkTbl, spec, id_cols=None, values_fill=None,
     def typed(x):       # pandas holds a NULL key as None or NaN
         return None if x is None or (isinstance(x, float) and x != x) else x
 
-    cells = []
-    for r in spec.to_dict("records"):
-        parts = tuple(typed(r[c]) for c in names_from)
-        key = parts[0] if len(parts) == 1 else _concat_key(parts, names_sep)
-        cells.append((parts, key, r[".value"], r[".name"]))
+    recs = spec.to_dict("records")
+    parts = [tuple(typed(r[c]) for c in names_from) for r in recs]
+    cells = [(p, k, r[".value"], r[".name"]) for p, k, r in zip(
+        parts, _spec_keys(tbl.df, names_from, names_sep, parts), recs)]
     df = _widen(tbl.df, ids, names_from, names_sep, cells,
                 _value_aggs(values_fn, values_from))
     if values_fill is not None:

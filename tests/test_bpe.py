@@ -1,7 +1,7 @@
 """True-BPE tokenizer (corpus/bpe.py): parity against a pure-Python
 reference implementation of classic merge-table BPE (merge ALL
 occurrences of the lowest-rank pair per step, left to right) — the
-engine's one-occurrence-per-step formulation must be exactly
+tokenizer's one-occurrence-per-step formulation must be exactly
 equivalent."""
 
 import re
@@ -13,7 +13,9 @@ from siuba_spark.corpus.bpe import (
     DEFAULT_MERGES, bpe_encode, bpe_token_count, bpe_tokens_col,
 )
 
-_WORD_RE = re.compile(r"[a-z]+|[0-9]+|[^a-z0-9\s]")
+# ASCII ``\s``, like Java's regex and the tokenizer: NBSP / U+2003 are
+# symbol tokens, not separators
+_WORD_RE = re.compile(r"[a-z]+|[0-9]+|[^a-z0-9\s]", re.ASCII)
 
 
 def _ref_bpe_word(word, merges, max_word_len=16):
@@ -100,6 +102,10 @@ def test_bpe_tokenizer_hook_on_token_budget(spark):
         t, "g", budget=per_doc + 1,
         tokenizer=lambda c: bpe_tokens_col(c)).df
     assert out.count() == 2  # first fits under budget, second overshoots
+    # the count is bound once: the tokenizer runs in ONE Arrow eval
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1
+    assert "BatchEvalPython" not in plan
 
 
 def test_bpe_hypothesis_parity(spark):
@@ -141,76 +147,61 @@ def test_bpe_counts_feed_pack_sequences(spark):
     assert [seqs[i] for i in range(6)] == [0, 0, 1, 1, 2, 2]
 
 
-def test_bpe_broadcast_variant_matches_literal(spark):
-    """broadcast=True routes the merges ranking through a one-row
-    broadcast-joined MAP relation instead of a literal plan map — the
-    token output must be identical (VERDICT r7 item 5: the declared
-    bpe.py TODO)."""
-    rows = [(0, "the expression of the word"), (1, "another thing here"),
-            (2, ""), (3, None)]
-    t = tbl(spark.createDataFrame(rows, "doc_id long, text string"))
-    lit = {r.doc_id: r.n_bpe_tokens
-           for r in bpe_token_count(t, broadcast=False).df.collect()}
-    bc = {r.doc_id: r.n_bpe_tokens
-          for r in bpe_token_count(t, broadcast=True).df.collect()}
-    assert lit == bc
-    lit_e = {r.doc_id: list(r.bpe_tokens)
-             for r in bpe_encode(t, broadcast=False).df.collect()}
-    bc_e = {r.doc_id: list(r.bpe_tokens)
-            for r in bpe_encode(t, broadcast=True).df.collect()}
-    assert lit_e == bc_e
-    # the merges relation never leaks into the output schema
-    assert "__merges" not in bpe_encode(t, broadcast=True).df.columns
+def test_bpe_null_text_and_columns_kept(spark):
+    """Every entry point is a per-row column: NULL and empty text give 0
+    tokens / [], input columns (and their order) are kept, and rows that
+    share an id — or have a NULL id — each get their own value."""
+    from pyspark.sql import functions as F
 
-
-def test_bpe_broadcast_auto_switch_large_table(spark):
-    """A GPT-2-scale merges table (> BROADCAST_MERGES_THRESHOLD) switches
-    to the broadcast join automatically and completes; real merges keep
-    their effect (synthetic filler ranks are junk pairs that never
-    match)."""
-    from siuba_spark.corpus.bpe import BROADCAST_MERGES_THRESHOLD
-    filler = [(f"zz{i}", f"qq{i}")
-              for i in range(BROADCAST_MERGES_THRESHOLD + 1000)]
-    merges = list(DEFAULT_MERGES) + filler
-    t = tbl(spark.createDataFrame([(0, "the thing is here")],
-                                  "doc_id long, text string"))
-    big = bpe_token_count(t, merges=merges).df.collect()[0].n_bpe_tokens
-    small = bpe_token_count(t, merges=DEFAULT_MERGES).df.collect()[0] \
-        .n_bpe_tokens
-    assert big == small
-
-
-def test_bpe_arrow_engine_matches_expr(spark):
-    """engine="arrow" (mapInPandas dict tokenizer — the GPT-2-scale
-    tier) produces the identical tokens and counts as the expression
-    path on every fixture text."""
+    rows = [(1, "the thing", "x"), (1, "another word here", "y"),
+            (None, "the", "z"), (2, "", "w"), (3, None, "v")]
     t = tbl(spark.createDataFrame(
-        list(enumerate(TEXTS)), "doc_id long, text string"))
-    expr_e = {r.doc_id: list(r.bpe_tokens)
-              for r in bpe_encode(t, engine="expr").df.collect()}
-    arr_e = {r.doc_id: list(r.bpe_tokens)
-             for r in bpe_encode(t, engine="arrow").df.collect()}
-    assert expr_e == arr_e
-    expr_c = {r.doc_id: r.n_bpe_tokens
-              for r in bpe_token_count(t, engine="expr").df.collect()}
-    arr_c = {r.doc_id: r.n_bpe_tokens
-             for r in bpe_token_count(t, engine="arrow").df.collect()}
-    assert expr_c == arr_c
-    # column-preserving + null text -> 0 / [] on the arrow path too
-    tn = tbl(spark.createDataFrame([(0, None)], "doc_id long, text string"))
-    row = bpe_token_count(tn, engine="arrow").df.collect()[0]
-    assert row.n_bpe_tokens == 0
-    assert list(bpe_encode(tn, engine="arrow").df.collect()[0].bpe_tokens) == []
+        rows, "doc_id long, text string, tag string"))
+    want = [len(_ref_bpe_text(r[1] or "", DEFAULT_MERGES)) for r in rows]
+    cnt = bpe_token_count(t).df
+    assert cnt.columns == ["doc_id", "text", "tag", "n_bpe_tokens"]
+    assert [(r.tag, r.n_bpe_tokens) for r in cnt.collect()] == \
+        [(r[2], n) for r, n in zip(rows, want)]
+    enc = bpe_encode(t).df
+    assert enc.columns == ["doc_id", "text", "tag", "bpe_tokens"]
+    assert [list(r.bpe_tokens) for r in enc.collect()] == \
+        [_ref_bpe_text(r[1] or "", DEFAULT_MERGES) for r in rows]
+    col = t.df.select(bpe_tokens_col(F.col("text")).alias("n"))
+    assert [r.n for r in col.collect()] == want
+    assert want[2:] == [1, 0, 0]
+
+
+def test_bpe_pretokenizer_matches_java_regex(spark):
+    """The tokenizer's words are the words Spark's Java regex extracts
+    (the ones bpe_train's histogram counts): ASCII ``\\s``, so NBSP and
+    EM SPACE are symbol tokens and tab / vertical tab separate.  With no
+    merges every token is one character of a (truncated) word."""
+    from pyspark.sql import functions as F
+
+    from siuba_spark.corpus.text import _BPE_RE
+    texts = ["the\u00a0thing", "a\u2003b c", "tab\there", "v\x0btab",
+             "x\u00a0\u00a0\u2003y\t\x0b"]
+    t = tbl(spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"))
+    java = t.df.select("doc_id", F.regexp_extract_all(
+        F.lower("text"), F.lit(_BPE_RE), 0).alias("w"))
+    want = {r.doc_id: [c for w in r.w for c in w[:16]]
+            for r in java.collect()}
+    got = {r.doc_id: list(r.bpe_tokens)
+           for r in bpe_encode(t, merges=[]).df.collect()}
+    assert got == want
+    assert got[0] == ["t", "h", "e", "\u00a0", "t", "h", "i", "n", "g"]
+    assert [_ref_bpe_text(x, []) for x in texts] == \
+        [want[i] for i in range(len(texts))]
 
 
 def test_bpe_arrow_auto_at_gpt2_scale(spark):
-    """> ARROW_MERGES_THRESHOLD merges auto-routes to the arrow engine
-    and a 51k-merge table completes fast; junk filler pairs never match,
-    so counts equal the DEFAULT_MERGES result."""
-    from siuba_spark.corpus.bpe import ARROW_MERGES_THRESHOLD
+    """A GPT-2-size table (50k merges) completes fast — dict lookups
+    cost the same at any size; junk filler pairs never match, so counts
+    equal the DEFAULT_MERGES result."""
     filler = [(f"zz{i}", f"qq{i}") for i in range(50_000)]
     merges = list(DEFAULT_MERGES) + filler
-    assert len(merges) > ARROW_MERGES_THRESHOLD
+    assert len(merges) == 50_040
     t = tbl(spark.createDataFrame(
         [(0, "the thing is here and the word is there")],
         "doc_id long, text string"))
@@ -288,7 +279,7 @@ def test_bpe_train_hypothesis_parity():
 
 def test_bpe_train_end_to_end(spark):
     """Distributed histogram + driver merge loop: learned merges feed the
-    apply tiers unchanged and compress the corpus; training is
+    tokenizer unchanged and compress the corpus; training is
     deterministic across invocations."""
     from siuba_spark.corpus.bpe import bpe_train
 
@@ -367,7 +358,7 @@ def test_bpe_train_byte_guard_fires_before_any_job(spark, monkeypatch):
 
 def test_bpe_train_truncation_matches_apply(spark):
     """Words longer than max_word_len train on the SAME truncated form
-    the apply tiers tokenize, so train/apply stay consistent."""
+    the tokenizer encodes, so train/apply stay consistent."""
     from siuba_spark.corpus.bpe import bpe_train
     long_word = "abcdefghijklmnopqrstuvwxyz"
     t = tbl(spark.createDataFrame([(0, f"{long_word} {long_word}")],

@@ -7,7 +7,7 @@ window pipelines must match DuckDB exactly.
 import duckdb
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from siuba_spark import SparkTbl, _, arrange, group_by, mutate, summarize
@@ -390,3 +390,104 @@ def test_dedup_segments_doc_none_matches_python_reference(spark, docs):
         if kept:
             want[i] = " ".join(kept)
     assert got_map == want
+
+
+_BPE_WORD = st.one_of(
+    st.text(alphabet="theandingwofrsxTHE", min_size=1, max_size=12),
+    # longer than max_word_len=16: truncated before the merge loop
+    st.text(alphabet="theandingwofrst", min_size=17, max_size=24),
+    st.text(alphabet="0123456789.,!?'-\u00a0\t", min_size=1, max_size=3),
+)
+_BPE_TEXT = st.one_of(st.none(), st.just(""),
+                      st.lists(_BPE_WORD, max_size=6).map(" ".join))
+
+
+@settings(max_examples=6, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(docs=st.lists(
+    st.tuples(st.one_of(st.none(), st.integers(0, 2)), _BPE_TEXT),
+    min_size=1, max_size=10),
+    budget=st.integers(1, 30))
+def test_bpe_entry_points_match_reference_row_by_row(spark, docs, budget):
+    """bpe_token_count, bpe_encode and bpe_tokens_col (in a select and
+    as token_budget_sample's tokenizer) equal the classic-BPE reference
+    row by row: duplicate and NULL ids, NULL and empty text, digits,
+    punctuation, NBSP and words past max_word_len."""
+    import hashlib
+
+    from pyspark.sql import functions as F
+
+    from siuba_spark.corpus.bpe import (
+        DEFAULT_MERGES, bpe_encode, bpe_token_count, bpe_tokens_col)
+    from siuba_spark.corpus.quality import token_budget_sample
+
+    from .test_bpe import _ref_bpe_text
+
+    rows = [(i, d, i % 2, txt) for i, (d, txt) in enumerate(docs)]
+    t = SparkTbl(spark.createDataFrame(
+        rows, "i long, doc_id long, g long, text string"))
+    want = [_ref_bpe_text(txt or "", DEFAULT_MERGES) for *_r, txt in rows]
+    n_want = [len(w) for w in want]
+
+    def by_row(df, c):
+        return [r[c] for r in df.orderBy("i").collect()]
+
+    assert by_row(bpe_token_count(t).df, "n_bpe_tokens") == n_want
+    assert [list(x) for x in by_row(bpe_encode(t).df, "bpe_tokens")] \
+        == want
+    assert by_row(t.df.select("i", bpe_tokens_col(F.col("text"))
+                              .alias("n")), "n") == n_want
+
+    # the sampler keeps a row while its stratum's running token total
+    # (md5(i) order) before it is under budget
+    kept, run = set(), {}
+    for i, _d, g, _txt in sorted(
+            rows, key=lambda r: (hashlib.md5(str(r[0]).encode())
+                                 .hexdigest(), r[0])):
+        if run.get(g, 0) < budget:
+            kept.add(i)
+        run[g] = run.get(g, 0) + n_want[i]
+    got = token_budget_sample(t, "g", budget=budget, id_col="i",
+                              tokenizer=bpe_tokens_col).df
+    assert set(by_row(got, "i")) == kept
+
+
+_AGG_X = st.one_of(st.none(), st.just(float("nan")),
+                   st.integers(-50, 50).map(lambda v: v / 4.0))
+_HOT = [("h", float(i % 7), i % 3) for i in range(45)] + [
+    (k, 1.0, 0) for k in "abcde"]          # one key holds 90% of rows
+
+
+@settings(max_examples=5, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(rows=st.lists(
+    st.tuples(st.sampled_from(["a", "b", None]), _AGG_X,
+              st.one_of(st.none(), st.integers(0, 2))),
+    max_size=12))
+@example(rows=[])                          # empty frame
+@example(rows=[(None, float("nan"), None)])  # one row, NULL key, NaN
+@example(rows=_HOT)                        # hot key
+def test_mutate_agg_methods_agree(spark, rows):
+    """mutate(_agg_method="window"|"join"|"broadcast") give the same
+    rows for a method aggregate, n() and n_distinct() on NULL-key, NaN,
+    empty, single-row and hot-key frames (NULL and NaN told apart)."""
+    from siuba_spark import n, n_distinct
+
+    t = group_by(SparkTbl(spark.createDataFrame(
+        [(i, *r) for i, r in enumerate(rows)],
+        "i long, g string, x double, k long")), _.g)
+
+    def norm(v):
+        return "NULL" if v is None else "NaN" if v != v else v
+
+    def run(method):
+        out = mutate(t, m=_.x.mean(), s=_.x.sum(), mx=_.x.max(),
+                     cnt=n(_), nd=n_distinct(_.k), _agg_method=method)
+        return [tuple(map(norm, r)) for r in
+                out.df.select("i", "m", "s", "mx", "cnt", "nd")
+                .orderBy("i").collect()]
+
+    win = run("window")
+    assert len(win) == len(rows)
+    assert run("join") == win
+    assert run("broadcast") == win

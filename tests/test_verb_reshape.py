@@ -423,6 +423,34 @@ def test_pivot_wider_keys_render_like_spark(spark):
         (1, None, None, 10), (2, None, 20, None), (3, 30, None, None)]
 
 
+def test_widening_floating_keys_reach_their_slots(spark):
+    """A single double names_from pivots on its string cast, so a NaN
+    value reaches its column in pivot_wider, spread, crosstab and
+    one_hot; and a spec row's 32-bit float part keys as the data's
+    concat_ws writes it ('0.1', not the widened 0.10000000149011612)."""
+    from siuba_spark import (
+        build_wider_spec, crosstab, one_hot, pivot_wider_spec)
+    t = tbl(spark.sql(
+        "SELECT 1L id, double('NaN') d, 10L v "
+        "UNION ALL SELECT 2L, double('Infinity'), 20L"))
+    want = [(1, None, 10), (2, 20, None)]
+    for out in (pivot_wider(t, names_from="d", values_from="v").df,
+                spread(t, "d", "v").df,
+                crosstab(t, "id", "d", values="v", aggfunc="sum",
+                         fill=None).df):
+        assert out.columns == ["id", "Infinity", "NaN"]
+        assert sorted(map(tuple, out.collect())) == want
+    oh = one_hot(t, "d").df
+    assert oh.columns == ["id", "v", "d_Infinity", "d_NaN"]
+    assert sorted(map(tuple, oh.collect())) == [(1, 10, 0, 1), (2, 20, 1, 0)]
+
+    fl = tbl(spark.sql("SELECT 1L id, 'a' k, CAST(0.1 AS FLOAT) f, 10L v"))
+    for names in (["k", "f"], ["f"]):
+        spec = build_wider_spec(fl, names_from=names, values_from="v")
+        out = pivot_wider_spec(fl, spec, id_cols="id").df
+        assert out.collect() == [(1, 10)], names
+
+
 def test_pivot_longer_names_transform(spark):
     t = data_frame(spark, id=[1], wk1=[10], wk2=[20])
     out = (t >> pivot_longer(_.wk1, _.wk2, names_to="week",

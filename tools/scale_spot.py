@@ -563,25 +563,24 @@ def main():
         return out.df
 
     def bpe_true(d):
-        # the 15-step merges-table BPE loop (corpus/bpe.py): CPU-linear
-        # in corpus tokens, zero shuffle until the final per-doc count
+        # merges-table BPE (corpus/bpe.py): one Arrow UDF column, a
+        # narrow per-row map — CPU-linear in corpus tokens, no shuffle
         from siuba_spark.corpus.bpe import bpe_token_count
         return bpe_token_count(d).df.select("doc_id", "n_bpe_tokens")
 
     def bpe_bc_2k(d):
-        # mid-size vocabulary through the BUCKETED broadcast-map tier
-        # (crc32 % sqrt(N) buckets — a flat map's linear element_at scan
-        # stalled this very run at 100x before the bucketing fix)
+        # mid-size vocabulary (2k merges) through the same tokenizer —
+        # dict lookups, so the cost should match the 40-merge default
+        # (the op name is kept so older SCALE.md rows stay comparable)
         from siuba_spark.corpus.bpe import DEFAULT_MERGES, bpe_token_count
         merges = list(DEFAULT_MERGES) + [
             (f"zz{i}", f"qq{i}") for i in range(2000)]
-        return bpe_token_count(d, merges=merges, engine="expr").df \
+        return bpe_token_count(d, merges=merges).df \
             .select("doc_id", "n_bpe_tokens")
 
     def bpe_50k_arrow(d):
-        # GPT-2-size vocabulary (50k merges) through the Arrow tier —
-        # O(1) dict lookups; filler pairs never match so counts equal
-        # bpe_token_count's
+        # GPT-2-size vocabulary (50k merges) through the same tokenizer;
+        # filler pairs never match so counts equal bpe_token_count's
         from siuba_spark.corpus.bpe import DEFAULT_MERGES, bpe_token_count
         merges = list(DEFAULT_MERGES) + [
             (f"zz{i}", f"qq{i}") for i in range(50_000)]

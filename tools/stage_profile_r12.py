@@ -76,40 +76,6 @@ def profile_semantic(spark, sf):
     release_all_pins()
 
 
-def profile_bpe(spark, sf):
-    from pyspark.sql import functions as F
-
-    from siuba_spark.corpus.bpe import (_word_rows, bpe_token_count,
-                                        bpe_train)
-    from siuba_spark.plans.tbl import SparkTbl
-
-    docs = SparkTbl(spark.read.parquet(f"{sf}/documents.parquet"))
-    kw = dict(n_merges=24, min_freq=2)
-
-    t0 = time.perf_counter()
-    merges = bpe_train(docs, **kw)
-    print(f"{'bpe: train (driver, cold)':45s} {time.perf_counter()-t0:7.3f} s")
-    timeit(spark, "bpe: train",
-           lambda: bpe_train(docs, **kw))
-    rows = _word_rows(docs.df, "text", "doc_id", 16)
-    timeit(spark, "bpe: word_rows explode only", lambda: _noop(rows))
-    timeit(spark, "bpe: first-pair independent agg",
-           lambda: (rows.filter(F.size("__s") >= 2)
-                    .select(F.explode(F.arrays_zip(
-                        F.expr("slice(__s, 1, size(__s) - 1)"),
-                        F.expr("slice(__s, 2, size(__s) - 1)"))).alias("p"))
-                    .select(F.col("p.0").alias("a"), F.col("p.1").alias("b"))
-                    .groupBy("a", "b").agg(F.count(F.lit(1)).alias("n"))
-                    .orderBy(F.col("n").desc(), "a", "b").first()))
-    timeit(spark, "bpe: token_count(expr, 24 merges)",
-           lambda: _noop(bpe_token_count(docs, merges=merges,
-                                         engine="expr").df))
-    from siuba_spark.corpus.bpe import DEFAULT_MERGES
-    timeit(spark, "bpe: token_count_true (DEFAULT_MERGES)",
-           lambda: _noop(bpe_token_count(docs).df
-                         .select("doc_id", "n_bpe_tokens")))
-
-
 def profile_langid(spark, sf):
     from pyspark.sql import functions as F
 
@@ -150,8 +116,8 @@ def profile_lm(spark, sf):
                              .select("doc_id", "lm_logprob")))
 
 
-PROFILES = {"semantic": profile_semantic, "bpe": profile_bpe,
-            "langid": profile_langid, "lm": profile_lm}
+PROFILES = {"semantic": profile_semantic, "langid": profile_langid,
+            "lm": profile_lm}
 
 
 def main():
