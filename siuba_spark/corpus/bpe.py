@@ -57,7 +57,7 @@ import re
 
 from pyspark.sql import functions as F
 
-from ..plans.pipe import verb
+from ..plans.pipe import verb, wrap_table
 from ..plans.tbl import SparkTbl
 
 __all__ = ["DEFAULT_MERGES", "MAX_TRAIN_VOCAB_BYTES",
@@ -280,7 +280,7 @@ def bpe_train(tbl, col: str = "text", n_merges: int = 256,
             f"the {MAX_TRAIN_VOCAB_BYTES >> 20} MiB driver bound; "
             "lower max_vocab_words (rare-word pair counts are "
             "negligible)")
-    df = tbl.df if isinstance(tbl, SparkTbl) else tbl
+    df = wrap_table(tbl).df
     words = F.regexp_extract_all(F.lower(F.col(col)), F.lit(_BPE_RE), 0)
     hist = (df.select(F.explode(words).alias("__w"))
             .select(F.substring("__w", 1, max_word_len).alias("__w"))

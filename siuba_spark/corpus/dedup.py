@@ -282,7 +282,7 @@ def jaccard_pairs(tbl: SparkTbl, pairs=None, id_col: str = "doc_id",
             "always the wrong plan")
     df = tbl.df
     if pairs is not None:
-        pdf = pairs.df if isinstance(pairs, SparkTbl) else pairs
+        pdf = wrap_table(pairs).df
         joined = (pdf.select("id_a", "id_b")
                   .join(df.select(F.col(id_col).alias("id_a"),
                                   F.col(set_col).alias("set_a")), "id_a")
@@ -765,7 +765,7 @@ def exact_dedup_incremental(tbl: SparkTbl, store=None, cols=("text",),
     newd = exact_dedup(tbl, cols=cols, id_col=id_col, keep=keep).df
     if store is None:
         return SparkTbl(newd), SparkTbl(newd.select(*cols, id_col, "n_dups"))
-    store_df = store.df if isinstance(store, SparkTbl) else store
+    store_df = wrap_table(store).df
     # the snapshot's self-dedup aggregate feeds both merge branches plus
     # the kept-rows semi join — persist it (snapshot-sized, NOT
     # store-sized) so the agg shuffle runs once, not three times.  The
@@ -843,14 +843,30 @@ def minhash_near_dups_incremental(
 
     Contract: ids are globally unique across snapshots.
     """
+    store_df = None if store is None else wrap_table(store).df
+    pairs, new_side = _minhash_incremental(
+        tbl, store_df, col, id_col, k, num_hashes, bands, rows, threshold,
+        hash, bucket)
+    if store_df is None:
+        return pairs, new_side
+    return pairs, SparkTbl(store_df.select(id_col, "shingles", "minhash")
+                           .unionByName(new_side.df))
+
+
+def _minhash_incremental(tbl, store_df, col="text", id_col="doc_id", k=3,
+                         num_hashes=32, bands=8, rows=4, threshold=0.7,
+                         hash="xxhash64", bucket="hash"):
+    """Core of ``minhash_near_dups_incremental``: returns ``(pairs,
+    new_side)``, where ``new_side`` holds ONLY this snapshot's
+    ``(id_col, shingles, minhash)`` rows — an append-only store writes
+    them directly.  ``pairs`` pins the persisted shingle and signature
+    sides."""
     base = add_shingles(tbl, col=col, k=k)
     sets_ = base.df.select(F.col(id_col), F.col("shingles")).persist()
     sigs_new = add_minhash(SparkTbl(sets_), num_hashes=num_hashes,
                            id_col=id_col, hash=hash).df
     new_side = (sigs_new.join(sets_, id_col)
                 .select(id_col, "shingles", "minhash").persist())
-    store_df = None if store is None else (
-        store.df if isinstance(store, SparkTbl) else store)
 
     nb = _band_buckets(new_side, id_col, "minhash", bands, rows, bucket) \
         .withColumn("__new", F.lit(True))
@@ -875,10 +891,8 @@ def minhash_near_dups_incremental(
         new_side.select(id_col, "shingles").unionByName(
             store_df.select(id_col, "shingles"))
     verified = _jaccard_verify(cands, all_sets, id_col, threshold)
-    new_store = new_side if store_df is None else \
-        store_df.select(id_col, "shingles", "minhash").unionByName(new_side)
     return (SparkTbl(verified, pins=tbl.pins + (sets_, new_side)),
-            SparkTbl(new_store))
+            SparkTbl(new_side))
 
 
 @verb
@@ -1097,8 +1111,7 @@ def substring_dedup_incremental(tbl: SparkTbl, store=None, col: str = "text",
     row under hashing.
     """
     _span_validate(k, key)
-    store_df = None if store is None else (
-        store.df if isinstance(store, SparkTbl) else store)
+    store_df = None if store is None else wrap_table(store).df
     out, firsts = _span_incremental(tbl.df, store_df, col, id_col,
                                     k, sep, key)
     new_store = firsts if store_df is None else (
@@ -1136,7 +1149,7 @@ def substring_store_compact(store, id_col: str = "doc_id"):
     Returns the compacted store as a ``SparkTbl`` with the public
     ``(h, id_col, pos)`` schema.
     """
-    store_df = store.df if isinstance(store, SparkTbl) else store
+    store_df = wrap_table(store).df
     m = F.min(F.struct(F.col(id_col).alias("i"),
                        F.col("pos").alias("p"))).alias("__m")
     out = (store_df.groupBy("h").agg(m)

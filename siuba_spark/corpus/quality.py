@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..plans.pipe import verb
+from ..plans.pipe import verb, wrap_table
 from ..plans.tbl import SparkTbl
 from .text import tokens_col
 
@@ -30,10 +30,6 @@ __all__ = [
     "pack_sequences", "gopher_filter", "token_budget_sample",
     "cap_per_key", "GOPHER_DEFAULTS", "PII_PATTERNS",
 ]
-
-
-def wrap_tbl(x):
-    return x if isinstance(x, SparkTbl) else SparkTbl(x)
 
 
 def _bigrams(toks):
@@ -797,7 +793,7 @@ def ngram_contamination(tbl: SparkTbl, benchmark, n: int = 8,
     """
     from pyspark.sql.functions import broadcast
 
-    bench = wrap_tbl(benchmark)
+    bench = wrap_table(benchmark)
     bgrams = (bench.df
               .select(F.explode(_ngrams(tokens_col(F.col(bench_col)), n))
                       .alias("__bg"))
@@ -857,7 +853,7 @@ def unigram_logprob(tbl: SparkTbl, col: str = "text", id_col: str = "doc_id",
     if vocab is None:
         counts = ex.groupBy("__t").agg(F.count("*").alias("__cnt"))
     else:
-        v = wrap_tbl(vocab).df
+        v = wrap_table(vocab).df
         tok_c, cnt_c = v.columns[0], v.columns[1]
         counts = broadcast(v.select(F.col(tok_c).alias("__t"),
                                     F.col(cnt_c).cast("long").alias("__cnt")))
@@ -911,7 +907,7 @@ def lm_train(tbl, col: str = "text", order: int = 2,
         raise ValueError("order must be >= 1")
     if min_count < 1:
         raise ValueError("min_count must be >= 1")
-    t = wrap_tbl(tbl).df
+    t = wrap_table(tbl).df
     toks = F.filter(tokens_col(F.col(col)), lambda x: F.length(x) > 0)
     base = t.select(toks.alias("__toks"))
     # NB: a two-arg transform lambda would receive the ELEMENT INDEX as
@@ -971,7 +967,7 @@ def lm_logprob(tbl: SparkTbl, profile, col: str = "text",
     doc — one Window on ``id_col`` whose exchange the per-doc mean
     aggregate reuses.  No driver state beyond the 1-row order probe,
     which also returns the Laplace totals."""
-    prof = wrap_tbl(profile).df
+    prof = wrap_table(profile).df
     if "kind" in prof.columns:  # r11 bigram profile schema
         prof = prof.select(
             "gram",
@@ -1210,7 +1206,7 @@ def nb_train(tbl, label_col: str = "lang", col: str = "text",
     """
     if min_count < 1:
         raise ValueError("min_count must be >= 1")
-    t = wrap_tbl(tbl).df
+    t = wrap_table(tbl).df
     toks = F.filter(tokens_col(F.col(col)), lambda x: F.length(x) > 0)
     pairs = (t.select(F.col(label_col).alias("label"),
                       F.explode(toks).alias("token"))
@@ -1264,7 +1260,7 @@ def nb_score(tbl: SparkTbl, model, col: str = "text",
     if not alpha > 0:
         raise ValueError("alpha must be > 0 (alpha=0 makes an unseen "
                          "token's log-probability -inf)")
-    prof = wrap_tbl(model).df
+    prof = wrap_table(model).df
     # r12 note: the model plan is referenced five times below, but all
     # five consumers sit inside ONE query execution, so ReuseExchange
     # already dedups the identical train-aggregate subtree — persist()

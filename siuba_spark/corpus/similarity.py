@@ -1013,14 +1013,30 @@ def semantic_dedup_incremental(
     distribution drifts).
 
     Contract: ids are globally unique across snapshots."""
-    if store is None:
+    store_df = None if store is None else wrap_table(store).df
+    pairs, new_asg, cents = _semantic_incremental(
+        tbl, store_df, cents, threshold, id_col, vec_col, n_lists,
+        centroids, n_iters, seed, train_limit, round_to)
+    if store_df is None:
+        return pairs, new_asg, cents
+    return pairs, new_asg.evolve(df=store_df.unionByName(new_asg.df)), cents
+
+
+def _semantic_incremental(tbl, store_df, cents, threshold=0.95,
+                          id_col="vec_id", vec_col="embedding", n_lists=16,
+                          centroids="lloyd", n_iters=2, seed=42,
+                          train_limit=None, round_to=4):
+    """Core of ``semantic_dedup_incremental``: returns ``(pairs, new_asg,
+    cents)``, where ``new_asg`` holds ONLY this snapshot's ``(id_col,
+    vec_col, __nn, __cell)`` assignments — an append-only store writes
+    them directly.  Both tables pin the persisted assignment."""
+    if store_df is None:
         assigned, cents = _cells_and_centers(
             tbl, id_col, vec_col, n_lists, centroids, n_iters, seed,
             train_limit)
         new_asg = assigned.select(
             F.col("nbr_id").alias(id_col), F.col("nbr_vec").alias(vec_col),
             "__nn", "__cell")
-        store_df = None
     else:
         if cents is None:
             raise ValueError(
@@ -1031,7 +1047,6 @@ def semantic_dedup_incremental(
         new_asg = (_assign_cells(tbl.df, cents, vec_col)
                    .select(F.col(id_col), vd.alias(vec_col),
                            _dot(vd, vd).alias("__nn"), "__cell"))
-        store_df = wrap_table(store).df
 
     # r13: the snapshot's assignment is consumed TWICE here (pair-join
     # left side + the store union) and the returned store feeds every
@@ -1062,12 +1077,8 @@ def semantic_dedup_incremental(
                      F.greatest(F.col(f"l.{id_col}"),
                                 F.col(f"r.{id_col}")).alias("id_b"),
                      "score"))
-    new_store = new_asg if store_df is None else \
-        store_df.unionByName(new_asg)
-    out_pairs, out_store = SparkTbl(pairs), SparkTbl(new_store)
-    if not new_asg.isStreaming:
-        out_pairs, out_store = out_pairs.pin(new_asg), out_store.pin(new_asg)
-    return out_pairs, out_store, cents
+    pins = () if new_asg.isStreaming else (new_asg,)
+    return SparkTbl(pairs, pins=pins), SparkTbl(new_asg, pins=pins), cents
 
 
 def semantic_store_compact(store, id_col: str = "vec_id",
@@ -1130,11 +1141,10 @@ def semantic_store_compact(store, id_col: str = "vec_id",
         "__nn", "__cell")
     # r13: the rebuilt store is the probe side of every post-compaction
     # snapshot — materialize the reassignment once (same pin discipline
-    # as the incremental path above)
-    if not new_store.isStreaming:
-        new_store = new_store.persist()
-        return SparkTbl(new_store).pin(new_store), cents, True
-    return SparkTbl(new_store), cents, True
+    # as the incremental path above).  A streaming store never gets
+    # here: every centroid mode runs a driver action on it first.
+    new_store = new_store.persist()
+    return SparkTbl(new_store).pin(new_store), cents, True
 
 
 @verb

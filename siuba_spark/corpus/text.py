@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..plans.pipe import verb
+from ..plans.pipe import verb, wrap_table
 from ..plans.tbl import SparkTbl
 
 __all__ = [
@@ -277,7 +277,7 @@ def lang_profile_train(tbl, label_col: str = "lang", col: str = "text",
     aggregate.  No driver collect anywhere.  All-integer ranks: the
     classifier is exactly replayable cross-engine (no floating-point
     log-probabilities to round)."""
-    df = tbl.df if isinstance(tbl, SparkTbl) else tbl
+    df = wrap_table(tbl).df
     prof = _ranked_grams(df.select(F.col(label_col).alias("__lang"), col),
                          "__lang", col, n, k)
     return prof.select(F.col("__lang").alias("lang"),
@@ -311,9 +311,7 @@ def lang_id(tbl: SparkTbl, profiles, col: str = "text",
     from pyspark.sql import Window
     from pyspark.sql.functions import broadcast
 
-    from .quality import wrap_tbl
-
-    prof = wrap_tbl(profiles).df.select(
+    prof = wrap_table(profiles).df.select(
         F.col("lang").alias("__plang"), F.col("gram").alias("__pg"),
         F.col("rank").alias("__pr"))
     # r12: the profile plan is consumed twice (language list + the
@@ -606,7 +604,6 @@ def filter_blocklist(tbl: SparkTbl, blocklist, col: str = "host",
     """
     if mode not in ("exact", "domain"):
         raise ValueError("mode must be 'exact' or 'domain'")
-    from ..plans.pipe import wrap_table
     from .psl import attach_registrable_domain, load_default_rules
 
     bdf = wrap_table(blocklist).df

@@ -5,15 +5,40 @@ beyond-parity, built on Spark's native constructs so the same code path
 serves batch (`spark.read`) and Structured Streaming (`spark.readStream`):
 ``F.window`` for tumbling/sliding aggregation, watermarks for late data,
 ``F.session_window`` / lag-based sessionization for gaps-and-islands.
+
+Each streaming concept has one lowering, and every public verb calls it:
+
+- ``_window_agg``: the windowed ``groupBy(window, *by).agg(...)``
+  behind ``tumble``/``slide`` and their watermarked stream twins;
+- ``_keyed_state``: the one ``applyInPandasWithState`` operator (timed-out
+  removal, state default and update, timeout) behind the stateful stream
+  verbs, which pass only their per-group step;
+- ``_read_batch_store``: reads a ``batch=<id>`` store without the
+  retrying batch's own partition;
+- ``_store_stream``: the one ``foreachBatch`` driver behind the stream
+  dedup verbs — the step hands it the batch's output and its NEW store
+  rows, it overwrites both ``batch=<id>`` partitions;
+- ``_swap_store``: the one crash-safe epoch swap behind the compactors.
+
+Pins: whoever runs the action releases what it consumed.
+``_store_stream`` releases both tables' pins after the writes (also
+when a write fails), and the compactors release the compaction's pin
+after the swap, so no micro-batch or compaction leaves a persisted
+intermediate behind.
 """
 
 from __future__ import annotations
+
+import json
+import os
+import shutil
+import uuid
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.accessors import epoch_seconds as _epoch
-from ..plans.pipe import join_verb, verb
+from ..plans.pipe import join_verb, verb, wrap_table
 from ..plans.tbl import SparkTbl
 
 __all__ = ["tumble", "slide", "sessionize", "stream_tumble", "stream_slide",
@@ -33,8 +58,6 @@ def _read_batch_store(spark, store_path, batch_id):
     ``batch=`` partitions) is NOT silently treated as empty — that
     would drop dedup state on upgrade — it raises with a migration
     message instead."""
-    import os
-
     try:
         entries = os.listdir(store_path)
     except FileNotFoundError:
@@ -58,19 +81,34 @@ def _read_batch_store(spark, store_path, batch_id):
     return store
 
 
+# name -> aggregate function of the windowed aggregates
+_AGGS = {"count": lambda c: F.count(F.lit(1)), "sum": F.sum, "avg": F.avg,
+         "mean": F.avg, "min": F.min, "max": F.max,
+         "n_distinct": F.count_distinct,
+         # streaming rejects DISTINCT aggregates; the HLL++ sketch is the
+         # streaming-legal (and 100 TB) distinct count
+         "approx_n_distinct": F.approx_count_distinct,
+         # exact (order-independent) double sum via decimal
+         "dsum": lambda c: F.sum(c.cast("decimal(30,6)")).cast("double")}
+
+_W = ("w_start", "w_end")
+
+
 def _agg_exprs(aggs):
-    out = []
-    for name, (fn, col) in aggs.items():
-        table = {"count": lambda c: F.count(F.lit(1)), "sum": F.sum, "avg": F.avg,
-                 "mean": F.avg, "min": F.min, "max": F.max,
-                 "n_distinct": F.count_distinct,
-                 # streaming rejects DISTINCT aggregates; the HLL++ sketch
-                 # is the streaming-legal (and 100 TB) distinct count
-                 "approx_n_distinct": F.approx_count_distinct,
-                 # exact (order-independent) double sum via decimal
-                 "dsum": lambda c: F.sum(c.cast("decimal(30,6)")).cast("double")}
-        out.append(table[fn](F.col(col) if col else F.lit(1)).alias(name))
-    return out
+    return [_AGGS[fn](F.col(col) if col else F.lit(1)).alias(name)
+            for name, (fn, col) in aggs.items()]
+
+
+def _window_agg(df, win, by, aggs, names):
+    """The one windowed aggregate: group on the window column ``win``
+    plus ``by``, aggregate ``aggs`` (``name=(fn, col)``) and name the
+    window bounds ``names``.  Stream verbs pass a watermarked ``df``."""
+    by = [by] if isinstance(by, str) else list(by)
+    return SparkTbl(df.groupBy(win.alias("__w"), *[F.col(b) for b in by])
+                    .agg(*_agg_exprs(aggs))
+                    .select(F.col("__w.start").alias(names[0]),
+                            F.col("__w.end").alias(names[1]),
+                            *by, *aggs.keys()))
 
 
 @verb
@@ -78,27 +116,14 @@ def tumble(tbl: SparkTbl, ts: str, every: str, by=(), **aggs):
     """Tumbling-window aggregation: ``tumble(t, "ts", "10 minutes",
     by=["user_id"], n=("count", None), total=("sum", "value"))``.
     Window start/end come out as ``w_start``/``w_end`` timestamps."""
-    by = list(by)
-    win = F.window(F.col(ts), every)
-    df = (tbl.df.groupBy(win.alias("__w"), *[F.col(b) for b in by])
-          .agg(*_agg_exprs(aggs))
-          .select(F.col("__w.start").alias("w_start"),
-                  F.col("__w.end").alias("w_end"),
-                  *by, *aggs.keys()))
-    return SparkTbl(df)
+    return _window_agg(tbl.df, F.window(F.col(ts), every), by, aggs, _W)
 
 
 @verb
 def slide(tbl: SparkTbl, ts: str, every: str, period: str, by=(), **aggs):
     """Sliding-window aggregation (window length `every`, slide `period`)."""
-    by = list(by)
-    win = F.window(F.col(ts), every, period)
-    df = (tbl.df.groupBy(win.alias("__w"), *[F.col(b) for b in by])
-          .agg(*_agg_exprs(aggs))
-          .select(F.col("__w.start").alias("w_start"),
-                  F.col("__w.end").alias("w_end"),
-                  *by, *aggs.keys()))
-    return SparkTbl(df)
+    return _window_agg(tbl.df, F.window(F.col(ts), every, period), by,
+                       aggs, _W)
 
 
 @verb
@@ -134,15 +159,8 @@ def stream_tumble(tbl: SparkTbl, ts: str, every: str, watermark: str = "30 minut
     """Streaming tumbling aggregation with a watermark: state for windows
     older than the watermark is evicted, so state size is bounded by
     (watermark / every) × |keys| regardless of stream length."""
-    by = list(by)
-    win = F.window(F.col(ts), every)
-    df = (tbl.df.withWatermark(ts, watermark)
-          .groupBy(win.alias("__w"), *[F.col(b) for b in by])
-          .agg(*_agg_exprs(aggs))
-          .select(F.col("__w.start").alias("w_start"),
-                  F.col("__w.end").alias("w_end"),
-                  *by, *aggs.keys()))
-    return SparkTbl(df)
+    return _window_agg(tbl.df.withWatermark(ts, watermark),
+                       F.window(F.col(ts), every), by, aggs, _W)
 
 
 @verb
@@ -152,15 +170,8 @@ def stream_slide(tbl: SparkTbl, ts: str, every: str, period: str,
     batch ``slide`` verb): each event lands in every/period overlapping
     windows; the watermark evicts closed windows, so state is bounded by
     (watermark/period) × (every/period) × |keys|."""
-    by = list(by)
-    win = F.window(F.col(ts), every, period)
-    df = (tbl.df.withWatermark(ts, watermark)
-          .groupBy(win.alias("__w"), *[F.col(b) for b in by])
-          .agg(*_agg_exprs(aggs))
-          .select(F.col("__w.start").alias("w_start"),
-                  F.col("__w.end").alias("w_end"),
-                  *by, *aggs.keys()))
-    return SparkTbl(df)
+    return _window_agg(tbl.df.withWatermark(ts, watermark),
+                       F.window(F.col(ts), every, period), by, aggs, _W)
 
 
 @verb
@@ -170,15 +181,42 @@ def stream_sessionize(tbl: SparkTbl, ts: str, by, gap: str = "30 minutes",
     sessions close when no event arrives within ``gap``; the watermark
     bounds state (sessions older than it are finalized and evicted), so
     state size is O(active sessions), not O(stream length)."""
-    by = [by] if isinstance(by, str) else list(by)
-    win = F.session_window(F.col(ts), gap)
-    df = (tbl.df.withWatermark(ts, watermark)
-          .groupBy(win.alias("__w"), *[F.col(b) for b in by])
-          .agg(*_agg_exprs(aggs))
-          .select(F.col("__w.start").alias("s_start"),
-                  F.col("__w.end").alias("s_end"),
-                  *by, *aggs.keys()))
-    return SparkTbl(df)
+    return _window_agg(tbl.df.withWatermark(ts, watermark),
+                       F.session_window(F.col(ts), gap), by, aggs,
+                       ("s_start", "s_end"))
+
+
+def _keyed_state(df, keys, state_field, step, timeout_minutes):
+    """The one ``applyInPandasWithState`` operator: group ``df`` by
+    ``keys`` and keep one scalar of state per key.  ``state_field`` is
+    ``(name, default)`` — a bool default makes a boolean state, an int
+    one a bigint.  ``step(pdfs, value)`` is a generator: it yields the
+    rows to emit (``df``'s schema) and returns the key's new state.  A
+    timed-out key is removed and emits nothing; ``timeout_minutes=None``
+    picks ``NoTimeout``, otherwise each update re-arms a
+    processing-time timeout."""
+    from pyspark.sql import types as T
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    name, default = state_field
+    typ = T.BooleanType() if isinstance(default, bool) else T.LongType()
+
+    def fn(key, pdfs, state):
+        if state.hasTimedOut:
+            state.remove()
+            return
+        value = yield from step(pdfs, state.get[0] if state.exists
+                                else default)
+        state.update((value,))
+        if timeout_minutes is not None:
+            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
+
+    timeout = (GroupStateTimeout.NoTimeout if timeout_minutes is None
+               else GroupStateTimeout.ProcessingTimeTimeout)
+    return SparkTbl(df.groupBy(*keys).applyInPandasWithState(
+        fn, outputStructType=df.schema,
+        stateStructType=T.StructType([T.StructField(name, typ)]),
+        outputMode="append", timeoutConf=timeout))
 
 
 def running_dedup_stream(tbl: SparkTbl, key_col: str, ts: str,
@@ -197,39 +235,18 @@ def running_dedup_stream(tbl: SparkTbl, key_col: str, ts: str,
     ``trigger(availableNow=True)`` run only TERMINATES with ``None``;
     24/7 streams should keep the timeout (r11 finding, shared by all
     three stateful operators here)."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql import types as T
-
-    in_schema = tbl.df.schema
-    out_schema = in_schema
-    state_schema = T.StructType([T.StructField("seen", T.BooleanType())])
-
-    def fn(key, pdfs, state: GroupState):
-        import pandas as pd
-        if state.hasTimedOut:
-            state.remove()
-            return
-        seen = state.get[0] if state.exists else False
+    def step(pdfs, seen):
         first = None
         for pdf in pdfs:
             if not seen and len(pdf):
                 first = pdf.sort_values(ts).head(1)
                 seen = True
-        state.update((True,))
-        if state_timeout_minutes is not None:
-            state.setTimeoutDuration(state_timeout_minutes * 60 * 1000)
         if first is not None:
             yield first
+        return True
 
-    timeout = (GroupStateTimeout.NoTimeout if state_timeout_minutes is None
-               else GroupStateTimeout.ProcessingTimeTimeout)
-    out = (tbl.df.withWatermark(ts, watermark)
-           .groupBy(key_col)
-           .applyInPandasWithState(fn, outputStructType=out_schema,
-                                   stateStructType=state_schema,
-                                   outputMode="append",
-                                   timeoutConf=timeout))
-    return SparkTbl(out)
+    return _keyed_state(tbl.df.withWatermark(ts, watermark), [key_col],
+                        ("seen", False), step, state_timeout_minutes)
 
 
 def stream_token_budget_sample(tbl: SparkTbl, *strata, budget: int,
@@ -250,22 +267,13 @@ def stream_token_budget_sample(tbl: SparkTbl, *strata, budget: int,
     ``state_timeout_minutes=None`` disables eviction (NoTimeout), which
     is also what lets a ``trigger(availableNow=True)`` run terminate —
     a processing-time timer keeps the query permanently busy."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql import types as T
-
     keys = [str(s) for s in strata] or list(tbl.group_by)
     if not keys:
         raise ValueError("stream_token_budget_sample needs strata columns")
     if budget < 1:
         raise ValueError("budget must be >= 1")
-    out_schema = tbl.df.schema
-    state_schema = T.StructType([T.StructField("used", T.LongType())])
 
-    def fn(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        used = state.get[0] if state.exists else 0
+    def step(pdfs, used):
         for pdf in pdfs:
             if not len(pdf):
                 continue
@@ -278,18 +286,10 @@ def stream_token_budget_sample(tbl: SparkTbl, *strata, budget: int,
             used = int(used + ntok.sum())
             if keep.any():
                 yield pdf[keep]
-        state.update((used,))
-        if state_timeout_minutes is not None:
-            state.setTimeoutDuration(state_timeout_minutes * 60 * 1000)
+        return used
 
-    timeout = (GroupStateTimeout.NoTimeout if state_timeout_minutes is None
-               else GroupStateTimeout.ProcessingTimeTimeout)
-    out = (tbl.df.groupBy(*keys)
-           .applyInPandasWithState(fn, outputStructType=out_schema,
-                                   stateStructType=state_schema,
-                                   outputMode="append",
-                                   timeoutConf=timeout))
-    return SparkTbl(out)
+    return _keyed_state(tbl.df, keys, ("used", 0), step,
+                        state_timeout_minutes)
 
 
 def stream_cap_per_key(tbl: SparkTbl, *keys, n: int,
@@ -311,22 +311,13 @@ def stream_cap_per_key(tbl: SparkTbl, *keys, n: int,
     snapshot discipline the two coincide — the parity test's subject.
     Idle keys evict via processing-time timeout, bounding state.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql import types as T
-
     keys = [str(k) for k in keys] or list(tbl.group_by)
     if not keys:
         raise ValueError("stream_cap_per_key needs key columns")
     if n < 1:
         raise ValueError("n must be >= 1")
-    out_schema = tbl.df.schema
-    state_schema = T.StructType([T.StructField("taken", T.LongType())])
 
-    def fn(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        taken = state.get[0] if state.exists else 0
+    def step(pdfs, taken):
         for pdf in pdfs:
             if len(pdf) and taken < n:
                 if order_by is not None:
@@ -335,18 +326,10 @@ def stream_cap_per_key(tbl: SparkTbl, *keys, n: int,
                 if len(admit):
                     yield admit
             taken += len(pdf)
-        state.update((min(taken, n),))
-        if state_timeout_minutes is not None:
-            state.setTimeoutDuration(state_timeout_minutes * 60 * 1000)
+        return min(taken, n)
 
-    timeout = (GroupStateTimeout.NoTimeout if state_timeout_minutes is None
-               else GroupStateTimeout.ProcessingTimeTimeout)
-    out = (tbl.df.groupBy(*keys)
-           .applyInPandasWithState(fn, outputStructType=out_schema,
-                                   stateStructType=state_schema,
-                                   outputMode="append",
-                                   timeoutConf=timeout))
-    return SparkTbl(out)
+    return _keyed_state(tbl.df, keys, ("taken", 0), step,
+                        state_timeout_minutes)
 
 
 @join_verb
@@ -365,7 +348,7 @@ def stream_interval_join(left: SparkTbl, right, left_ts: str, right_ts: str,
     O(rows inside the watermark horizon), never O(stream length).  The
     same call works on batch inputs (watermarks become no-ops).
     """
-    right = right if isinstance(right, SparkTbl) else SparkTbl(right)
+    right = wrap_table(right)
     lt, rt = F.col(left_ts), F.col(right_ts)
     if left_ts == right_ts:
         raise ValueError("left_ts and right_ts must be distinct column "
@@ -389,6 +372,51 @@ def stream_interval_join(left: SparkTbl, right, left_ts: str, right_ts: str,
     else:
         out = ldf.join(rdf, cond, how)
     return SparkTbl(out)
+
+
+def _store_stream(stream_tbl, store_path, out_path, checkpoint,
+                  trigger_available_now, step):
+    """The one ``foreachBatch`` store driver.  Per non-empty micro-batch
+    it reads the prior store (``_read_batch_store``), calls
+    ``step(batch_df, store, batch_id) -> (out, new_rows)`` (two
+    ``SparkTbl``), overwrites ``out_path/batch=<id>`` and
+    ``store_path/batch=<id>`` — so an at-least-once retry replaces its
+    own partial output — and then releases both tables' pins, also when
+    a write fails.  Returns the started ``StreamingQuery``."""
+
+    def handle(batch_df, batch_id):
+        if not batch_df.take(1):
+            return
+        store = _read_batch_store(batch_df.sparkSession, store_path, batch_id)
+        out, new_rows = step(batch_df, store, batch_id)
+        try:
+            for t, path in ((out, out_path), (new_rows, store_path)):
+                t.df.write.mode("overwrite").parquet(
+                    os.path.join(path, f"batch={int(batch_id)}"))
+        finally:
+            out.release()
+            new_rows.release()
+
+    writer = (stream_tbl.df.writeStream
+              .foreachBatch(handle)
+              .option("checkpointLocation", checkpoint))
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _swap_store(store_path, df):
+    """The one crash-safe epoch swap: write ``df`` as the ``batch=-1``
+    base partition of a sibling temp dir, move the old store aside, move
+    the new one in, then remove the old one (a crash between the moves
+    leaves the ``.old`` copy intact for manual recovery)."""
+    token = uuid.uuid4().hex[:8]
+    tmp = f"{store_path}.compact-{token}"
+    old = f"{store_path}.old-{token}"
+    df.write.mode("overwrite").parquet(os.path.join(tmp, "batch=-1"))
+    os.rename(store_path, old)
+    os.rename(tmp, store_path)
+    shutil.rmtree(old, ignore_errors=True)
 
 
 def stream_minhash_dedup(stream_tbl: SparkTbl, store_path: str,
@@ -431,32 +459,14 @@ def stream_minhash_dedup(stream_tbl: SparkTbl, store_path: str,
     batch-side equivalence; stream/batch parity is pinned in
     tests/test_streaming.py).  Returns the ``StreamingQuery``.
     """
-    import os
+    from ..corpus.dedup import _minhash_incremental
 
-    from ..corpus.dedup import minhash_near_dups_incremental
+    def step(batch_df, store, batch_id):
+        return _minhash_incremental(SparkTbl(batch_df), store, col=col,
+                                    id_col=id_col, **minhash_kw)
 
-    def handle(batch_df, batch_id):
-        if not batch_df.take(1):
-            return
-        spark = batch_df.sparkSession
-        store = _read_batch_store(spark, store_path, batch_id)
-        pairs, new_store = minhash_near_dups_incremental(
-            SparkTbl(batch_df), store, col=col, id_col=id_col, **minhash_kw)
-        batch_ids = batch_df.select(id_col).distinct()
-        new_sigs = new_store.df.join(F.broadcast(batch_ids), id_col,
-                                     "left_semi")
-        pairs.df.write.mode("overwrite").parquet(
-            os.path.join(pairs_path, f"batch={int(batch_id)}"))
-        new_sigs.write.mode("overwrite").parquet(
-            os.path.join(store_path, f"batch={int(batch_id)}"))
-        pairs.release()
-
-    writer = (stream_tbl.df.writeStream
-              .foreachBatch(handle)
-              .option("checkpointLocation", checkpoint))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _store_stream(stream_tbl, store_path, pairs_path, checkpoint,
+                         trigger_available_now, step)
 
 
 def stream_semantic_dedup(stream_tbl: SparkTbl, store_path: str,
@@ -489,28 +499,11 @@ def stream_semantic_dedup(stream_tbl: SparkTbl, store_path: str,
     centroids (the equivalence ``semantic_dedup_incr`` grades); run
     ``dedup_clusters``/``drop_near_dups`` over the accumulated pairs for
     the kept set.  Returns the ``StreamingQuery``."""
-    import json
-    import os
+    from ..corpus.similarity import _semantic_incremental
 
-    from ..corpus.similarity import semantic_dedup_incremental
-
-    def handle(batch_df, batch_id):
-        if not batch_df.take(1):
-            return
-        spark = batch_df.sparkSession
-        store = _read_batch_store(spark, store_path, batch_id)
-        if store is None:
-            # first batch (or a retry of it): train the centroids on
-            # this batch's bounded slice — deterministic, so a retry
-            # reproduces the identical cents — and record them
-            pairs, new_store, cents = semantic_dedup_incremental(
-                SparkTbl(batch_df), None, None,
-                id_col=id_col, vec_col=vec_col, **sem_kw)
-            tmp = cents_path + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump(cents, fh)
-            os.replace(tmp, cents_path)        # atomic: retry-safe
-        else:
+    def step(batch_df, store, batch_id):
+        cents = None
+        if store is not None:
             if not os.path.exists(cents_path):
                 raise RuntimeError(
                     "stream_semantic_dedup: assignment store exists but "
@@ -518,23 +511,21 @@ def stream_semantic_dedup(stream_tbl: SparkTbl, store_path: str,
                     "comparable at its training centroids")
             with open(cents_path) as fh:
                 cents = json.load(fh)
-            pairs, new_store, cents = semantic_dedup_incremental(
-                SparkTbl(batch_df), store, cents,
-                id_col=id_col, vec_col=vec_col, **sem_kw)
-        batch_ids = batch_df.select(id_col).distinct()
-        new_asg = new_store.df.join(F.broadcast(batch_ids), id_col,
-                                    "left_semi")
-        pairs.df.write.mode("overwrite").parquet(
-            os.path.join(pairs_path, f"batch={int(batch_id)}"))
-        new_asg.write.mode("overwrite").parquet(
-            os.path.join(store_path, f"batch={int(batch_id)}"))
+        pairs, new_asg, trained = _semantic_incremental(
+            SparkTbl(batch_df), store, cents, id_col=id_col,
+            vec_col=vec_col, **sem_kw)
+        if store is None:
+            # first batch (or a retry of it): the centroids were trained
+            # on this batch's bounded slice — deterministic, so a retry
+            # reproduces them — record them atomically (retry-safe)
+            tmp = cents_path + ".tmp"
+            with open(tmp, "w") as fh:
+                json.dump(trained, fh)
+            os.replace(tmp, cents_path)
+        return pairs, new_asg
 
-    writer = (stream_tbl.df.writeStream
-              .foreachBatch(handle)
-              .option("checkpointLocation", checkpoint))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _store_stream(stream_tbl, store_path, pairs_path, checkpoint,
+                         trigger_available_now, step)
 
 
 def compact_semantic_store(spark, store_path: str, cents_path: str,
@@ -556,10 +547,12 @@ def compact_semantic_store(spark, store_path: str, cents_path: str,
     below any future micro-batch id, the same base slot the legacy
     migration uses) plus the refreshed ``cents_path``; previously
     emitted pairs stay valid (exact cosines), only the BLOCKING epoch
-    changes.  Swap order is crash-safe: the new store is fully written
-    to a sibling temp dir, the old store is moved aside, the new one
-    moved in, the centroids file replaced last (a crash between the
-    moves leaves the ``.old`` copy intact for manual recovery).
+    changes.  Swap order is crash-safe: the new centroids are written to
+    ``cents_path + ".tmp"`` and the new store to a sibling temp dir, the
+    old store is moved aside, the new one moved in, and the centroids
+    file is replaced last (a crash between the moves leaves the ``.old``
+    copy intact for manual recovery; one after them leaves the new
+    centroids in the ``.tmp`` file).
 
     ``centroids`` defaults to ``"kmeans"`` deliberately: id-ordered
     "sample"/"lloyd" slices train on the id-head -- the OLDEST data in
@@ -569,11 +562,6 @@ def compact_semantic_store(spark, store_path: str, cents_path: str,
     Returns ``(did_compact, n_cells)``; ``(False, None)`` when the
     ``p99_limit`` gate says the store is still healthy (nothing is
     touched on disk)."""
-    import json
-    import os
-    import shutil
-    import uuid
-
     from ..corpus.similarity import semantic_store_compact
 
     store = _read_batch_store(spark, store_path, batch_id=1 << 62)
@@ -586,18 +574,14 @@ def compact_semantic_store(spark, store_path: str, cents_path: str,
         p99_limit=p99_limit)
     if not did:
         return False, None
-    token = uuid.uuid4().hex[:8]
-    tmp = f"{store_path}.compact-{token}"
-    old = f"{store_path}.old-{token}"
-    new_store.df.write.mode("overwrite").parquet(
-        os.path.join(tmp, "batch=-1"))
-    os.rename(store_path, old)
-    os.rename(tmp, store_path)
     cents_tmp = cents_path + ".tmp"
     with open(cents_tmp, "w") as fh:
         json.dump(cents, fh)
+    try:
+        _swap_store(store_path, new_store.df)
+    finally:
+        new_store.release()
     os.replace(cents_tmp, cents_path)
-    shutil.rmtree(old, ignore_errors=True)
     return True, len(cents)
 
 
@@ -643,17 +627,11 @@ def stream_substring_dedup(stream_tbl: SparkTbl, store_path: str,
     ``batch=<id>`` overwrite partitions, same at-least-once contract as
     the other two stores.  Returns the ``StreamingQuery``.
     """
-    import os
-
     from ..corpus.dedup import _span_incremental, _span_validate
 
     _span_validate(k, key)
 
-    def handle(batch_df, batch_id):
-        if not batch_df.take(1):
-            return
-        spark = batch_df.sparkSession
-        store = _read_batch_store(spark, store_path, batch_id)
+    def step(batch_df, store, batch_id):
         if enforce_id_order and store is not None:
             store_max = store.agg(F.max(F.col(id_col))).first()[0]
             batch_min = batch_df.agg(F.min(F.col(id_col))).first()[0]
@@ -666,27 +644,16 @@ def stream_substring_dedup(stream_tbl: SparkTbl, store_path: str,
                     "equivalence no longer holds (stage source files with "
                     "strictly increasing mtimes, or pass "
                     "enforce_id_order=False to accept approximate dedup)")
-        # the private core returns the batch's NEW first-occurrence grams
-        # directly — the store sink never re-derives them from a
-        # full-store union (no store re-scan per batch).  The batch is
-        # pinned because the two sinks share its gram lineage.
-        batch_df = batch_df.persist()
-        try:
-            out, firsts = _span_incremental(
-                batch_df, store, col, id_col, k, sep, key)
-            out.write.mode("overwrite").parquet(
-                os.path.join(out_path, f"batch={int(batch_id)}"))
-            firsts.write.mode("overwrite").parquet(
-                os.path.join(store_path, f"batch={int(batch_id)}"))
-        finally:
-            batch_df.unpersist()
+        # the two sinks share the batch's gram lineage: pin the batch to
+        # both; the core already returns only the NEW first-occurrence
+        # grams, so the store sink never re-scans the store
+        pins = (batch_df.persist(),)
+        out, firsts = _span_incremental(
+            pins[0], store, col, id_col, k, sep, key)
+        return SparkTbl(out, pins=pins), SparkTbl(firsts, pins=pins)
 
-    writer = (stream_tbl.df.writeStream
-              .foreachBatch(handle)
-              .option("checkpointLocation", checkpoint))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _store_stream(stream_tbl, store_path, out_path, checkpoint,
+                         trigger_available_now, step)
 
 
 def compact_substring_store(spark, store_path: str,
@@ -709,10 +676,6 @@ def compact_substring_store(spark, store_path: str,
 
     Returns ``(n_rows_before, n_rows_after)``.
     """
-    import os
-    import shutil
-    import uuid
-
     from ..corpus.dedup import substring_store_compact
 
     store = _read_batch_store(spark, store_path, batch_id=1 << 62)
@@ -720,14 +683,5 @@ def compact_substring_store(spark, store_path: str,
         raise RuntimeError(
             f"compact_substring_store: no gram store at {store_path}")
     before = store.count()
-    compacted = substring_store_compact(store, id_col=id_col).df
-    token = uuid.uuid4().hex[:8]
-    tmp = f"{store_path}.compact-{token}"
-    old = f"{store_path}.old-{token}"
-    compacted.write.mode("overwrite").parquet(
-        os.path.join(tmp, "batch=-1"))
-    after = spark.read.parquet(os.path.join(tmp, "batch=-1")).count()
-    os.rename(store_path, old)
-    os.rename(tmp, store_path)
-    shutil.rmtree(old, ignore_errors=True)
-    return before, after
+    _swap_store(store_path, substring_store_compact(store, id_col=id_col).df)
+    return before, spark.read.parquet(store_path).count()

@@ -32,14 +32,22 @@ def _mk(spark, rows):
     return SparkTbl(sdf), con
 
 
+def _numeric(s):
+    """``pd.to_numeric`` that returns a non-numeric column unchanged."""
+    try:
+        return pd.to_numeric(s)
+    except (ValueError, TypeError):
+        return s
+
+
 def _eq(got, want, keys):
     got = got.sort_values(keys).reset_index(drop=True)
     want = want.sort_values(keys).reset_index(drop=True)
     assert list(got.columns.sort_values()) == list(want.columns.sort_values())
     assert len(got) == len(want)
     for c in want.columns:
-        a = pd.to_numeric(got[c], errors="ignore")
-        b = pd.to_numeric(want[c], errors="ignore")
+        a = _numeric(got[c])
+        b = _numeric(want[c])
         if getattr(a, "dtype", None) is not None and a.dtype.kind in "fc":
             a, b = a.round(7), pd.to_numeric(b).round(7)
             assert ((a.isna() & b.isna()) | (a == b)).all(), (c, list(a), list(b))

@@ -11,8 +11,11 @@ from pyspark.sql import functions as F
 
 from siuba_spark import SparkTbl
 from siuba_spark.streaming.windows import (
-    read_event_stream, sessionize, stream_tumble, tumble,
+    read_event_stream, sessionize, slide, stream_slide, stream_tumble, tumble,
 )
+
+from .conftest import SF_SMALL
+
 
 def _order_batches(src_dir):
     """Pin b0 strictly older than b1: FileStreamSource orders files by
@@ -222,6 +225,33 @@ def test_stream_slide_matches_batch(spark, event_dir):
            for r in spark.sql("select * from slide_test").collect()}
     assert got == expected
     assert len(got) > 0
+
+
+# every name the windowed aggregate knows
+_ALL_AGGS = dict(n=("count", None), s=("sum", "value"), a=("avg", "value"),
+                 m=("mean", "value"), lo=("min", "value"),
+                 hi=("max", "value"), nd=("n_distinct", "user_id"),
+                 ad=("approx_n_distinct", "user_id"), ds=("dsum", "value"))
+
+
+@pytest.mark.parametrize("batch_verb, stream_verb, kw", [
+    (tumble, stream_tumble, dict(every="10 minutes")),
+    (slide, stream_slide, dict(every="20 minutes", period="10 minutes")),
+], ids=["tumble", "slide"])
+def test_stream_window_verbs_equal_batch_on_batch_frame(
+        spark, event_dir, batch_verb, stream_verb, kw):
+    """The batch and stream window verbs share one windowed aggregate: on
+    a batch frame the watermark is a no-op, so the stream verb returns
+    the batch verb's rows, row for row, for every aggregate name.  One
+    input partition keeps the double sums' merge order fixed."""
+    t = SparkTbl(spark.read.parquet(event_dir).coalesce(1))
+    want = batch_verb(t, ts="ts", by=["event_type"], **kw, **_ALL_AGGS).df
+    got = stream_verb(t, ts="ts", by=["event_type"], watermark="1 hour",
+                      **kw, **_ALL_AGGS).df
+    assert got.schema == want.schema
+    rows = lambda df: sorted(map(tuple, df.collect()), key=repr)  # noqa: E731
+    assert rows(got) == rows(want)
+    assert len(rows(want)) > 0
 
 
 def test_stream_tumble_approx_distinct(spark, event_dir):
@@ -896,3 +926,57 @@ def test_stream_url_dedup_composition(spark, event_dir):
     # the projection really canonicalized on the stream path
     assert got["url_norm"].str.startswith("https://u").all()
     assert not got["url_norm"].str.contains("#|utm_").any()
+
+
+def test_store_streams_and_compactors_release_their_pins(spark, tmp_path):
+    """The stream dedup verbs and the compactors leave the session's pin
+    ledger and persisted RDDs as they found them: the store driver
+    releases both tables' pins after each micro-batch's writes, and the
+    compactors release the compaction's pin after the swap."""
+    from siuba_spark import tbl as _tbl
+    from siuba_spark.plans import tbl as ptbl
+    from siuba_spark.streaming.windows import (
+        compact_semantic_store, compact_substring_store,
+        stream_minhash_dedup, stream_semantic_dedup, stream_substring_dedup)
+
+    def held():
+        return (len(ptbl._ACTIVE_PINS),
+                len(spark.sparkContext._jsc.getPersistentRDDs()))
+
+    def two_batch_stream(name, df, id_col, cut):
+        src = tmp_path / name
+        df.filter(F.col(id_col) < cut).coalesce(1) \
+            .write.parquet(str(src / "b0.parquet"))
+        df.filter(F.col(id_col) >= cut).coalesce(1) \
+            .write.parquet(str(src / "b1.parquet"))
+        _order_batches(src)
+        return _tbl(spark.readStream.schema(df.schema)
+                    .option("maxFilesPerTrigger", 1)
+                    .parquet(str(src) + "/*.parquet"))
+
+    def paths(name):
+        return [str(tmp_path / f"{name}_{p}") for p in ("store", "out", "ckpt")]
+
+    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
+    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
+    cents = str(tmp_path / "cents.json")
+    runs = {
+        "stream_minhash_dedup": lambda: stream_minhash_dedup(
+            two_batch_stream("mh", docs, "doc_id", 250), *paths("mh"),
+            threshold=0.3).awaitTermination(300),
+        "stream_semantic_dedup": lambda: stream_semantic_dedup(
+            two_batch_stream("sem", emb, "vec_id", 250), *paths("sem"),
+            cents, threshold=0.3, n_lists=4,
+            centroids="sample").awaitTermination(300),
+        "compact_semantic_store": lambda: compact_semantic_store(
+            spark, paths("sem")[0], cents, n_lists=6, centroids="sample"),
+        "stream_substring_dedup": lambda: stream_substring_dedup(
+            two_batch_stream("ss", docs, "doc_id", 250), *paths("ss"),
+            k=8).awaitTermination(300),
+        "compact_substring_store": lambda: compact_substring_store(
+            spark, paths("ss")[0]),
+    }
+    for name, run in runs.items():
+        before = held()
+        assert run(), name
+        assert held() == before, name
