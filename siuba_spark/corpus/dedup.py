@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..plans.pipe import verb, wrap_table
-from ..plans.tbl import SparkTbl
+from ..plans.tbl import SparkTbl, local_table
 from .text import tokens_col
 
 __all__ = [
@@ -470,7 +470,7 @@ def _driver_union_find(rows, spark, id_type):
     schema = T.StructType([T.StructField("id", id_type),
                            T.StructField("cluster", id_type)])
     data = [(x, find(x)) for x in parent]
-    return spark.createDataFrame(data, schema)
+    return local_table(spark, data, schema)
 
 
 @verb

@@ -25,7 +25,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..plans.pipe import verb, wrap_table
-from ..plans.tbl import SparkTbl
+from ..plans.tbl import SparkTbl, local_table
 
 __all__ = ["cosine_sim_col", "brute_force_topk", "lsh_topk", "add_hyperplane_bucket",
            "cosine_near_dups", "ivf_topk", "pq_topk", "ivf_pq_topk",
@@ -247,7 +247,7 @@ def add_hyperplane_bucket(tbl: SparkTbl, vec_col: str = "embedding",
             bits = bit if bits is None else bits + bit
         return tbl.evolve(df=tbl.df.withColumn(out, bits.cast("int")))
     spark = tbl.df.sparkSession
-    pdf = (spark.createDataFrame([(planes,)], "__planes: array<array<double>>")
+    pdf = (local_table(spark, [(planes,)], "__planes: array<array<double>>")
            .withColumn("__jk", F.lit(1)))
     powers = F.array(*[F.lit(1 << i) for i in range(n_planes)])
     proj = F.transform(F.col("__planes"), lambda p: _dot(vd, p))
@@ -351,8 +351,8 @@ def _assign_cells(df, cents, vec_col):
     plain projections that filter re-evaluates the whole argmin inside
     the broadcast join's condition.  A predicate on a generator's output
     cannot move below the generator, so it stays a test on the column."""
-    cpk = df.sparkSession.createDataFrame(
-        [(cents,)], "__cents: array<array<double>>")
+    cpk = local_table(df.sparkSession, [(cents,)],
+                      "__cents: array<array<double>>")
     d2 = F.transform(F.col("__cents"), lambda c: _d2(F.col("__vd"), c))
     return (df.crossJoin(F.broadcast(cpk))
             .withColumn("__vd", _to_double(F.col(vec_col)))
@@ -521,7 +521,8 @@ def ivf_topk(tbl: SparkTbl, queries, k: int = 10, id_col: str = "vec_id",
         tbl, id_col, vec_col, n_lists, centroids, n_iters, seed, train_limit)
 
     # tiny (n_lists × dim) centroid table → broadcast against the queries
-    cdf = spark.createDataFrame(list(enumerate(cents)), ["__cell", "__center"])
+    cdf = local_table(spark, list(enumerate(cents)),
+                      "__cell long, __center array<double>")
 
     qdf = wrap_table(queries).df.select(*_side_cols(id_col, vec_col, _QRY))
     dist = F.sqrt(_d2(F.col("query_vec"), F.col("__center")))
@@ -609,8 +610,8 @@ def pq_topk(tbl: SparkTbl, queries, k: int = 10, id_col: str = "vec_id",
     spark = tbl.df.sparkSession
     books, d = _pq_books(_head_vectors(tbl.df, id_col, vec_col, n_codes),
                          n_codes, n_subspaces, n_codes, "pq_topk")
-    bpk = (spark.createDataFrame([(books,)],
-                                 "__books: array<array<array<double>>>")
+    bpk = (local_table(spark, [(books,)],
+                       "__books: array<array<array<double>>>")
            .withColumn("__jk", F.lit(1)))
 
     # -- encode the corpus: one map pass, argmin per subspace ---------------
@@ -662,8 +663,8 @@ def ivf_pq_topk(tbl: SparkTbl, queries, k: int = 10, id_col: str = "vec_id",
     n_head = max(n_lists, n_codes)
     head = _head_vectors(tbl.df, id_col, vec_col, n_head)
     books, d = _pq_books(head, n_head, n_subspaces, n_codes, "ivf_pq_topk")
-    pk = (spark.createDataFrame(
-        [(head[:n_lists], books)],
+    pk = (local_table(
+        spark, [(head[:n_lists], books)],
         "__cents: array<array<double>>, __books: array<array<array<double>>>")
         .withColumn("__jk", F.lit(1)))
 

@@ -12,6 +12,7 @@ spec and Catalyst does the rest.
 
 from __future__ import annotations
 
+import re
 import warnings
 from dataclasses import dataclass, field
 
@@ -355,6 +356,22 @@ AGG_METHODS = {
 AGG_METHODS["kurtosis"] = AGG_METHODS["kurt"]
 AGG_METHODS["product"] = AGG_METHODS["prod"]
 
+# Spark aggregates whose buffer is a JVM object (a sort buffer, a value
+# map, a collected array) instead of fixed-width fields: what median,
+# quantile, mode, approx_quantile, unique and the collect_* forms lower
+# to.  summarize keeps such an aggregate out of a COUNT(DISTINCT)'s
+# Expand, where it would carry its buffer per (group, distinct value).
+OBJECT_BUFFER_AGGS = frozenset({"percentile", "median", "mode",
+                                "percentile_approx", "collect_list",
+                                "collect_set"})
+_OBJECT_BUFFER_RE = re.compile(
+    r"\b(?:%s)\(" % "|".join(sorted(OBJECT_BUFFER_AGGS)))
+
+
+def has_object_buffer(col: Column) -> bool:
+    """True when the aggregate Column calls an OBJECT_BUFFER_AGGS function."""
+    return _OBJECT_BUFFER_RE.search(str(col)) is not None
+
 # nunique: Spark bans DISTINCT aggregates inside windows → collect_set
 AGG_WINDOW_OVERRIDES = {
     "nunique": lambda ctx, col: F.size(F.collect_set(col).over(ctx.w_agg())),
@@ -383,16 +400,25 @@ def _rank_average(ctx, col, method: str = "average", ascending: bool = True,
     """pandas Series.rank — all five methods.  average = min_rank +
     (ties-1)/2 (reference trick: siuba/sql/dialects/base.py:75-80); the
     others map straight onto Spark rank/dense_rank/row_number.  NULLs
-    stay unranked (na_option='keep')."""
+    stay unranked (na_option='keep').
+
+    Every term is a window over the rank's own (group, value) spec, so
+    the whole method is one Exchange + Sort + Window and shares it with
+    any other rank of the same order: the tie count is a RANGE-frame
+    ``count`` over the current row's peers, the ``pct`` denominators run
+    over the whole-partition frame.  NULLs sort last and ``count`` skips
+    them, so they move no non-NULL value."""
     order = col.asc_nulls_last() if ascending else col.desc_nulls_last()
     w_rank = ctx.w_ordered([order])
-    w_ties = Window.partitionBy(*[F.col(g) for g in ctx.group_by], col)
+    if method in ("average", "max"):
+        ties = F.count(col).over(
+            w_rank.rangeBetween(Window.currentRow, Window.currentRow))
     if method == "average":
-        r = F.rank().over(w_rank) + (F.count(col).over(w_ties) - 1) / 2.0
+        r = F.rank().over(w_rank) + (ties - 1) / 2.0
     elif method == "min":
         r = F.rank().over(w_rank)
     elif method == "max":
-        r = F.rank().over(w_rank) + F.count(col).over(w_ties) - 1
+        r = F.rank().over(w_rank) + ties - 1
     elif method == "dense":
         r = F.dense_rank().over(w_rank)
     elif method == "first":
@@ -404,12 +430,15 @@ def _rank_average(ctx, col, method: str = "average", ascending: bool = True,
         raise TranslationError(f"rank method {method!r} not supported")
     r = F.when(col.isNotNull(), r)
     if pct:
-        w_all = Window.partitionBy(*[F.col(g) for g in ctx.group_by])
+        w_all = w_rank.rowsBetween(Window.unboundedPreceding,
+                                   Window.unboundedFollowing)
         if method == "dense":
             # pandas divides dense ranks by the number of DISTINCT non-null
             # values, not the row count ([1,1,2,3] → [1/3,1/3,2/3,1]);
-            # collect_set because DISTINCT aggs are banned inside windows
-            denom = F.size(F.collect_set(col).over(w_all))
+            # collect_set because DISTINCT aggs are banned inside windows,
+            # array_distinct because collect_set keeps every NaN (and
+            # -0.0 beside 0.0) where the rank counts one value
+            denom = F.size(F.array_distinct(F.collect_set(col).over(w_all)))
         else:
             denom = F.count(col).over(w_all)
         r = r / denom

@@ -70,46 +70,72 @@ def _guard_row(ctx, name):
 
 # -- rank family ------------------------------------------------------------
 
+def _whole(w):
+    """The ordered spec ``w`` with a whole-partition frame: an aggregate
+    over it shares ``w``'s Window node (same partition and order keys)."""
+    return w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+
+
+def _percent_rank(w, x):
+    if x is None:
+        return F.percent_rank().over(w)
+    # Spark's PercentRank, (rank - 1) / (n - 1) and 0.0 for one row, with
+    # n counting only the non-NULL rows of the group
+    n = F.count(x).over(_whole(w))
+    return F.when(n > 1, (F.rank().over(w) - 1).cast("double")
+                  / (n - 1).cast("double")).otherwise(F.lit(0.0))
+
+
+def _cume_dist(w, x):
+    if x is None:
+        return F.cume_dist().over(w)
+    # Spark's CumeDist over the non-NULL rows: the RANGE frame up to the
+    # current row's last peer counts the values <= it (NULLs sort last)
+    upto = F.count(x).over(w.rangeBetween(Window.unboundedPreceding,
+                                          Window.currentRow))
+    return upto.cast("double") / F.count(x).over(_whole(w)).cast("double")
+
+
 def _register_rank(name, builder, null_unranked=True):
+    """``builder(w, x)`` → the rank over the ordered spec ``w``; ``x`` is
+    the operand when NULL rows are left out of the ranking, else None.
+
+    pandas leaves NaN unranked and excludes it from rank denominators
+    (percent_rank/cume_dist).  The reference routes NULLs into their own
+    window partition for that (siuba/sql/dply/vector.py:53-78); here the
+    ranks keep the group partition, so every rank in one mutate over the
+    same order shares ONE Window (one Exchange + Sort): the order puts
+    NULLs last, so they cannot move a non-NULL rank, NULL rows are masked
+    with ``when(isNotNull)``, and the two ratio ranks count their
+    denominators with ``count(x)``, which skips NULLs."""
     @register_fn(name)
     def impl(ctx, args, kwargs, _builder=builder, _nu=null_unranked, _name=name):
         _guard_row(ctx, _name)
         arg = args[0]
         if isinstance(arg, MetaArg):
-            w = ctx.w_ordered()
-            return _builder(kwargs).over(w), SCALAR
+            return _builder(ctx.w_ordered(), None), SCALAR
         order_col, plain = _rank_order_col(arg, ctx)
         na_option = kwargs.get("na_option", "keep")
         na_option = getattr(na_option, "value", na_option)
         if _nu and na_option == "keep":
-            # pandas leaves NaN unranked AND excludes it from rank
-            # denominators (percent_rank/cume_dist); the reference routes
-            # NULLs into their own window partition for the same effect
-            # (siuba/sql/dply/vector.py:53-78)
-            ctx.used_window = True
-            w = Window.partitionBy(
-                *[F.col(g) for g in ctx.group_by], plain.isNull()
-            ).orderBy(order_col)
-            return F.when(plain.isNotNull(), _builder(kwargs).over(w)), SCALAR
+            w = ctx.w_ordered([order_col])
+            return F.when(plain.isNotNull(), _builder(w, plain)), SCALAR
         if _nu and na_option in ("top", "bottom"):
             # pandas na_option="top"/"bottom": NULLs rank smallest/largest
-            # (reference: siuba/dply/vector.py min_rank na_option arg)
-            ctx.used_window = True
-            # order_col keeps its asc/desc; a leading boolean key moves the
-            # NULL block to the front ("top") or back ("bottom")
+            # (reference: siuba/dply/vector.py min_rank na_option arg);
+            # order_col keeps its asc/desc, and a leading boolean key moves
+            # the NULL block to the front ("top") or back ("bottom")
             sort = plain.isNull() if na_option == "top" else plain.isNotNull()
-            w = Window.partitionBy(*[F.col(g) for g in ctx.group_by]) \
-                .orderBy(sort.desc(), order_col)
-            return _builder(kwargs).over(w), SCALAR
-        w = ctx.w_ordered([order_col])
-        return _builder(kwargs).over(w), SCALAR
+            return _builder(ctx.w_ordered([sort.desc(), order_col]), None), SCALAR
+        return _builder(ctx.w_ordered([order_col]), None), SCALAR
 
 
-_register_rank("row_number", lambda kw: F.row_number(), null_unranked=False)
-_register_rank("min_rank", lambda kw: F.rank())
-_register_rank("dense_rank", lambda kw: F.dense_rank())
-_register_rank("percent_rank", lambda kw: F.percent_rank())
-_register_rank("cume_dist", lambda kw: F.cume_dist())
+_register_rank("row_number", lambda w, x: F.row_number().over(w),
+               null_unranked=False)
+_register_rank("min_rank", lambda w, x: F.rank().over(w))
+_register_rank("dense_rank", lambda w, x: F.dense_rank().over(w))
+_register_rank("percent_rank", _percent_rank)
+_register_rank("cume_dist", _cume_dist)
 
 
 @register_fn("ntile")

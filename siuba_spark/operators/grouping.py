@@ -12,7 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions.lowering import AGGED, TranslationError, lower
+from ..functions.lowering import (AGGED, TranslationError,
+                                  has_object_buffer, lower)
 from ..siu.calls import (Call, FnCall, GetAttr, Lit, MetaArg, MethodCall,
                          strip_symbolic)
 from ..plans.pipe import verb
@@ -134,21 +135,34 @@ def summarize(tbl: SparkTbl, *args, _sets=None, _by=None, **kwargs):
     ``_by=`` applies dplyr-1.1 per-operation grouping (result is
     ungrouped, as always).
 
-    Plan note: kwargs that are purely distinct aggregates (nunique /
-    n_distinct) are computed in a SEPARATE aggregation joined back on the
-    group keys whenever other aggregates are present.  Mixing
-    COUNT(DISTINCT) with other aggs makes Spark either Expand every row
-    (2× data) or carry every other agg's buffer at (group × distinct-key)
-    granularity — catastrophic for percentile/median sort buffers at
-    scale; measured 1.7–3.5× faster split at sf0.1, and the gap widens
-    with data size.  Both join sides are post-aggregation (tiny), so AQE
-    broadcasts one."""
+    Plan note: a summarize is ONE ``groupBy().agg()`` — one scan, one
+    exchange — mixed distinct aggregates included (Spark rewrites them
+    inside it with an Expand).  The one exception: when a non-distinct
+    aggregate has an object buffer (``OBJECT_BUFFER_AGGS``: median,
+    quantile, mode, approx_quantile, collect_*), the Expand would carry
+    that sort buffer or array at (group x distinct-key) granularity —
+    measured 1.7-3.5x slower at sf0.1, widening with data size — so the
+    kwargs that are purely distinct aggregates (nunique / n_distinct) are
+    computed in a SEPARATE aggregation joined back on the group keys.
+    Both join sides are post-aggregation (tiny), so AQE broadcasts one."""
     from .core import _merge_across, _temp_by, callable_to_expr
     tbl = _temp_by(tbl, _by, "summarize")
     kwargs = _merge_across(tbl, args, kwargs)
     kwargs = {k: callable_to_expr(v) for k, v in kwargs.items()}
     if not kwargs:
         raise TranslationError("summarize() requires at least one aggregate")
+
+    aggs = {}
+    for name, expr in kwargs.items():
+        node = strip_symbolic(expr)
+        col, kind = lower(node, tbl.agg_ctx())
+        if kind != AGGED and not isinstance(node, Lit) and isinstance(node, Call):
+            raise TranslationError(
+                f"summarize argument '{name}' must aggregate to one value "
+                "per group (reference raises the same way, "
+                "siuba/sql/verbs/summarize.py:96-106)"
+            )
+        aggs[name] = col
 
     distinct_names = []
     if _sets is None and len(kwargs) > 1:
@@ -157,23 +171,9 @@ def summarize(tbl: SparkTbl, *args, _sets=None, _by=None, **kwargs):
             if called & _DISTINCT_AGGS and not (
                     (called - _DISTINCT_AGGS) & _PLAIN_AGG_NAMES):
                 distinct_names.append(name)
-    if len(distinct_names) == len(kwargs):
-        distinct_names = []  # all-distinct: single pass is already optimal
-
-    def build(items):
-        aggs = []
-        for name, expr in items:
-            node = strip_symbolic(expr)
-            ctx = tbl.agg_ctx()
-            col, kind = lower(node, ctx)
-            if kind != AGGED and not isinstance(node, Lit) and isinstance(node, Call):
-                raise TranslationError(
-                    f"summarize argument '{name}' must aggregate to one value "
-                    "per group (reference raises the same way, "
-                    "siuba/sql/verbs/summarize.py:96-106)"
-                )
-            aggs.append(col.alias(name))
-        return aggs
+    if not any(has_object_buffer(c) for k, c in aggs.items()
+               if k not in distinct_names):
+        distinct_names = []  # no object buffer to keep out of the Expand
 
     keys = [F.col(g) for g in tbl.group_by]
     if _sets == "cube":
@@ -203,13 +203,14 @@ def summarize(tbl: SparkTbl, *args, _sets=None, _by=None, **kwargs):
     # order (ADVICE r6 item 4; mirrors mutate's clear-on-reassignment)
     factors = {k: v for k, v in tbl.factors.items() if k not in kwargs}
     if not distinct_names:
-        return SparkTbl(grouped.agg(*build(kwargs.items())),
+        return SparkTbl(grouped.agg(*[c.alias(k) for k, c in aggs.items()]),
                         factors=factors)
 
-    main_items = [(k, v) for k, v in kwargs.items() if k not in distinct_names]
-    dist_items = [(k, v) for k, v in kwargs.items() if k in distinct_names]
-    main = tbl.df.groupBy(*keys).agg(*build(main_items))
-    dist = tbl.df.groupBy(*keys).agg(*build(dist_items))
+    def agg(names):
+        return tbl.df.groupBy(*keys).agg(*[aggs[k].alias(k) for k in names])
+
+    main = agg([k for k in kwargs if k not in distinct_names])
+    dist = agg(distinct_names)
     if tbl.group_by:
         joined = join_back(main, dist, tbl.group_by, how="inner")
     else:

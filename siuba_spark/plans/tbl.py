@@ -185,21 +185,74 @@ def _normalize_ntz(df):
     return df.withColumns({c: F.col(c).cast("timestamp") for c in ntz})
 
 
-# path → StructType: reading a parquet path without a schema launches a
-# footer-inference job EVERY time; tables are immutable for a session's
-# lifetime (testdata, warehouse dirs), so infer once and replay the schema —
-# repeated tbl() calls on the same path are then fully lazy (zero jobs)
+# (applicationId, path) → (modification time, StructType): reading a
+# parquet path without a schema launches a footer-inference job EVERY
+# time, so infer once and replay the schema — repeated tbl() calls on an
+# unchanged path are then fully lazy (zero jobs).  An entry is replayed
+# only while the path's modification time still matches, so a rewrite by
+# any writer (write_parquet, write_shards, a raw df.write) infers afresh;
+# the application id keeps a new session from reading a stopped one's
+# entries, where id(sparkContext) can be reused.
 _PARQUET_SCHEMA_CACHE: dict = {}
 
 
+def _modification_time(s, p):
+    """``p``'s modification time from one Hadoop ``getFileStatus``, or
+    None when there is none to trust (missing path, glob, or a store that
+    reports 0 for directories)."""
+    from py4j.java_gateway import JavaClass
+    from py4j.protocol import Py4JJavaError
+    sc = s.sparkContext
+    try:
+        # JavaClass by name: no package-walk reflection calls (~1 ms)
+        path = JavaClass("org.apache.hadoop.fs.Path",
+                         sc._gateway._gateway_client)(p)
+        fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
+        return fs.getFileStatus(path).getModificationTime() or None
+    except Py4JJavaError:
+        return None
+
+
 def _read_parquet_cached(s, p):
-    key = (id(s.sparkContext), p)
-    schema = _PARQUET_SCHEMA_CACHE.get(key)
-    if schema is not None:
-        return s.read.schema(schema).parquet(p)
+    key = (s.sparkContext.applicationId, p)
+    mtime = _modification_time(s, p)
+    hit = _PARQUET_SCHEMA_CACHE.get(key)
+    if mtime is not None and hit is not None and hit[0] == mtime:
+        return s.read.schema(hit[1]).parquet(p)
     df = s.read.parquet(p)
-    _PARQUET_SCHEMA_CACHE[key] = df.schema
+    if mtime is not None:
+        _PARQUET_SCHEMA_CACHE[key] = (mtime, df.schema)
     return df
+
+
+def local_table(spark, rows, schema):
+    """A driver-side table (``rows`` of tuples, ``schema`` a StructType or
+    DDL string) as a DataFrame shipped to the JVM as Arrow batches — the
+    one place the package calls ``createDataFrame``.
+
+    ``spark.createDataFrame(list)`` pickles the rows, so every job that
+    reads the table starts a Python worker to unpickle them (0.2 s of wall
+    time for a few ms of work); an Arrow table is read by the JVM alone.
+    Values round-trip exactly as the list path converts them: timestamps
+    travel as their internal microseconds (naive datetimes in the process
+    time zone, whatever the session time zone), everything else through
+    its Arrow type."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    rows = list(rows)
+    arrays = []
+    for i, f in enumerate(schema.fields):
+        vals = [r[i] for r in rows]
+        if isinstance(f.dataType, T.TimestampType):
+            vals = [None if v is None else f.dataType.toInternal(v)
+                    for v in vals]
+        arrays.append(pa.array(vals, to_arrow_type(f.dataType)))
+    return spark.createDataFrame(
+        pa.Table.from_arrays(arrays, names=schema.names), schema)
 
 
 _READERS = {
@@ -325,9 +378,6 @@ def write_parquet(tbl: SparkTbl, path: str, mode: str = "overwrite",
                   table_name: str | None = None):
     """Parquet sink with optional hive-style partitioning or bucketing
     (bucketing enables shuffle-free co-located joins at scale)."""
-    # a rewrite can change the file's schema — drop any cached inference
-    sc_id = id(tbl.df.sparkSession.sparkContext)
-    _PARQUET_SCHEMA_CACHE.pop((sc_id, path), None)
     w = tbl.ordered_df().write.mode(mode)
     if partition_by:
         w = w.partitionBy(*partition_by)

@@ -499,3 +499,119 @@ def test_mutate_agg_methods_agree(spark, rows):
     assert len(win) == len(rows)
     assert run("join") == win
     assert run("broadcast") == win
+
+
+_RANK_X = st.one_of(st.none(), st.just(float("nan")),
+                    st.integers(-3, 3).map(float))      # narrow: many ties
+_HOT_RANK = [("h", float(i % 5)) for i in range(40)] + [
+    ("h", None), ("h", float("nan")), ("a", 2.0), (None, 1.0)]
+
+
+@settings(max_examples=12, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(rows=st.lists(st.tuples(st.sampled_from(["a", "b", None]), _RANK_X),
+                     max_size=14))
+@example(rows=[])                                   # empty frame
+@example(rows=[("a", 1.0)])                         # single row
+@example(rows=[(None, float("nan")), (None, None)])  # NULL key, NaN, NULL
+@example(rows=[("a", 2.0)] * 4 + [("a", None)])     # one tie, one NULL
+@example(rows=_HOT_RANK)                            # hot key
+def test_rank_family_matches_pandas(spark, rows):
+    """The rank functions and pandas ``.rank()`` (all methods but the
+    order-dependent "first") equal pandas per group.  NULL is unranked
+    and left out of every denominator; Spark orders NaN above every
+    number with NaN == NaN, so the pandas side reads NaN as +inf."""
+    from siuba_spark import cume_dist, dense_rank, min_rank, percent_rank
+
+    data = [(i, g, x) for i, (g, x) in enumerate(rows)]
+    t = group_by(SparkTbl(spark.createDataFrame(
+        data, "i long, g string, x double")), _.g)
+    cols = dict(
+        mr=min_rank(_.x), dr=dense_rank(_.x), pr=percent_rank(_.x),
+        cd=cume_dist(_.x), mrd=min_rank(-_.x), prd=percent_rank(-_.x),
+        cdd=cume_dist(-_.x),
+        ra=_.x.rank(), rmin=_.x.rank(method="min"),
+        rmax=_.x.rank(method="max"), rd=_.x.rank(method="dense"),
+        rad=_.x.rank(ascending=False), rmaxd=_.x.rank(method="max",
+                                                     ascending=False),
+        rpa=_.x.rank(pct=True), rpmax=_.x.rank(method="max", pct=True),
+        rpd=_.x.rank(method="dense", pct=True))
+    got = (mutate(t, **cols).df.select("i", *cols).toPandas())
+
+    x = pd.Series([float("inf") if v is not None and v != v else v
+                   for _g, v in rows], dtype="float64")
+    pdf = pd.DataFrame({"i": range(len(rows)), "x": x,
+                        "g": pd.Series([g for g, _v in rows], dtype=object)})
+    grp = pdf.groupby("g", dropna=False)["x"]
+
+    def rk(**kw):
+        return grp.rank(**kw) if len(pdf) else pd.Series([], dtype="float64")
+
+    n = grp.transform("count") if len(pdf) else pd.Series([], dtype="float64")
+
+    def pct_rank(r):
+        return ((r - 1) / (n - 1)).where(n > 1, 0.0).where(x.notna())
+
+    want = pd.DataFrame({
+        "i": pdf["i"],
+        "mr": rk(method="min"), "dr": rk(method="dense"),
+        "pr": pct_rank(rk(method="min")),
+        "cd": rk(method="max") / n,
+        "mrd": rk(method="min", ascending=False),
+        "prd": pct_rank(rk(method="min", ascending=False)),
+        "cdd": rk(method="max", ascending=False) / n,
+        "ra": rk(), "rmin": rk(method="min"), "rmax": rk(method="max"),
+        "rd": rk(method="dense"), "rad": rk(ascending=False),
+        "rmaxd": rk(method="max", ascending=False),
+        "rpa": rk(pct=True), "rpmax": rk(method="max", pct=True),
+        "rpd": rk(method="dense", pct=True),
+    })
+    _eq(got, want, ["i"])
+
+
+@settings(max_examples=12, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(rows=st.lists(
+    st.tuples(st.sampled_from(["a", "b", None]),
+              st.one_of(st.none(), st.integers(-20, 20).map(float)),
+              st.one_of(st.none(), st.integers(0, 3))),
+    max_size=14),
+    median=st.booleans(), grouped=st.booleans())
+@example(rows=[], median=False, grouped=True)
+@example(rows=[], median=True, grouped=False)
+@example(rows=[(None, None, None)], median=True, grouped=True)
+@example(rows=_HOT, median=False, grouped=True)
+def test_mixed_distinct_summarize_matches_pandas(spark, rows, median,
+                                                 grouped):
+    """Mixed distinct/plain summarize equals pandas on NULL keys and NULL
+    values, both as one aggregate and (with a median, whose sort buffer
+    keeps the distinct half apart) as the split + join-back."""
+    from siuba_spark import n, n_distinct
+
+    data = [(i, g, x, k) for i, (g, x, k) in enumerate(rows)]
+    t = SparkTbl(spark.createDataFrame(data, "i long, g string, x double, k long"))
+    aggs = dict(nd=n_distinct(_.k), nu=_.x.nunique(), mx=_.x.max(),
+                s=_.x.sum(), c=_.x.count(), rows=n(_))
+    if median:
+        aggs["md"] = _.x.median()
+    got = summarize(group_by(t, _.g) if grouped else t, **aggs).df.toPandas()
+
+    pdf = pd.DataFrame(data, columns=["i", "g", "x", "k"]).astype(
+        {"g": object, "x": "float64", "k": "float64"})
+
+    def one(d):
+        out = {"nd": d["k"].nunique(), "nu": d["x"].nunique(),
+               "mx": d["x"].max(), "s": d["x"].sum(min_count=1),
+               "c": d["x"].count(), "rows": len(d)}
+        if median:
+            out["md"] = d["x"].median()
+        return out
+
+    if grouped:
+        want = pd.DataFrame(
+            [{"g": g, **one(d)} for g, d in pdf.groupby("g", dropna=False)],
+            columns=["g", *aggs])
+        _eq(got, want, ["g"])
+    else:
+        want = pd.DataFrame([one(pdf)], columns=list(aggs))
+        _eq(got, want, list(aggs)[:1])

@@ -147,6 +147,49 @@ def test_mixed_distinct_agg_splits_no_expand(spark):
             assert "l_partkey" not in keys_part, line
 
 
+def _scans(plan):
+    return plan.count("FileScan parquet")
+
+
+def test_mixed_distinct_summarize_is_one_aggregate(spark):
+    """summarize mixing n_distinct with max/sum (no object-buffer
+    aggregate) is ONE aggregate — Spark plans the distinct part inside
+    it — over a single scan per source, with no join-back."""
+    from siuba_spark import n_distinct
+    li = tbl(spark, f"{SF}/lineitem.parquet")
+    one = (li >> group_by(_.l_orderkey)
+           >> summarize(n_supp=n_distinct(_.l_suppkey),
+                        mx=_.l_suppkey.max(), s=_.l_quantity.sum()))
+    plan = _plan(one.df)
+    assert _scans(plan) == 1, plan
+    assert "Join" not in plan, plan
+    joined = (li >> inner_join(tbl(spark, f"{SF}/orders.parquet"),
+                               on={"l_orderkey": "o_orderkey"})
+              >> group_by(_.l_orderkey)
+              >> summarize(n_supp=n_distinct(_.l_suppkey),
+                           mx=_.l_suppkey.max()))
+    plan = _plan(joined.df)
+    assert _scans(plan) == 2, plan
+    assert plan.count("Join ") == 1, plan
+
+
+def test_rank_family_shares_one_window(spark):
+    """min_rank, dense_rank, percent_rank, cume_dist and pandas .rank()
+    over one order add exactly one Exchange (and one Window)."""
+    from siuba_spark import cume_dist, dense_rank, min_rank, percent_rank
+    t = (tbl(spark, f"{SF}/orders.parquet")
+         >> group_by(_.o_orderpriority)
+         >> mutate(mr=min_rank(_.o_totalprice),
+                   dr=dense_rank(_.o_totalprice),
+                   pr=percent_rank(_.o_totalprice),
+                   cd=cume_dist(_.o_totalprice),
+                   ra=_.o_totalprice.rank(),
+                   rx=_.o_totalprice.rank(method="max", pct=True)))
+    plan = _plan(t.df)
+    assert plan.count("Exchange") == 1, plan
+    assert plan.count("Window [") == 1, plan
+
+
 def _jobs_during(spark, fn):
     """Run fn under a dedicated job group; return how many Spark jobs it
     launched (eager-probe accounting)."""
